@@ -6,7 +6,7 @@ import graft.conf.{GraftSettings, Layer}
 import graft.lake.{FsUtils, LakePath, TableRef}
 import graft.streaming.IncrementalRunner
 import graft.tables.GraftTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -84,9 +84,7 @@ object CdcPipelines {
 
     // distinct schema pairs to the driver — one decode job per pair, so
     // each `from_avro` sees exactly one literal schema (`cdc.py:151-176`)
-    val pairs = withIds.select("keySchemaId", "valueSchemaId").distinct()
-      .orderBy(asc_nulls_last("keySchemaId"), asc_nulls_last("valueSchemaId"))
-      .collect()
+    val pairs = distinctPairs[Int](withIds, "keySchemaId", "valueSchemaId")
 
     pairs.foreach { row =>
       val keyId = if (row.isNullAt(0)) None else Some(row.getInt(0))
@@ -157,9 +155,7 @@ object CdcPipelines {
     // JSON analogue of the avro path's per-(keySchemaId, valueSchemaId)
     // slices (`cdc.py:151-176`): schema evolution mid-batch decodes each
     // record against ITS OWN schema, and the staged schema merge unions
-    val pairs = unwrapped.select("__kschema", "__vschema").distinct()
-      .orderBy(asc_nulls_last("__kschema"), asc_nulls_last("__vschema"))
-      .collect()
+    val pairs = distinctPairs[String](unwrapped, "__kschema", "__vschema")
 
     pairs.foreach { row =>
       val kEmbedded = Option(row.getString(0))
@@ -271,6 +267,14 @@ object CdcPipelines {
     q.awaitTermination()
   }
 
+  /** A frame's distinct `(a, b)` pairs, sorted on the driver with nulls
+    * last. An `orderBy` before the collect would add a range-partition
+    * sampling job to sort a handful of rows. */
+  private def distinctPairs[A: Ordering](df: DataFrame, a: String, b: String): Seq[Row] = {
+    def key(r: Row, i: Int): (Boolean, Option[A]) = (r.isNullAt(i), Option(r.getAs[A](i)))
+    df.select(a, b).distinct().collect().toSeq.sortBy(r => (key(r, 0), key(r, 1)))
+  }
+
   // --------------------------------------------------- staged -> curated
 
   /** Apply one staged batch to the curated table (`cdc.py:127-217`):
@@ -278,13 +282,7 @@ object CdcPipelines {
     * or MERGE-semantics upsert (after-images upserted, before-images of
     * deletes removed). */
   private[cdc] def applyCdcBatch(batch: DataFrame, curated: GraftTable,
-      curatedBuckets: Int = 0)(implicit s: GraftSettings): Unit = {
-    if (batch.isEmpty) return
-    applyCdcBatchImpl(batch, curated, curatedBuckets)
-  }
-
-  private def applyCdcBatchImpl(batch: DataFrame, curated: GraftTable,
-      curatedBuckets: Int)(implicit s: GraftSettings): Unit =
+      curatedBuckets: Int = 0)(implicit s: GraftSettings): Unit =
       graft.ext.Parallelism.scoped {
     // latest event per primary key; offset desc tie-break makes the result
     // deterministic where the reference relied on timestamp alone
@@ -296,9 +294,8 @@ object CdcPipelines {
       graft.ext.Dedup.latestPerKey(
         batch, Seq("key"), Seq(col("timestamp").desc, col("offset").desc)))
 
-    val pairs = deduped.select("keySchemaId", "valueSchemaId").distinct()
-      .orderBy(asc_nulls_last("keySchemaId"), asc_nulls_last("valueSchemaId"))
-      .collect()
+    // an empty batch yields no pair, so nothing below runs for it
+    val pairs = distinctPairs[Int](deduped, "keySchemaId", "valueSchemaId")
 
     pairs.foreach { row =>
       val slice = deduped.filter(

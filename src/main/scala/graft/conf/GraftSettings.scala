@@ -22,7 +22,10 @@ final case class GraftSettings(
     curatedBucket: String = "datalake-curated",
     controlBucket: String = "spark-control",
     /** Compact a table once it holds more live data files than this
-      * (reference `max_num_files_allowed`, `default.toml:16`). */
+      * (reference `max_num_files_allowed`, `default.toml:16`). A bucketed
+      * table is compacted only while some bucket holds several files: a
+      * bucketed write keeps one file per bucket, so a bucket holding a
+      * single file is never rewritten. */
     maxNumFilesAllowed: Int = 10000,
     /** Target bytes per file when compacting. */
     compactTargetBytes: Long = 128L * 1024 * 1024,
@@ -98,16 +101,6 @@ final case class GraftSettings(
       * job path keeps the driver's cold-open cost at collect-size, not
       * parse-size. */
     logCheckpointDistributedReadBytes: Long = 64L * 1024 * 1024,
-    /** Skip the back-compat JSON checkpoint twin once the live set
-      * exceeds this many files. Both twins write on the commit cadence
-      * (after the claim is released — never inside the claim window);
-      * measured at 500k entries the parquet write is ~1.8s but the JSON
-      * twin ~8.6s (CKPT_BENCH_r16), a driver-side cost with no serving
-      * value — the parquet twin IS the serving path, JSON exists only
-      * for older readers, and correctness never depends on a checkpoint
-      * (readers fall back to commit replay). 0 disables the JSON twin
-      * entirely. */
-    logCheckpointJsonTwinMaxFiles: Long = 200000L,
     /** Record row-level change data (Delta CDF-style) for DML commits —
       * upsert/delete/update write their insert/update_preimage/
       * update_postimage/delete rows under `_graft_changes/` so
@@ -209,8 +202,9 @@ object GraftSettings {
       case "log_checkpoint_interval"           => Some(s.copy(logCheckpointInterval = v.toInt))
       case "log_checkpoint_distributed_read_bytes" =>
         Some(s.copy(logCheckpointDistributedReadBytes = v.toLong))
-      case "log_checkpoint_json_twin_max_files" =>
-        Some(s.copy(logCheckpointJsonTwinMaxFiles = v.toLong))
+      // retired: checkpoints are parquet-only; accepted so old property
+      // files still load
+      case "log_checkpoint_json_twin_max_files" => Some(s)
       case "collect_file_stats"                => Some(s.copy(collectFileStats = v.toBoolean))
       case "change_data_feed"                  => Some(s.copy(changeDataFeed = v.toBoolean))
       case "append_only"                       => Some(s.copy(appendOnly = v.toBoolean))

@@ -35,7 +35,8 @@ private[graft] object Parallelism {
     * of per-task compute (~100-200ms measured on the regex-metrics chain): big enough that per-task fixed overhead
     * (launch + scheduling + result, ~ms) stays noise, small enough that a
     * modest single-file input still fans out. Overridable via
-    * `spark.graft.widen.bytesPerTask` (session or SparkConf). */
+    * `spark.graft.widen.bytesPerTask` (session or SparkConf); values
+    * below 1 clamp to 1, and a non-integer fails naming the key. */
   private val WidenBytesPerTaskKey = "spark.graft.widen.bytesPerTask"
   private val WidenBytesPerTaskDefault = 64L * 1024
 
@@ -67,7 +68,9 @@ private[graft] object Parallelism {
     if (files == 0 || files * 2 >= target) return df
     val perTask = spark.conf.getOption(WidenBytesPerTaskKey)
       .orElse(spark.sparkContext.getConf.getOption(WidenBytesPerTaskKey))
-      .map(_.toLong).getOrElse(WidenBytesPerTaskDefault)
+      .map(v => v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$WidenBytesPerTaskKey must be a whole number of bytes, got '$v'")).max(1L))
+      .getOrElse(WidenBytesPerTaskDefault)
     // relation stats: the summed on-disk file size for a parquet scan — a
     // driver-side plan inspection, no job. BigInt: the unknown-size
     // default is ~Long.MaxValue and must clamp, not overflow. `costFactor`

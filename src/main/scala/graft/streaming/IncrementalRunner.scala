@@ -68,6 +68,9 @@ object IncrementalRunner {
     * bounded batches, each individually recoverable. Batches always end on
     * a commit-version boundary (a version's files are never split), so a
     * crash replays whole versions into the idempotent batch function.
+    * Each batch is read under the log schema at its last version
+    * ([[GraftTable.readChangedFiles]]): logical column names, with NULL
+    * where an older file lacks a column.
     * `maxFilesPerBatch <= 0` disables the cap. */
   def runOnce(
       spark: SparkSession,
@@ -86,8 +89,7 @@ object IncrementalRunner {
     var chunkVersion = from
     def flush(): Unit = if (chunkFiles.nonEmpty || chunkVersion > from) {
       if (chunkFiles.nonEmpty) {
-        val batch = spark.read.option("mergeSchema", "true").parquet(chunkFiles: _*)
-        process(batch)
+        process(table.readChangedFiles(chunkFiles, chunkVersion))
         ran = true
       }
       writeCheckpoint(spark, checkpointPath, chunkVersion)

@@ -90,7 +90,7 @@ private[tables] object FooterStats {
     // that dir name. A generic k=v parent (URL-escaped value, or Hive's
     // __HIVE_DEFAULT_PARTITION__ null marker) must not become a trusted
     // min=max with nulls=0: that would let an isNull prune wrongly skip the
-    // file. The null marker maps to the all-null shape instead.
+    // file.
     val parentDir = file.getParent.getName
     val dirValue: Map[String, String] =
       parentDir.split('=') match {
@@ -100,8 +100,6 @@ private[tables] object FooterStats {
 
     val cols = statFields.flatMap { f =>
       dirValue.get(f.name) match {
-        case Some("__HIVE_DEFAULT_PARTITION__") =>
-          Some(f.name -> ColStats(None, None, rows))
         case Some(v) => Some(f.name -> ColStats(Some(v), Some(v), 0L))
         case None =>
           merged.get(f.name).flatten match {

@@ -82,14 +82,14 @@ final case class BucketSpec(keys: Seq[String], numBuckets: Int) {
 /** The fully-replayed table state as of `version` — what a reader needs to
   * serve CURRENT-state queries without touching any earlier commit file.
   * Persisted every `settings.logCheckpointInterval` commits (Delta's
-  * checkpoint mechanism) as TWIN files: `<version>.checkpoint.parquet`
-  * (one row per live file, columnar/distributed read — the serving format,
-  * see [[ParquetCheckpoint]]) beside `<version>.checkpoint.json` (the
-  * back-compat twin older readers parse). Opening a table then costs
-  * O(interval) log reads instead of O(versions), which is the difference
-  * between milliseconds and seconds of driver-side metadata latency once
-  * an ingest has committed thousands of times against an object store —
-  * and the parquet twin keeps the COLD open linear-columnar instead of
+  * checkpoint mechanism) as `<version>.checkpoint.parquet` (one row per
+  * live file, columnar/distributed read — see [[ParquetCheckpoint]]);
+  * `<version>.checkpoint.json` files that older writers laid beside them
+  * are still read. Opening a table then costs O(interval) log reads
+  * instead of O(versions), which is the difference between milliseconds
+  * and seconds of driver-side metadata latency once an ingest has
+  * committed thousands of times against an object store — and the
+  * parquet format keeps the COLD open linear-columnar instead of
   * JSON-AST-shaped at ~1M live files. `stats` is trimmed to LIVE files so
   * the checkpoint stays proportional to the table, not its history. Commit
   * files are never deleted, so history reads (time travel below the
@@ -669,9 +669,10 @@ final class GraftTable private (
       if (!fs.exists(dir)) (Seq.empty[Path], Seq.empty[Path])
       else {
         val all = fs.listStatus(dir).toSeq.map(_.getPath)
-        // checkpoint twins sort (version, json, parquet) by NAME — so for
-        // one version the parquet twin lists AFTER the json one, and the
-        // newest-first reader in [[snapshot]] prefers it
+        // checkpoints sort (version, json, parquet) by NAME — so where an
+        // older writer left a JSON checkpoint beside the parquet one, the
+        // parquet file lists AFTER it and the newest-first reader in
+        // [[snapshot]] prefers it
         (all.filter(_.getName.matches("\\d{20}\\.json")).sortBy(_.getName),
           all.filter(_.getName.matches("\\d{20}\\.checkpoint\\.(json|parquet)")).sortBy(_.getName))
       }
@@ -781,10 +782,11 @@ final class GraftTable private (
   private[tables] def snapshot(asOf: Long = Long.MaxValue,
       healFromSidecars: Boolean = false): LogCheckpoint = {
     val (commitFiles, ckptFiles) = listLog()
-    // newest version first; within a version the PARQUET twin first (the
-    // columnar/distributed read — [[ParquetCheckpoint]]) with the JSON
-    // twin as per-file fallback. Any unreadable candidate just tries the
-    // next — a checkpoint is an optimization, never a correctness input.
+    // newest version first; within a version the PARQUET checkpoint first
+    // (the columnar/distributed read — [[ParquetCheckpoint]]) with a JSON
+    // checkpoint an older writer laid as per-file fallback. Any unreadable
+    // candidate just tries the next — a checkpoint is an optimization,
+    // never a correctness input.
     val base = ckptFiles.filter(versionOf(_) <= asOf).reverseIterator.flatMap { p =>
       val cached = ckptCache
       if (cached != null && cached._1 == p.getName) Some(cached._2)
@@ -904,13 +906,15 @@ final class GraftTable private (
       if (wfeats.isEmpty) None else Some(wfeats.toSeq.sorted))
   }
 
-  /** Persist [[snapshot]] as `<version>.checkpoint.json` when the version
-    * hits the configured cadence (or unconditionally with `force = true` —
-    * [[dropFeature]] checkpoints its own commit so snapshots immediately
-    * start from a union WITHOUT the dropped feature). Best-effort: a
-    * checkpoint is an optimization, so any failure (a concurrent writer
-    * already published it, a transient fs error) is swallowed — readers
-    * fall back to the commits themselves. */
+  /** Persist [[snapshot]] as `<version>.checkpoint.parquet` when the
+    * version hits the configured cadence (or unconditionally with
+    * `force = true` — [[dropFeature]] checkpoints its own commit so
+    * snapshots immediately start from a union WITHOUT the dropped
+    * feature). Runs AFTER the commit claim was released, so it never
+    * stretches the claim window. Best-effort: a checkpoint is an
+    * optimization, so any failure (a concurrent writer already published
+    * it, a transient fs error) is swallowed — readers fall back to the
+    * commits themselves. */
   private def maybeWriteCheckpoint(version: Long, force: Boolean = false): Unit = {
     val interval = effectiveSettings.logCheckpointInterval
     if (!force && (interval <= 0 || version % interval != 0)) return
@@ -924,33 +928,14 @@ final class GraftTable private (
         stats = snap.stats.filter { case (f, _) => liveSet(f) },
         dvs = Some(snap.dvFor.filter { case (f, _) => liveSet(f) })
           .filter(_.nonEmpty))
-      // BOTH formats, parquet first (it serves; JSON is the back-compat
-      // twin older readers still parse — see [[ParquetCheckpoint]]).
-      // Its own guard: a parquet-writer failure must not also cost the
-      // JSON twin (each alone serves; both are optimizations).
-      try ParquetCheckpoint.write(fs, spark.sessionState.newHadoopConf(), logDir,
+      ParquetCheckpoint.write(fs, spark.sessionState.newHadoopConf(), logDir,
         f"$version%020d.checkpoint.parquet", trimmed)
-      catch { case scala.util.control.NonFatal(_) => () }
-      // the JSON twin is back-compat only and its write scales worst
-      // (8.6s vs parquet's 1.8s at 500k entries, CKPT_BENCH_r16) — past
-      // the cap the parquet twin alone serves. Both writes run AFTER the
-      // commit claim was released, so neither stretches the claim window.
-      // cap <= 0 disables the twin outright (the documented contract) —
-      // `size <= cap` alone would still write it for an EMPTY live set
-      val twinCap = effectiveSettings.logCheckpointJsonTwinMaxFiles
-      if (twinCap > 0 && trimmed.live.size <= twinCap) {
-        val name = f"$version%020d.checkpoint.json"
-        val tmp = new Path(logDir, s".$name.${UUID.randomUUID()}.tmp")
-        val out = fs.create(tmp, false)
-        try out.write(Serialization.write(trimmed).getBytes("UTF-8"))
-        finally out.close()
-        if (!fs.rename(tmp, new Path(logDir, name))) fs.delete(tmp, false)
-      }
-      invalidateListing() // the listing gained checkpoint files
+      invalidateListing() // the listing gained a checkpoint file
       // superseded checkpoints are pure redundancy (every commit file is
-      // retained forever) — keep the newest two VERSIONS (each a
-      // json+parquet twin pair) so a reader holding a just-taken listing
-      // never loses the file it picked, drop the rest
+      // retained forever) — keep the newest two VERSIONS (a version may
+      // still hold a JSON checkpoint an older writer laid) so a reader
+      // holding a just-taken listing never loses the file it picked,
+      // drop the rest
       val cks = listLog()._2
       val keep = cks.map(versionOf).distinct.sorted.takeRight(2).toSet
       cks.filterNot(p => keep(versionOf(p))).foreach(p => fs.delete(p, false))
@@ -1082,8 +1067,8 @@ final class GraftTable private (
 
   // ----------------------------------------------------------------- read
 
-  /** Current table content. Schema-evolving tables are read with parquet
-    * mergeSchema so the result carries the union of all written columns. */
+  /** Current table content under the log schema: the union of all
+    * written columns, with NULL where a file predates a column. */
   def read(): DataFrame = readAt(Long.MaxValue)
 
   def readAt(asOf: Long): DataFrame = {
@@ -1119,21 +1104,25 @@ final class GraftTable private (
     }
   }
 
-  /** Read table data files presenting LOGICAL column names. With column
-    * mapping inactive (every table that never ran a rename/drop) this is
-    * the classic mergeSchema read; with mapping active the files are read
-    * under the schema's PHYSICAL names and aliased back in one projection
-    * — `_metadata` stays resolvable either way (still a file-source
-    * plan). `schemaJsonOpt` is the schema AT THE VERSION being read, so
-    * time travel and CDF synthesis see their own version's mapping. */
-  private def readDataFiles(files: Seq[String],
+  /** Read table data files presenting LOGICAL column names, under the log
+    * schema recorded at the version being read — the schema
+    * [[GraftRelation]] serves. `schemaJsonOpt` is the schema AT THAT
+    * VERSION, so time travel and CDF synthesis see their own version's
+    * columns and mapping. A file that predates a column (at any nesting
+    * depth) reads it as NULL, and no footer is opened before the scan.
+    * With column mapping active the files are read under the schema's
+    * PHYSICAL names and aliased back in one projection. `_metadata` stays
+    * resolvable either way (still a file-source plan). Only pre-schema-json
+    * stores (no commit ever recorded a schema) infer the schema with a
+    * footer mergeSchema read. */
+  private[tables] def readDataFiles(files: Seq[String],
       schemaJsonOpt: Option[String]): DataFrame = {
     val stored = schemaJsonOpt.map(sj =>
       org.apache.spark.sql.types.DataType.fromJson(sj)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
     val paths = files.map(f => s"$path/$f")
-    val base = stored.filter(ColumnMapping.active) match {
-      case Some(st) =>
+    val base = stored match {
+      case Some(st) if ColumnMapping.active(st) =>
         val phys = ColumnMapping.physicalSchema(st)
         val logical = ColumnMapping.cleanMetadata(ColumnMapping.logicalSchema(st))
         // phys and logical are the same recursion over the same stored
@@ -1141,11 +1130,19 @@ final class GraftTable private (
         // renames (nested leaves included) and strips mapping metadata
         spark.read.schema(phys).parquet(paths: _*)
           .select(ColumnMapping.logicalProjection(phys, logical): _*)
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(paths: _*)
+      case Some(st) => spark.read.schema(st).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
     }
     withDirPartitionColumns(base, files, stored)
   }
+
+  /** The data files [[changesByVersion]] names for one batch of versions,
+    * read under the log schema at `version` (the batch's last version):
+    * logical column names, dir-derived partition columns, and no footer
+    * merge. The files are read as added: deletion vectors bound later
+    * are not applied. */
+  def readChangedFiles(files: Seq[String], version: Long): DataFrame =
+    readDataFiles(files.map(_.stripPrefix(s"$path/")), snapshot(version).schemaJson)
 
   private def withDirPartitionColumns(df: DataFrame, files: Seq[String],
       stored: Option[org.apache.spark.sql.types.StructType]): DataFrame =
@@ -1357,6 +1354,9 @@ final class GraftTable private (
       }.toMap
   }
 
+  // one warning per table instance when timestamp footer stats are unusable
+  @volatile private var warnedTimestampFooterStats = false
+
   /** Per-file stats of the freshly staged batch, keyed by STAGED file name
     * QUALIFIED by its `graft_bucket=N/` dir when bucketed: one write task
     * serves several bucket dirs (shuffle partitions ≠ buckets), so bare
@@ -1378,9 +1378,6 @@ final class GraftTable private (
     * omitted — data skipping degrades to a scan for them, never to a
     * wrong prune. Any footer-read failure falls back to the distributed
     * aggregation (`settings.collectFileStats` disables both). */
-  // one warning per table instance when timestamp footer stats are unusable
-  @volatile private var warnedTimestampFooterStats = false
-
   private def collectStats(stagingDir: String, df: DataFrame): Map[String, FileStats] = {
     if (!effectiveSettings.collectFileStats) return Map.empty
     val statFields = df.schema.fields.filter(f => isStatType(f.dataType)).toSeq
@@ -1397,8 +1394,9 @@ final class GraftTable private (
           .map(fsats => key(st.getPath.toUri.getPath) -> fsats)
       }.toMap
       // a session built OUTSIDE GraftSession writes INT96 timestamps
-      // (Spark's default outputTimestampType), whose footers FooterStats
-      // must skip — timestamp columns then silently lose all file-skipping
+      // (Spark's default outputTimestampType), and a LEGACY datetime
+      // rebase mode writes hybrid-calendar values; FooterStats must skip
+      // both — timestamp columns then silently lose all file-skipping
       // stats vs the distributed twin. Make the regression VISIBLE once per
       // table instead of quietly serving unprunable scans forever.
       if (!warnedTimestampFooterStats && out.nonEmpty) {
@@ -1410,9 +1408,12 @@ final class GraftTable private (
           GraftTable.log.warn(
             s"timestamp column(s) ${lost.map(_.name).mkString(", ")} yielded no " +
               s"usable footer stats in $path (likely INT96 output — Spark's " +
-              "default spark.sql.parquet.outputTimestampType); file skipping on " +
-              "these columns is disabled for this batch's files. Build the " +
-              "session through GraftSession (TIMESTAMP_MICROS) to restore it")
+              "default spark.sql.parquet.outputTimestampType — or a LEGACY " +
+              "spark.sql.parquet.datetimeRebaseModeInWrite, whose hybrid-calendar " +
+              "values cannot bound the logical ones); file skipping on these " +
+              "columns is disabled for this batch's files. Build the session " +
+              "through GraftSession (TIMESTAMP_MICROS) and keep the rebase mode " +
+              "off LEGACY to restore it")
         }
       }
       out
@@ -2114,8 +2115,11 @@ final class GraftTable private (
     val (oldFiles, current, touchedBuckets, keyAtoms) =
       bucketSpec.filter(_.keys == keyCols) match {
         case Some(sp) =>
-          val buckets = updates.select(bucketExpr(sp).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSet
+          // one stage, no shuffle: each task ships its own distinct ids
+          // (at most numBuckets of them) and the driver unions them
+          import spark.implicits._
+          val buckets = updates.select(bucketExpr(sp)).as[Int]
+            .mapPartitions(_.toSet.iterator).collect().toSet
           // files with no bucket in their name (legacy flat writes) are
           // always treated as affected
           val affected = snap0.live.filter(f => bucketOf(f).forall(buckets.contains))
@@ -2668,6 +2672,13 @@ final class GraftTable private (
     val snap = snapshot()
     val files = snap.live
     if (files.size <= maxFiles) return None
+    // a bucketed stage writes one file per bucket, so a table whose every
+    // file carries a distinct bucket id would come back file for file;
+    // files without a bucket id (legacy flat writes) still compact
+    val spec = bucketSpec
+    val ids = files.map(bucketOf)
+    if (spec.isDefined && ids.forall(_.isDefined) && ids.distinct.size == ids.size)
+      return None
     // log-recorded sizes when present (zero metadata RPCs); HEAD only for
     // files from pre-stats commits
     val totalBytes = files.map(f => snap.stats.get(f).flatMap(_.bytes)
@@ -2678,9 +2689,14 @@ final class GraftTable private (
     // the compacted output while staying live itself — every one of its
     // rows served twice, hidden from incremental consumers by
     // dataChange=false. DVs of the pinned snapshot apply like any read.
-    val df = rewrite(DeletionVectors.filterDeleted(
+    val live = DeletionVectors.filterDeleted(
       readDataFiles(files, snap.schemaJson), spark,
-      loadDvs(snap.dvFor, files), qualifiedRootUris), target)
+      loadDvs(snap.dvFor, files), qualifiedRootUris)
+    // [[stage]] routes a bucketed table's rows by bucket itself, so a
+    // rewrite shuffle before it would be thrown away
+    val df =
+      if (spec.exists(_.keys.forall(live.columns.contains))) live
+      else rewrite(live, target)
     val (add, stats) = stage(df)
     // conflict-checked commit (base = the pinned version): an interleaved
     // rewrite/DV bind on a compacted file means our output holds rows that
@@ -2784,27 +2800,6 @@ final class GraftTable private (
         .getOrElse(Seq.empty))
   }
 
-  /** The rewrite paths' shared read: ALWAYS the converted-tree-aware
-    * reader (nested adopted files carry partition values in the PATH — a
-    * pinned-schema direct read decodes them as NULL and a rewrite bakes
-    * the loss into its output, silent corruption), then pre-evolution
-    * files' missing columns normalize to the FULL current schema in one
-    * projection (the packed-output contract; per-field withColumn would
-    * stack O(fields) Project nodes — a quadratic-analysis hotspot on wide
-    * ingest tables). Mapping-active schemas skip the normalization:
-    * [[readDataFiles]] already reconstructed their logical shape. */
-  private def readForRewrite(files: Seq[String], snap: LogCheckpoint,
-      stored: org.apache.spark.sql.types.StructType): DataFrame = {
-    val base = readDataFiles(files, snap.schemaJson)
-    if (ColumnMapping.active(stored)) base
-    else {
-      val have = base.columns.toSet
-      base.select(stored.fields.map(f =>
-        if (have(f.name)) col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
-    }
-  }
-
   /** REORG-purge: rewrite ONLY the live files carrying deletion vectors,
     * so the bitmaps die and surviving rows materialize — Delta's
     * `REORG TABLE ... APPLY (PURGE)` scope. Deliberately NOT the
@@ -2825,7 +2820,7 @@ final class GraftTable private (
     val target = math.max(1,
       math.ceil(totalBytes.toDouble / effectiveSettings.compactTargetBytes).toInt)
     val df = DeletionVectors.filterDeleted(
-      readForRewrite(victims, snap, stored), spark,
+      readDataFiles(victims, snap.schemaJson), spark,
       loadDvs(dvNow, victims), qualifiedRootUris)
       .repartition(target)
     val (add, stats) = stage(df)
@@ -2873,7 +2868,7 @@ final class GraftTable private (
     // is untouched by a dataChange=false rewrite).
     val stored = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson.get)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val packed = readForRewrite(small, snap, stored)
+    val packed = readDataFiles(small, snap.schemaJson)
     val df = DeletionVectors.filterDeleted(packed, spark, loadDvs(dvNow, small), qualifiedRootUris)
       .repartition(target)
     val (add, stats) = stage(df)

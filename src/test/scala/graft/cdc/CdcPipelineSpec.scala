@@ -58,6 +58,10 @@ class CdcPipelineSpec extends SparkSpecBase {
     CdcPipelines.stagedToCurated(spark, project, database, table)
   }
 
+  // Spark jobs of one stagedToCurated run over a one-pair update batch on
+  // a bucketed curated table (see the job-budget test)
+  private val CdcJobBudget = 10
+
   private def curated: GraftTable =
     GraftTable(spark, LakePath.data(TableRef(Layer.Curated, project, database, table)))
 
@@ -110,11 +114,12 @@ class CdcPipelineSpec extends SparkSpecBase {
     // reproducing the reference's need_compact branch (cdc.py:228-243):
     // history gets the last TWO versions, numFiles patched to the
     // post-compaction count on the compaction row and the pre-compaction
-    // count on the data row
+    // count on the data row. Unbucketed: a bucketed table holding one file
+    // per bucket is never compacted
     val table2 = "products_compact"
     val topic2 = "dbserver1.inventory.products_compact"
     implicit val settings: GraftSettings =
-      GraftSettings.local(root).copy(maxNumFilesAllowed = 0)
+      GraftSettings.local(root).copy(maxNumFilesAllowed = 0, curatedBuckets = 0)
     publishEnvelopes(Seq(
       Msg(Key(1), Envelope(None, Some(Img(1, "widget", 1.5)), "c", 1000L)),
       Msg(Key(2), Envelope(None, Some(Img(2, "gadget", 2.5)), "c", 1001L))), topic2)
@@ -132,6 +137,56 @@ class CdcPipelineSpec extends SparkSpecBase {
     assert(rows.length === 2, s"compaction batch must append two rows: ${rows.toSeq}")
     assert(rows.last === ((compact.version, "compact", postCount)))
     assert(rows.head._3 === preCount, s"data row must carry the pre-compaction count: ${rows.toSeq}")
+  }
+
+  test("stagedToCurated of a one-pair batch on a bucketed table stays in its job budget") {
+    // every Spark job the CDC hop schedules is fixed cost at small batch
+    // sizes: a re-added emptiness probe, orderBy sampling job, footer
+    // mergeSchema read or futile compaction each push the count over.
+    // maxNumFilesAllowed = 0 would compact every batch, but with one file
+    // per bucket a compaction cannot lower the file count and is skipped
+    val table3 = "products_jobs"
+    val topic3 = "dbserver1.inventory.products_jobs"
+    implicit val settings: GraftSettings =
+      GraftSettings.local(root).copy(maxNumFilesAllowed = 0, curatedBuckets = 4)
+    def toStaged(): Unit = {
+      CdcPipelines.kafkaToRaw(spark, bus, topic3, project, database, table3)
+      CdcPipelines.rawToStaged(spark, project, database, table3, ConfluentAvroCodec, registry)
+    }
+    publishEnvelopes(Seq(
+      Msg(Key(1), Envelope(None, Some(Img(1, "widget", 1.5)), "c", 1000L)),
+      Msg(Key(2), Envelope(None, Some(Img(2, "gadget", 2.5)), "c", 1001L)),
+      Msg(Key(3), Envelope(None, Some(Img(3, "doodad", 3.5)), "c", 1002L))), topic3)
+    toStaged()
+    CdcPipelines.stagedToCurated(spark, project, database, table3)
+    publishEnvelopes(Seq(
+      Msg(Key(2), Envelope(Some(Img(2, "gadget", 2.5)), Some(Img(2, "gadget-v2", 2.7)), "u", 2000L)),
+      Msg(Key(3), Envelope(Some(Img(3, "doodad", 3.5)), None, "d", 2001L))), topic3)
+    toStaged()
+
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // drain first: jobs of the stages above must not land in the count
+    org.apache.spark.graftbridge.ListenerBusBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      CdcPipelines.stagedToCurated(spark, project, database, table3)
+      org.apache.spark.graftbridge.ListenerBusBridge.drain(sc)
+    } finally sc.removeSparkListener(listener)
+
+    val cur = GraftTable(spark, LakePath.data(TableRef(Layer.Curated, project, database, table3)))
+    assert(cur.read().select("id", "name").as[(Int, String)].collect().toSet
+      === Set((1, "widget"), (2, "gadget-v2")))
+    assert(!cur.commits().exists(_.action == "compact"),
+      "one file per bucket: compaction cannot lower the file count")
+    info(s"stagedToCurated ran ${jobs.get()} Spark jobs")
+    assert(jobs.get() <= CdcJobBudget,
+      s"stagedToCurated ran ${jobs.get()} Spark jobs, budget $CdcJobBudget")
   }
 
   test("reverse path: curated -> framed kafka records -> decodable") {

@@ -92,4 +92,35 @@ class ParallelismSpec extends SparkSpecBase {
     assert(persistentCount <= base,
       "releaseAll must uncache persist-mode barriers")
   }
+
+  test("widen contract: never narrows, clamps to defaultParallelism, costFactor scales") {
+    val target = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("graft-widen-").toString
+    (1 to 2000).map(i => (i, s"row $i of the widen contract")).toDF("id", "v")
+      .coalesce(1).write.parquet(s"$dir/t")
+    val df = spark.read.parquet(s"$dir/t")
+    assert(df.inputFiles.length === 1)
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    val key = "spark.graft.widen.bytesPerTask"
+    def widened(perTask: String, costFactor: Int = 1) = {
+      spark.conf.set(key, perTask)
+      try Parallelism.widen(df, costFactor) finally spark.conf.unset(key)
+    }
+    def width(perTask: String, costFactor: Int = 1): Int =
+      widened(perTask, costFactor).rdd.getNumPartitions
+    // a width at or below the file count leaves the frame untouched
+    assert(widened(bytes.toString) eq df)
+    assert(widened(Long.MaxValue.toString) eq df)
+    // the width follows bytes / perTask, scaled by costFactor, clamped
+    val half = ((bytes + 1) / 2).toString
+    assert(width(half) === math.min(2, target))
+    assert(width(half, costFactor = 2) === math.min(4, target))
+    assert(width("1") === target)
+    // below-1 values clamp to 1 instead of dividing by zero
+    assert(width("0") === target)
+    assert(width("-5") === target)
+    // a malformed value names the key
+    val e = intercept[IllegalArgumentException](widened("64k"))
+    assert(e.getMessage.contains(key))
+  }
 }

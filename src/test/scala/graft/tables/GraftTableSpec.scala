@@ -511,6 +511,64 @@ class GraftTableSpec extends SparkSpecBase {
     assert(!t.read().as[(Int, String)].collect().toMap.contains(7))
   }
 
+  test("bucketed compaction is skipped while every bucket holds one file") {
+    val dir = Files.createTempDirectory("graft-bucket-compact-").toString
+    val t = GraftTable(spark, s"file://$dir/t")(GraftSettings.default)
+    t.setBucketSpec(Seq("id"), numBuckets = 4)
+    t.append((1 to 100).map(i => (i, s"v$i")).toDF("id", "v"))
+    val live = t.liveFiles()
+    val buckets = live.map(_.takeWhile(_ != '-'))
+    assert(live.size > 1 && buckets.distinct.size === live.size,
+      s"one file per bucket expected: $live")
+    // over the file cap, but a bucketed rewrite would return file for file
+    assert(t.compactIfNeeded(maxFiles = 1).isEmpty)
+    assert(t.compactClusteredIfNeeded(Seq("id"), maxFiles = 1).isEmpty)
+    assert(t.version === 1 && !t.commits().exists(_.action == "compact"))
+    // a file without a bucket id (the batch lacks the key column) still
+    // counts as compactable
+    t.append(Seq("orphan").toDF("v"))
+    assert(t.liveFiles().exists(!_.startsWith("b")))
+    assert(t.compactIfNeeded(maxFiles = 1).isDefined)
+    assert(t.liveFiles().forall(_.startsWith("b")))
+    assert(t.read().count() === 101)
+  }
+
+  test("bucketed compaction merges a bucket's files into one per bucket") {
+    val dir = Files.createTempDirectory("graft-bucket-merge-").toString
+    val t = GraftTable(spark, s"file://$dir/t")(GraftSettings.default)
+    t.setBucketSpec(Seq("id"), numBuckets = 4)
+    t.append((1 to 100).map(i => (i, s"v$i")).toDF("id", "v"))
+    val bucketsBefore = t.liveFiles().map(_.takeWhile(_ != '-')).toSet
+    // a second append into one existing bucket: two files share its id
+    t.append(Seq((1, "again")).toDF("id", "v"))
+    val live = t.liveFiles().map(_.takeWhile(_ != '-'))
+    assert(live.distinct.size < live.size, s"expected a repeated bucket: $live")
+    val c = t.compactIfNeeded(maxFiles = 1)
+    assert(c.isDefined && !c.get.dataChange)
+    val after = t.liveFiles().map(_.takeWhile(_ != '-'))
+    assert(after.distinct.size === after.size, s"one file per bucket after compaction: $after")
+    assert(after.toSet === bucketsBefore)
+    assert(c.get.metrics("numOutputFiles").toInt === bucketsBefore.size)
+    assert(t.read().count() === 101)
+    assert(t.compactIfNeeded(maxFiles = 1).isEmpty, "a second pass has nothing to merge")
+  }
+
+  test("incremental runner delivers logical names over a renamed column") {
+    val t = tmpTable()
+    t.append(Seq((1, "a")).toDF("id", "v"))
+    t.renameColumn("v", "name")
+    t.append(Seq((2, "b")).toDF("id", "name"))
+    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    var cols = Seq.empty[String]
+    var rows = Set.empty[(Int, String)]
+    assert(IncrementalRunner.runOnce(spark, t, s"file://$ckpt/cp") { b =>
+      cols = b.columns.toSeq
+      rows = b.as[(Int, String)].collect().toSet
+    })
+    assert(cols === Seq("id", "name"))
+    assert(rows === Set((1, "a"), (2, "b")))
+  }
+
   test("concurrent upserts on DISJOINT buckets both land; overlapping ones fail loudly") {
     val dir = Files.createTempDirectory("graft-conflict-").toString
     val path = s"file://$dir/t"

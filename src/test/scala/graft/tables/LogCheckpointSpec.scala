@@ -36,9 +36,9 @@ class LogCheckpointSpec extends SparkSpecBase {
       t.append(batch); twin.append(batch)
     }
     // interval 5 -> checkpoints at v5 and v10 (both kept: newest two)
-    assert(logFiles(t.path, "\\.checkpoint\\.json").map(_.getName.take(20).toLong)
+    assert(logFiles(t.path, "\\.checkpoint\\.parquet").map(_.getName.take(20).toLong)
       === Seq(5L, 10L))
-    assert(logFiles(twin.path, "\\.checkpoint\\.json").isEmpty)
+    assert(logFiles(twin.path, "\\.checkpoint\\.parquet").isEmpty)
     assert(t.version === 12 && twin.version === 12)
     assert(t.read().as[(Int, String)].collect().toSet
       === twin.read().as[(Int, String)].collect().toSet)
@@ -110,7 +110,7 @@ class LogCheckpointSpec extends SparkSpecBase {
       .map(_.getName.take(20).toLong) === (8L to 12L))
     // the pre-horizon checkpoint (v5) can no longer serve a complete
     // replay for any allowed version — dropped with its commits
-    assert(logFiles(t.path, "\\.checkpoint\\.json")
+    assert(logFiles(t.path, "\\.checkpoint\\.parquet")
       .map(_.getName.take(20).toLong) === Seq(10L))
 
     // CURRENT reads are untouched (replay = checkpoint 10 + tail)
@@ -162,22 +162,20 @@ class LogCheckpointSpec extends SparkSpecBase {
     assert(t.read().count() === 9) // 4 - 1 deleted + 6
   }
 
-  test("parquet checkpoint twin is written beside the JSON and SERVES cold opens") {
+  test("parquet checkpoint is written on cadence and SERVES cold opens") {
     val root = tmp()
     val t = GraftTable(spark, s"$root/t")(ckptSettings)
     (1 to 12).foreach(i => t.append(Seq((i, s"v$i")).toDF("id", "v")))
     val expect = t.read().as[(Int, String)].collect().toSet
     val prunedCount = t.prunedFiles(col("id") === 7).size
-    // twins at every cadence version
+    // a parquet checkpoint at every cadence version, and nothing else
     assert(logFiles(t.path, "\\.checkpoint\\.parquet").map(_.getName.take(20).toLong)
       === Seq(5L, 10L))
-    assert(logFiles(t.path, "\\.checkpoint\\.json").map(_.getName.take(20).toLong)
-      === Seq(5L, 10L))
-    // destroy the JSON twins AND every commit at or below the newest
-    // checkpoint: a cold reader that parsed JSON or replayed the raw log
-    // could never reconstruct the state now — identical answers prove the
-    // PARQUET checkpoint is the serving path
-    logFiles(t.path, "\\.checkpoint\\.json").foreach(f => assert(f.delete()))
+    assert(logFiles(t.path, "\\.checkpoint\\.json").isEmpty)
+    // destroy every commit at or below the newest checkpoint: a cold
+    // reader that replayed the raw log could never reconstruct the state
+    // now — identical answers prove the PARQUET checkpoint is the serving
+    // path
     logFiles(t.path, "\\.json").filter(_.getName.take(20).toLong <= 10L)
       .foreach(f => assert(f.delete()))
     val cold = GraftTable(spark, s"$root/t")(ckptSettings) // fresh handle: no caches
@@ -197,7 +195,6 @@ class LogCheckpointSpec extends SparkSpecBase {
     // shape where executors decode the pages and the driver collects only
     // compact row values
     t.setProperties(Map("log_checkpoint_distributed_read_bytes" -> "0"))
-    logFiles(t.path, "\\.checkpoint\\.json").foreach(f => assert(f.delete()))
     val cold = GraftTable(spark, s"$root/t")(ckptSettings)
     assert(cold.read().as[(Int, String)].collect().toSet
       === (1 to 6).map(i => (i, s"v$i")).toSet)
@@ -210,7 +207,6 @@ class LogCheckpointSpec extends SparkSpecBase {
       GraftSettings(logCheckpointInterval = 5).copy(deletionVectors = true))
     (1 to 4).foreach(i => t.append(Seq((i, s"v$i")).toDF("id", "v")))
     t.delete(col("id") === 2) // v5 = checkpoint; DV binding must survive it
-    logFiles(t.path, "\\.checkpoint\\.json").foreach(f => assert(f.delete()))
     logFiles(t.path, "\\.json").filter(_.getName.take(20).toLong <= 5L)
       .foreach(f => assert(f.delete()))
     val cold = GraftTable(spark, s"$root/t")(GraftSettings(logCheckpointInterval = 5))
@@ -300,11 +296,48 @@ class LogCheckpointSpec extends SparkSpecBase {
     }
   }
 
+  test("no JSON checkpoint is written; a hand-laid one still serves") {
+    val root = tmp()
+    val t = GraftTable(spark, s"$root/t")(GraftSettings(logCheckpointInterval = 2))
+    (1 to 4).foreach(i => t.append(Seq((i, s"v$i")).toDF("id", "v")))
+    assert(logFiles(t.path, "\\.checkpoint\\.parquet").map(_.getName.take(20).toLong)
+      === Seq(2L, 4L))
+    assert(logFiles(t.path, "\\.checkpoint\\.json").isEmpty,
+      "checkpoints are parquet-only")
+    // the retired knob still loads from a properties file, as a no-op
+    assert(GraftSettings.withSetting(GraftSettings.default,
+      "log_checkpoint_json_twin_max_files", "0") === Some(GraftSettings.default))
+
+    // a table laid by an older writer: a JSON checkpoint at v3 and only
+    // the commits after it. Nothing else can reconstruct v1..v3, so the
+    // full answer proves the JSON checkpoint serves
+    val old = GraftTable(spark, s"$root/old")(GraftSettings(logCheckpointInterval = 0))
+    (1 to 4).foreach(i => old.append(Seq((i, s"v$i")).toDF("id", "v")))
+    val snap3 = old.snapshot(3)
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(f"${old.path}/_graft_log/${3L}%020d.checkpoint.json"),
+      org.json4s.jackson.Serialization.write(snap3).getBytes("UTF-8"))
+    logFiles(old.path, "\\.json").filter(_.getName.take(20).toLong <= 3L)
+      .foreach(f => assert(f.delete()))
+    val cold = GraftTable(spark, s"$root/old")(GraftSettings(logCheckpointInterval = 0))
+    assert(cold.version === 4)
+    assert(cold.read().as[(Int, String)].collect().toSet
+      === (1 to 4).map(i => (i, s"v$i")).toSet)
+    assert(cold.prunedFiles(col("id") === 2).size < cold.liveFiles().size,
+      "file stats must survive the JSON checkpoint")
+  }
+
+  // the retired twin cap still loads from a properties file; whatever its
+  // value, checkpoints stay parquet-only
+  private def withTwinCap(s: GraftSettings, cap: String): GraftSettings =
+    GraftSettings.withSetting(s, "log_checkpoint_json_twin_max_files", cap).get
+
   test("JSON twin is skipped past log_checkpoint_json_twin_max_files; parquet alone serves") {
     val root = tmp()
-    // cap of 1: any multi-file table writes ONLY the parquet twin
+    // cap of 1: any multi-file table writes ONLY the parquet checkpoint
     val t = GraftTable(spark, s"$root/t")(
-      GraftSettings(logCheckpointInterval = 2, logCheckpointJsonTwinMaxFiles = 1L))
+      withTwinCap(GraftSettings(logCheckpointInterval = 2), "1"))
     (1 to 4).foreach(i => t.append(Seq((i, s"v$i")).toDF("id", "v")))
     assert(logFiles(t.path, "\\.checkpoint\\.parquet").nonEmpty,
       "parquet checkpoints must still write on cadence")
@@ -323,7 +356,7 @@ class LogCheckpointSpec extends SparkSpecBase {
   test("json twin cap 0 disables the twin outright — even for an EMPTY live set") {
     val root = tmp()
     val t = GraftTable(spark, s"$root/t")(
-      GraftSettings(logCheckpointInterval = 1, logCheckpointJsonTwinMaxFiles = 0L))
+      withTwinCap(GraftSettings(logCheckpointInterval = 1), "0"))
     t.append(Seq((1, "a")).toDF("id", "v"))
     // live set goes EMPTY: `size <= 0` would sneak a twin back in here
     t.delete(col("id") === 1)
@@ -339,11 +372,10 @@ class LogCheckpointSpec extends SparkSpecBase {
     val t = GraftTable(spark, s"$root/t")(ckptSettings)
     (1 to 17).foreach(i => t.append(Seq((i, "x")).toDF("id", "v")))
     // checkpoints were written at 5, 10, 15 -> 5 pruned when 15 landed
-    // (both twins: trim keeps the newest two VERSIONS, each a pair)
-    assert(logFiles(t.path, "\\.checkpoint\\.json").map(_.getName.take(20).toLong)
-      === Seq(10L, 15L))
+    // (trim keeps the newest two VERSIONS)
     assert(logFiles(t.path, "\\.checkpoint\\.parquet").map(_.getName.take(20).toLong)
       === Seq(10L, 15L))
+    assert(logFiles(t.path, "\\.checkpoint\\.json").isEmpty)
     // and a version between the surviving checkpoints replays 10 + tail
     assert(t.readAt(12).count() === 12)
   }
