@@ -2,20 +2,23 @@ package graft.tables
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.internal.LegacyBehaviorPolicy
 import org.apache.spark.sql.types._
 
 /** [[FileStats]] derived from a parquet file's FOOTER — the metadata the
   * writer already computed — instead of a distributed re-read of the data
   * (guide §6: at 100 TB the re-read doubled every commit's write-path I/O;
-  * locally it was one extra Spark job per commit).
+  * locally it was one extra Spark job per commit). The only stats source:
+  * staged commits and `convert` both read footers.
   *
-  * Encoding contract (must match [[GraftTable.collectStatsBy]], the
-  * distributed twin that remains as the fallback):
+  * Encoding contract (what [[StatsPruning]] compares against):
   *  - numerics as their cast-to-string value — consumers
   *    ([[StatsPruning.statCmp]]) parse these back through BigDecimal, so
   *    any exact decimal/scientific rendering of the same VALUE is
@@ -27,32 +30,39 @@ import org.apache.spark.sql.types._
   *  - dates as `yyyy-MM-dd`, timestamps as epoch MICROS, booleans as
   *    true/false;
   *  - `min = max = None` means ALL-NULL (never "unknown": a column whose
-  *    footer stats are unusable — INT96 timestamps, NaN-poisoned floats,
-  *    oversized binary values the writer dropped stats for — is OMITTED
-  *    from `cols` entirely, so pruning degrades to a scan, never to a
-  *    wrong skip).
+  *    footer stats are unusable — INT96 timestamps, LEGACY-rebased
+  *    dates/timestamps, NaN-poisoned floats, oversized binary values the
+  *    writer dropped stats for — is OMITTED from `cols` entirely, so
+  *    pruning degrades to a scan, never to a wrong skip).
   *
-  * Zero-row files return None, matching the distributed twin (its
-  * `groupBy(input_file_name)` produced no row for them, so they were
-  * absent from the stats map — the DV full-file drop must not learn a
-  * different shape here). */
+  * Zero-row files return None: they hold no rows to skip, so they stay
+  * absent from the stats map (the DV full-file drop never sees a
+  * zero-row entry). */
 private[tables] object FooterStats {
 
+  /** `rebaseModeInRead` is the session's
+    * `spark.sql.parquet.datetimeRebaseModeInRead`: Spark applies it to
+    * files whose footer names no Spark version. */
   def forFile(file: Path, conf: Configuration,
-      statFields: Seq[StructField]): Option[FileStats] = {
+      statFields: Seq[StructField], rebaseModeInRead: String): Option[FileStats] = {
     import scala.jdk.CollectionConverters._
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    // options built over `conf`: the one-argument open builds a fresh
+    // Hadoop Configuration per file and re-parses its XML resources
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
     val (rows, merged, legacyRebase) =
       try {
-        // Spark stamps this marker when datetimeRebaseModeInWrite=LEGACY:
-        // the file's physical date/timestamp values are hybrid-calendar
-        // rebased, so decoding them as proleptic-Gregorian epoch days/micros
-        // would MIS-STATE the logical bounds for pre-1582 dates (pre-1900
-        // legacy timestamps) — an unsound prune. The distributed twin reads
-        // values back through Spark, which un-rebases; here we conservatively
-        // omit date/timestamp columns instead (kept file, never a wrong skip).
-        val legacyRebase = reader.getFooter.getFileMetaData
-          .getKeyValueMetaData.containsKey("org.apache.spark.legacyDateTime")
+        // a file Spark reads in LEGACY mode holds hybrid-calendar
+        // date/timestamp values (written by Spark 2.x, under
+        // datetimeRebaseModeInWrite=LEGACY, or — with no Spark version in
+        // the footer — read under a LEGACY session mode); decoding them as
+        // proleptic-Gregorian epoch days/micros would MIS-STATE the logical
+        // bounds for pre-1582 dates (pre-1900 legacy timestamps), an
+        // unsound prune. Spark's own rule decides, and date/timestamp
+        // columns are then omitted (kept file, never a wrong skip).
+        val kv = reader.getFooter.getFileMetaData.getKeyValueMetaData
+        val legacyRebase = DataSourceUtils.datetimeRebaseSpec(kv.get(_), rebaseModeInRead)
+          .mode == LegacyBehaviorPolicy.LEGACY
         val blocks = reader.getFooter.getBlocks.asScala.toSeq
         val rows = blocks.map(_.getRowCount).sum
         // merge per-column chunk statistics across row groups: same-typed
@@ -129,7 +139,7 @@ private[tables] object FooterStats {
     }
   }
 
-  /** (min, max) strings in the [[GraftTable.collectStatsBy]] encoding, or
+  /** (min, max) strings in the encoding above, or
     * None when the physical/logical combination has no sound rendering. */
   private def render(dt: DataType, pt: PrimitiveType,
       st: Statistics[_]): Option[(String, String)] = {

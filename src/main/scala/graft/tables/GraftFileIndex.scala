@@ -81,7 +81,8 @@ private[tables] object ExpressionAtoms {
   * list and the schema, handed to Spark's built-in parquet scan through a
   * custom [[FileIndex]].
   *
-  * What this buys over `GraftTable.read()` (mergeSchema over live files):
+  * `GraftTable.read()`/`readAt` serve this relation, and what it buys
+  * over a plain parquet read of the live files is:
   *
   *  - **Analysis-time data skipping**: Spark calls [[listFiles]] with the
   *    query's pushed data filters, so `readRelation().filter(p)` prunes
@@ -89,12 +90,12 @@ private[tables] object ExpressionAtoms {
   *    need to route predicates through `readWhere` by hand, and JOINED /
   *    subqueried predicates Catalyst derives (e.g. from constant
   *    propagation) prune too.
-  *  - **No footer inference**: `read()`'s mergeSchema pays one footer
-  *    read per FILE per query plan; here the schema comes from the log
-  *    (Delta semantics: the table's schema IS the log's latest, missing
-  *    columns in old files read as NULL). At 100 TB that is the
-  *    difference between a driver-side JSON parse and a million object
-  *    GETs before the first task launches.
+  *  - **No footer inference**: a mergeSchema read pays one footer read
+  *    per FILE per query plan; here the schema comes from the log (Delta
+  *    semantics: the table's schema IS the log's latest, missing columns
+  *    in old files read as NULL). At 100 TB that is the difference
+  *    between a driver-side JSON parse and a million object GETs before
+  *    the first task launches.
   *  - **Honest `sizeInBytes`**: live-file bytes feed the optimizer's
   *    broadcast decision, so a small dimension GraftTable auto-broadcasts.
   *
@@ -212,7 +213,8 @@ object GraftRelation {
     * Delta-style `versionAsOf` reader option through `asOf`. */
   private[tables] def relation(table: GraftTable,
       asOf: Long = Long.MaxValue): HadoopFsRelation = {
-    val ss = table.spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // the index pins the snapshot FIRST: its log read refuses a Spark
+    // Connect client session with the remedy named, before any cast below
     val index = new GraftFileIndex(table, asOf)
     // partition-converted trees (live names under k=v/ dirs) derive the
     // partition columns from file PATHS; the graft format patches them
@@ -264,14 +266,17 @@ object GraftRelation {
       dataSchema = relationSchema,
       bucketSpec = None,
       fileFormat = format,
-      options = Map.empty)(ss)
+      options = Map.empty)(classic(table))
   }
+
+  private def classic(table: GraftTable) =
+    table.spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 
   /** Build the [[GraftFileIndex]]-backed DataFrame for `table` — see the
     * class doc for what this buys over `read()`. The frame serves the
     * snapshot current at the call (re-call for a fresh one). */
   def dataFrame(table: GraftTable, asOf: Long = Long.MaxValue): DataFrame = {
-    val ss = table.spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    ss.baseRelationToDataFrame(relation(table, asOf))
+    val rel = relation(table, asOf)
+    classic(table).baseRelationToDataFrame(rel)
   }
 }

@@ -232,8 +232,9 @@ object GraftRestoreCommand {
 
 /** `CONVERT TO GRAFT 'path' [NO STATISTICS]` — adopt an existing parquet
   * directory in place ([[GraftTable.convert]]; Delta's CONVERT TO DELTA:
-  * one stats scan, zero rewrites). Flat dirs and hive-partitioned `k=v`
-  * trees both adopt; partition values become per-file skipping atoms. */
+  * footer stats, no data scan, zero rewrites). Flat dirs and
+  * hive-partitioned `k=v` trees both adopt; partition values become
+  * per-file skipping atoms. */
 final case class GraftConvertCommand(target: Target,
     withStats: Boolean) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(

@@ -399,26 +399,16 @@ private[tables] final class GraftStreamSource(
         case (Some(GraftOffset(v0, _)), GraftOffset(v1, _)) =>
           (tailFiles(v0, v1), None)
       }
-    val paths = files.map(f => s"${table.path}/$f")
     val spark = table.spark
     val batch =
-      if (paths.isEmpty)
+      if (files.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else {
-        // column mapping: read under the pinned schema's PHYSICAL names,
-        // cast back to logical in one projection — the positional struct
-        // cast also renames NESTED leaves, same as readDataFiles (a plain
-        // schema read when no mapping exists)
-        val raw0 =
-          if (ColumnMapping.active(storedSchema)) {
-            val phys = ColumnMapping.physicalSchema(storedSchema)
-            spark.read.schema(phys).parquet(paths: _*)
-              .select(ColumnMapping.logicalProjection(phys, schema): _*)
-          } else spark.read.schema(schema).parquet(paths: _*)
-        // partition-converted trees carry partition values in file PATHS
-        val raw = GraftTable.withDirPartitionColumns(raw0, files,
-          Some(storedSchema))
+        // the batch reader under the PINNED schema: physical-name read
+        // when mapping is active, dir-derived partition columns for
+        // partition-converted trees
+        val raw = table.readDataFiles(files, storedSchema.json)
         dvV.map(v => DeletionVectors.filterDeleted(
           raw, spark, table.loadDvs(snapshotDvsAt(v), files),
           table.qualifiedRootUris))

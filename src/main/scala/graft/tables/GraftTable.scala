@@ -805,6 +805,10 @@ final class GraftTable private (
         // table must refuse here, not fall back to an older checkpoint
         GraftProtocol.requireReadable(parsed.featureSet, path,
           s"checkpoint v${parsed.version}")
+        // every commit records its schema, so live files without one can
+        // only come from a hand-laid checkpoint: unreadable, like any other
+        require(parsed.live.isEmpty || parsed.schemaJson.isDefined,
+          s"checkpoint v${parsed.version} has live files but no schema")
         ckptCache = (p.getName, parsed) // checkpoint files are write-once too
         Some(parsed)
       } catch {
@@ -1071,58 +1075,30 @@ final class GraftTable private (
     * written columns, with NULL where a file predates a column. */
   def read(): DataFrame = readAt(Long.MaxValue)
 
-  def readAt(asOf: Long): DataFrame = {
-    val snap = snapshot(asOf)
-    val files = snap.live
-    if (files.isEmpty) {
-      // empty table: produce an empty frame with the last known schema
-      snap.schemaJson match {
-        case Some(sj) =>
-          val schema = ColumnMapping.cleanMetadata(ColumnMapping.logicalSchema(
-            org.apache.spark.sql.types.DataType.fromJson(sj)
-              .asInstanceOf[org.apache.spark.sql.types.StructType]))
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        case None =>
-          throw new IllegalStateException(s"table does not exist: $path")
-      }
-    } else if (snap.schemaJson.isDefined) {
-      // log-schema native relation (the readWhere/format("graft") path):
-      // the file list AND the schema come from the snapshot, so a read
-      // costs zero distributed work before the scan — the legacy
-      // mergeSchema path below paid one parallel-listing job plus one
-      // footer-merge job PER READ (at 100 TB: a million object GETs
-      // before the first task; locally: two ~0.2 s jobs per index/CDC
-      // read). DV filtering, column mapping and dir-derived partition
-      // columns are applied in-scan by [[GraftRelation]]; analysis-time
-      // stats/bucket file pruning on later filters comes free.
-      GraftRelation.dataFrame(this, asOf)
-    } else {
-      // pre-schema-json stores only (no commit ever recorded a schema):
-      // footer mergeSchema is the one source of truth left
-      val df = readDataFiles(files, snap.schemaJson)
-      DeletionVectors.filterDeleted(df, spark, loadDvs(snap.dvFor, files), qualifiedRootUris)
-    }
-  }
+  /** Table content at `asOf` through the log-schema native relation: the
+    * file list AND the schema come from the snapshot, so a read costs zero
+    * distributed work before the scan. DV filtering, column mapping and
+    * dir-derived partition columns are applied in-scan by
+    * [[GraftRelation]], which also serves an empty live set and refuses a
+    * table that does not exist. */
+  def readAt(asOf: Long): DataFrame = GraftRelation.dataFrame(this, asOf)
 
   /** Read table data files presenting LOGICAL column names, under the log
     * schema recorded at the version being read — the schema
-    * [[GraftRelation]] serves. `schemaJsonOpt` is the schema AT THAT
-    * VERSION, so time travel and CDF synthesis see their own version's
-    * columns and mapping. A file that predates a column (at any nesting
-    * depth) reads it as NULL, and no footer is opened before the scan.
-    * With column mapping active the files are read under the schema's
-    * PHYSICAL names and aliased back in one projection. `_metadata` stays
-    * resolvable either way (still a file-source plan). Only pre-schema-json
-    * stores (no commit ever recorded a schema) infer the schema with a
-    * footer mergeSchema read. */
+    * [[GraftRelation]] serves. `schemaJson` is the schema AT THAT VERSION,
+    * so time travel and CDF synthesis see their own version's columns and
+    * mapping. A file that predates a column (at any nesting depth) reads
+    * it as NULL, and no footer is opened before the scan. With column
+    * mapping active the files are read under the schema's PHYSICAL names
+    * and aliased back in one projection. `_metadata` stays resolvable
+    * either way (still a file-source plan). */
   private[tables] def readDataFiles(files: Seq[String],
-      schemaJsonOpt: Option[String]): DataFrame = {
-    val stored = schemaJsonOpt.map(sj =>
-      org.apache.spark.sql.types.DataType.fromJson(sj)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      schemaJson: String): DataFrame = {
+    val st = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
     val paths = files.map(f => s"$path/$f")
-    val base = stored match {
-      case Some(st) if ColumnMapping.active(st) =>
+    val base =
+      if (ColumnMapping.active(st)) {
         val phys = ColumnMapping.physicalSchema(st)
         val logical = ColumnMapping.cleanMetadata(ColumnMapping.logicalSchema(st))
         // phys and logical are the same recursion over the same stored
@@ -1130,11 +1106,15 @@ final class GraftTable private (
         // renames (nested leaves included) and strips mapping metadata
         spark.read.schema(phys).parquet(paths: _*)
           .select(ColumnMapping.logicalProjection(phys, logical): _*)
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
-    withDirPartitionColumns(base, files, stored)
+      } else spark.read.schema(st).parquet(paths: _*)
+    GraftTable.withDirPartitionColumns(base, files, st)
   }
+
+  /** The recorded schema of `snap`. [[snapshot]] never serves live files
+    * without one, so only a table that does not exist yet lacks it. */
+  private def schemaOf(snap: LogCheckpoint): String =
+    snap.schemaJson.getOrElse(
+      throw new IllegalStateException(s"table does not exist: $path"))
 
   /** The data files [[changesByVersion]] names for one batch of versions,
     * read under the log schema at `version` (the batch's last version):
@@ -1142,11 +1122,7 @@ final class GraftTable private (
     * merge. The files are read as added: deletion vectors bound later
     * are not applied. */
   def readChangedFiles(files: Seq[String], version: Long): DataFrame =
-    readDataFiles(files.map(_.stripPrefix(s"$path/")), snapshot(version).schemaJson)
-
-  private def withDirPartitionColumns(df: DataFrame, files: Seq[String],
-      stored: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    GraftTable.withDirPartitionColumns(df, files, stored)
+    readDataFiles(files.map(_.stripPrefix(s"$path/")), schemaOf(snapshot(version)))
 
   /** Driver-side load of the DV bitmaps bound to `files` (only entries
     * for scanned files load — O(scanned DVs), never O(table)). Used by
@@ -1173,10 +1149,10 @@ final class GraftTable private (
     * positional point-read behind DV-delta change synthesis (restore
     * resurrections). Positions broadcast (they are bitmap-sized). */
   private def rowsAt(file: String, positions: Array[Long],
-      schemaJsonOpt: Option[String]): DataFrame = {
+      schemaJson: String): DataFrame = {
     import spark.implicits._
     val posDf = positions.toSeq.toDF("__p")
-    readDataFiles(Seq(file), schemaJsonOpt)
+    readDataFiles(Seq(file), schemaJson)
       .withColumn("__i", col("_metadata.row_index"))
       .join(broadcast(posDf), col("__i") === col("__p"), "left_semi")
       .drop("__i")
@@ -1187,8 +1163,8 @@ final class GraftTable private (
     * the result prunes files by stats/bucket automatically (no manual
     * `readWhere` routing), no per-file footer inference, and live-bytes
     * `sizeInBytes` so small tables auto-broadcast. Serves the snapshot at
-    * `asOf` (default: current at this call) — the time-travel twin of
-    * [[readAt]] with the pruned-scan machinery. */
+    * `asOf` (default: current at this call) — the relation [[readAt]]
+    * serves, with a defaulted version. */
   def readRelation(asOf: Long = Long.MaxValue): DataFrame =
     GraftRelation.dataFrame(this, asOf)
 
@@ -1319,111 +1295,81 @@ final class GraftTable private (
     case _                                          => false
   }
 
-  /** One distributed stats aggregation over `data`'s files: min/max/nulls
-    * per stat column + row count per file, keyed by `keyOf` applied to the
-    * raw `input_file_name` string. Timestamps are stored as epoch micros —
-    * decimal strings don't order lexicographically, micros compare
-    * numerically. The single core behind [[collectStats]] (staged files)
-    * and [[collectStatsRelative]] (convert's adopted tree) — a change to
-    * the stats conventions lands in both at once. */
-  private def collectStatsBy(data: DataFrame,
-      statFields: Seq[org.apache.spark.sql.types.StructField],
-      keyOf: String => String): Map[String, FileStats] = {
-    val aggs = statFields.flatMap { f =>
-      val c = col(f.name)
-      val (mn, mx) = f.dataType match {
-        case org.apache.spark.sql.types.TimestampType =>
-          (unix_micros(min(c)), unix_micros(max(c)))
-        case _ => (min(c), max(c))
-      }
-      Seq(mn.cast("string").as(s"__mn_${f.name}"),
-        mx.cast("string").as(s"__mx_${f.name}"),
-        count(when(c.isNull, 1)).as(s"__nl_${f.name}"))
-    }
-    data.groupBy(input_file_name().as("__file"))
-      .agg(count(lit(1)).as("__rows"), aggs: _*)
-      .collect()
-      .map { r =>
-        val cols = statFields.map { f =>
-          f.name -> ColStats(
-            Option(r.getAs[String](s"__mn_${f.name}")),
-            Option(r.getAs[String](s"__mx_${f.name}")),
-            r.getAs[Long](s"__nl_${f.name}"))
-        }.toMap
-        keyOf(r.getString(0)) -> FileStats(r.getAs[Long]("__rows"), cols)
-      }.toMap
-  }
-
   // one warning per table instance when timestamp footer stats are unusable
   @volatile private var warnedTimestampFooterStats = false
 
-  /** Per-file stats of the freshly staged batch, keyed by STAGED file name
-    * QUALIFIED by its `graft_bucket=N/` dir when bucketed: one write task
-    * serves several bucket dirs (shuffle partitions ≠ buckets), so bare
-    * leaf names REPEAT across bucket dirs — a basename key would collapse
-    * different files' stats into one entry (unsound data skipping, and a
-    * wrong `rows` count could mis-fire the DV full-file drop).
-    *
-    * Stats come from the PARQUET FOOTERS the staging write just produced —
-    * a driver-side O(files) metadata read, not a distributed re-scan of
-    * the batch (the pre-r19 shape: one full read + shuffle of every staged
-    * byte per commit, purely to recompute aggregates the writer already
-    * stored). Footer min/max/null-count/row-count are exactly the values
-    * the old aggregation computed; numeric stat strings are compared
-    * VALUE-wise by [[StatsPruning.statCmp]] (BigDecimal parse), so only
-    * StringType needs byte-faithful encoding — and parquet binary stats
-    * order by unsigned UTF-8 bytes, the same order Spark's min()/max()
-    * collected in. Columns whose footer carries no usable stats (INT96
-    * timestamps, NaN-poisoned floats, oversized binary) are simply
-    * omitted — data skipping degrades to a scan for them, never to a
-    * wrong prune. Any footer-read failure falls back to the distributed
-    * aggregation (`settings.collectFileStats` disables both). */
+  /** Per-file stats of `files` from their PARQUET FOOTERS — a driver-side
+    * O(files) metadata read, never a distributed scan — keyed by `keyOf`.
+    * Footer min/max/null-count/row-count are the writer's own aggregates;
+    * numeric stat strings are compared VALUE-wise by
+    * [[StatsPruning.statCmp]] (BigDecimal parse), so only StringType needs
+    * byte-faithful encoding, and parquet binary stats order by unsigned
+    * UTF-8 bytes. Timestamps are stored as epoch micros. Columns whose
+    * footer carries no usable stats (INT96 timestamps, LEGACY-rebased
+    * dates/timestamps, NaN-poisoned floats, oversized binary) are omitted,
+    * and a footer that cannot be read is logged and records no stats at
+    * all: either way the file is kept by every predicate, so data skipping
+    * degrades to a scan, never to a wrong prune. */
+  private def footerStats(files: Seq[org.apache.hadoop.fs.FileStatus],
+      statFields: Seq[org.apache.spark.sql.types.StructField],
+      keyOf: org.apache.hadoop.fs.FileStatus => String): Map[String, FileStats] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rebaseModeInRead = spark.sessionState.conf
+      .getConf(org.apache.spark.sql.internal.SQLConf.PARQUET_REBASE_MODE_IN_READ).toString
+    val out = files.flatMap { st =>
+      try FooterStats.forFile(st.getPath, conf, statFields, rebaseModeInRead).map(keyOf(st) -> _)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          GraftTable.log.warn(
+            s"footer stats failed for ${st.getPath} (${e.getMessage}); the " +
+              "file records no stats, so data skipping never skips it")
+          None
+      }
+    }.toMap
+    // a session built OUTSIDE GraftSession writes INT96 timestamps
+    // (Spark's default outputTimestampType), and a LEGACY datetime rebase
+    // mode writes hybrid-calendar values; FooterStats must skip both, so
+    // timestamp columns silently lose all file-skipping stats. Make the
+    // regression VISIBLE once per table instead of quietly serving
+    // unprunable scans forever.
+    if (!warnedTimestampFooterStats && out.nonEmpty) {
+      val lost = statFields.filter(f =>
+        f.dataType == org.apache.spark.sql.types.TimestampType &&
+          out.values.forall(fs => !fs.cols.contains(f.name)))
+      if (lost.nonEmpty) {
+        warnedTimestampFooterStats = true
+        GraftTable.log.warn(
+          s"timestamp column(s) ${lost.map(_.name).mkString(", ")} yielded no " +
+            s"usable footer stats in $path (likely INT96 output — Spark's " +
+            "default spark.sql.parquet.outputTimestampType — or hybrid-calendar " +
+            "values from a Spark 2.x writer or a LEGACY " +
+            "spark.sql.parquet.datetimeRebaseModeInWrite, which cannot bound " +
+            "the logical ones); file skipping on these " +
+            "columns is disabled for these files. Build the session " +
+            "through GraftSession (TIMESTAMP_MICROS) and keep the rebase mode " +
+            "off LEGACY to restore it")
+      }
+    }
+    out
+  }
+
+  /** Per-file footer stats of the freshly staged batch, keyed by STAGED
+    * file name QUALIFIED by its `graft_bucket=N/` dir when bucketed: one
+    * write task serves several bucket dirs (shuffle partitions ≠ buckets),
+    * so bare leaf names REPEAT across bucket dirs — a basename key would
+    * collapse different files' stats into one entry (unsound data
+    * skipping, and a wrong `rows` count could mis-fire the DV full-file
+    * drop). `settings.collectFileStats` disables stats. */
   private def collectStats(stagingDir: String, df: DataFrame): Map[String, FileStats] = {
     if (!effectiveSettings.collectFileStats) return Map.empty
     val statFields = df.schema.fields.filter(f => isStatType(f.dataType)).toSeq
-    def key(full: String): String = {
-      val segs = full.split('/')
+    footerStats(FsUtils.dataFiles(spark, stagingDir), statFields, { st =>
+      val segs = st.getPath.toUri.getPath.split('/')
       val leaf = segs.last
       if (segs.length >= 2 && segs(segs.length - 2).startsWith("graft_bucket="))
         s"${segs(segs.length - 2)}/$leaf"
       else leaf
-    }
-    try {
-      val out = FsUtils.dataFiles(spark, stagingDir).flatMap { st =>
-        FooterStats.forFile(st.getPath, spark.sparkContext.hadoopConfiguration, statFields)
-          .map(fsats => key(st.getPath.toUri.getPath) -> fsats)
-      }.toMap
-      // a session built OUTSIDE GraftSession writes INT96 timestamps
-      // (Spark's default outputTimestampType), and a LEGACY datetime
-      // rebase mode writes hybrid-calendar values; FooterStats must skip
-      // both — timestamp columns then silently lose all file-skipping
-      // stats vs the distributed twin. Make the regression VISIBLE once per
-      // table instead of quietly serving unprunable scans forever.
-      if (!warnedTimestampFooterStats && out.nonEmpty) {
-        val lost = statFields.filter(f =>
-          f.dataType == org.apache.spark.sql.types.TimestampType &&
-            out.values.forall(fs => !fs.cols.contains(f.name)))
-        if (lost.nonEmpty) {
-          warnedTimestampFooterStats = true
-          GraftTable.log.warn(
-            s"timestamp column(s) ${lost.map(_.name).mkString(", ")} yielded no " +
-              s"usable footer stats in $path (likely INT96 output — Spark's " +
-              "default spark.sql.parquet.outputTimestampType — or a LEGACY " +
-              "spark.sql.parquet.datetimeRebaseModeInWrite, whose hybrid-calendar " +
-              "values cannot bound the logical ones); file skipping on these " +
-              "columns is disabled for this batch's files. Build the session " +
-              "through GraftSession (TIMESTAMP_MICROS) and keep the rebase mode " +
-              "off LEGACY to restore it")
-        }
-      }
-      out
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        GraftTable.log.warn(
-          s"footer stats failed for $stagingDir (${e.getMessage}); " +
-            "falling back to the distributed stats aggregation")
-        collectStatsBy(spark.read.parquet(stagingDir), statFields, key)
-    }
+    })
   }
 
   /** Pre-staging protocol probe (Delta checks protocol at transaction
@@ -1764,13 +1710,13 @@ final class GraftTable private (
         if (names.isEmpty) None
         else Some(spark.read.option("mergeSchema", "true")
           .parquet(names.map(n => s"$path/$n"): _*))
-      // schemaJsonOpt BY-NAME: the pre-state snapshot behind the removes'
+      // schemaJson BY-NAME: the pre-state snapshot behind the removes'
       // binding is only computed when a commit actually removed files
       def readFiles(names: Seq[String], dvOf: String => Option[String],
-          schemaJsonOpt: => Option[String]): Option[DataFrame] =
+          schemaJson: => String): Option[DataFrame] =
         if (names.isEmpty) None
         else {
-          val df = readDataFiles(names, schemaJsonOpt)
+          val df = readDataFiles(names, schemaJson)
           val dvMap = names.flatMap(f => dvOf(f).map(f -> _)).toMap
           Some(DeletionVectors.filterDeleted(df, spark, loadDvs(dvMap, names), qualifiedRootUris))
         }
@@ -1801,9 +1747,9 @@ final class GraftTable private (
             // die twice).
             val moved =
               readFiles(c.add, f => cDvs.get(f).filter(_ != DeletionVectors.Cleared),
-                Some(c.schemaJson))
+                c.schemaJson)
                 .map(tagged(_, "insert")).toSeq ++
-                readFiles(c.remove, preDvs.get, preSnap.schemaJson)
+                readFiles(c.remove, preDvs.get, schemaOf(preSnap))
                   .map(tagged(_, "delete")).toSeq
             // re-binds on files that stay live (restore only): the bitmap
             // DELTA is the change — resurrected positions are inserts,
@@ -1821,9 +1767,9 @@ final class GraftTable private (
               val killed = after.filterNot(beforeSet)
               Seq(
                 Some(resurrected).filter(_.nonEmpty)
-                  .map(ps => tagged(rowsAt(f, ps, Some(c.schemaJson)), "insert")),
+                  .map(ps => tagged(rowsAt(f, ps, c.schemaJson), "insert")),
                 Some(killed).filter(_.nonEmpty)
-                  .map(ps => tagged(rowsAt(f, ps, Some(c.schemaJson)), "delete"))).flatten
+                  .map(ps => tagged(rowsAt(f, ps, c.schemaJson), "delete"))).flatten
             }
             moved ++ rebindChanges
         }
@@ -2110,7 +2056,7 @@ final class GraftTable private (
     def readOf(files: Seq[String]): Option[DataFrame] =
       if (files.isEmpty) None
       else Some(DeletionVectors.filterDeleted(
-        readDataFiles(files, snap0.schemaJson),
+        readDataFiles(files, schemaOf(snap0)),
         spark, loadDvs(snap0.dvFor, files), qualifiedRootUris))
     val (oldFiles, current, touchedBuckets, keyAtoms) =
       bucketSpec.filter(_.keys == keyCols) match {
@@ -2264,8 +2210,9 @@ final class GraftTable private (
   /** Adopt the parquet files ALREADY in `path` as the table's first
     * commit — Delta's `CONVERT TO DELTA`, the in-place migration path.
     * At 100 TB this is the difference between a metadata-only adoption
-    * (one stats-collection scan, zero rewrites, files stay byte-identical
-    * where they are) and rewriting the corpus through `append`.
+    * (one listing plus one footer read per file, zero rewrites, files stay
+    * byte-identical where they are) and rewriting the corpus through
+    * `append`.
     *
     * Layouts: flat directories adopt as before; a HIVE-PARTITIONED tree
     * (every nesting level `k=v` — real lakes are full of them) adopts
@@ -2280,11 +2227,16 @@ final class GraftTable private (
     * layouts coexist (path value only fills where the file lacks the
     * column). Non-`k=v` nesting is refused loudly.
     *
-    * Stats (min/max/nulls/rows + byte sizes) are collected in the same
-    * one-scan shape as a write, so data skipping works immediately; pass
+    * Stats (min/max/nulls/rows + byte sizes) come from each listed
+    * file's parquet footer, the same source a write uses, with no data
+    * scan, so data skipping works immediately. A foreign writer's INT96
+    * timestamp columns and LEGACY-rebased date/timestamp columns (files
+    * Spark reads through the hybrid calendar: Spark 2.x output, a LEGACY
+    * write mode, or no Spark version under a LEGACY read mode) get no
+    * stats: predicates on them scan instead of skip, never wrongly. Pass
     * `collectStats=false` to adopt metadata-only in O(listing) —
     * partition-value atoms are still recorded (they come from the
-    * listing, not a scan). */
+    * listing, not a footer). */
   def convert(collectStats: Boolean = true): Commit = {
     require(version == 0, s"$path is already a graft table (at v$version)")
     val root = fs.makeQualified(new Path(path))
@@ -2345,8 +2297,13 @@ final class GraftTable private (
             Some(k -> ColStats(Some(v), Some(v), 0L))
         }
       }.toMap
+    // data-column stats from the listed files' footers, keyed by relative
+    // path (partition dirs can repeat base names); partition columns are
+    // left out — their per-file constants come from the dir names
     val dataStats =
-      if (collectStats) collectStatsRelative(root, df, partKeys.toSet)
+      if (collectStats && effectiveSettings.collectFileStats)
+        footerStats(listed, df.schema.fields.filter(f =>
+          isStatType(f.dataType) && !partKeys.contains(f.name)).toSeq, rel)
       else Map.empty[String, FileStats]
     val stats = rels.flatMap { r =>
       val ps = partStats(r)
@@ -2370,21 +2327,6 @@ final class GraftTable private (
       Map("numConvertedFiles" -> listed.size.toString,
         "numConvertedBytes" -> sizes.values.sum.toString,
         "partitionColumns" -> partKeys.mkString(",")), stats)
-  }
-
-  /** [[collectStats]] keyed by path RELATIVE to `root` instead of base
-    * name — partition dirs can repeat base file names, so a converted
-    * tree must key stats (and commits) by the relative path. Partition
-    * columns are excluded: their per-file constants come from the dir
-    * names ([[convert]]), not a scan. */
-  private def collectStatsRelative(root: Path, df: DataFrame,
-      excludeCols: Set[String]): Map[String, FileStats] = {
-    if (!effectiveSettings.collectFileStats) return Map.empty
-    val statFields = df.schema.fields
-      .filter(f => isStatType(f.dataType) && !excludeCols(f.name)).toSeq
-    val rootPrefix = root.toUri.getPath.stripSuffix("/") + "/"
-    collectStatsBy(df, statFields, full =>
-      new Path(new java.net.URI(full)).toUri.getPath.stripPrefix(rootPrefix))
   }
 
   /** DELETE WHERE: remove matching rows by rewriting ONLY the files that
@@ -2414,7 +2356,7 @@ final class GraftTable private (
         case Left(_)       => () // over the cap: fall through to the rewrite
       }
     val srcRaw = DeletionVectors.filterDeleted(
-      readDataFiles(affected, snap.schemaJson),
+      readDataFiles(affected, schemaOf(snap)),
       spark, loadDvs(snap.dvFor, affected), qualifiedRootUris)
     // CDF consumes the source twice (remaining + deleted rows)
     val src = if (effectiveSettings.changeDataFeed) graft.ext.Parallelism.materialize(srcRaw)(effectiveSettings) else srcRaw
@@ -2462,7 +2404,7 @@ final class GraftTable private (
     // bitmap. Fall back to the pruned rewrite (sound; it also flattens).
     if (affected.exists(_.contains("/"))) return Left(())
     val cond = coalesce(predicate, lit(false))
-    val raw = readDataFiles(affected, snap.schemaJson)
+    val raw = readDataFiles(affected, schemaOf(snap))
     assignments.foreach(_.keys.foreach(name =>
       require(raw.columns.contains(name), s"unknown column '$name' in update")))
     val src = DeletionVectors.filterDeleted(raw, spark, loadDvs(snap.dvFor, affected), qualifiedRootUris)
@@ -2615,7 +2557,7 @@ final class GraftTable private (
       }
     val cond = coalesce(predicate, lit(false))
     val srcRaw = DeletionVectors.filterDeleted(
-      readDataFiles(affected, snap.schemaJson),
+      readDataFiles(affected, schemaOf(snap)),
       spark, loadDvs(snap.dvFor, affected), qualifiedRootUris)
     // CDF consumes the source three times (rewrite + pre/postimage)
     val src = if (effectiveSettings.changeDataFeed) graft.ext.Parallelism.materialize(srcRaw)(effectiveSettings) else srcRaw
@@ -2690,7 +2632,7 @@ final class GraftTable private (
     // rows served twice, hidden from incremental consumers by
     // dataChange=false. DVs of the pinned snapshot apply like any read.
     val live = DeletionVectors.filterDeleted(
-      readDataFiles(files, snap.schemaJson), spark,
+      readDataFiles(files, schemaOf(snap)), spark,
       loadDvs(snap.dvFor, files), qualifiedRootUris)
     // [[stage]] routes a bucketed table's rows by bucket itself, so a
     // rewrite shuffle before it would be thrown away
@@ -2820,7 +2762,7 @@ final class GraftTable private (
     val target = math.max(1,
       math.ceil(totalBytes.toDouble / effectiveSettings.compactTargetBytes).toInt)
     val df = DeletionVectors.filterDeleted(
-      readDataFiles(victims, snap.schemaJson), spark,
+      readDataFiles(victims, schemaOf(snap)), spark,
       loadDvs(dvNow, victims), qualifiedRootUris)
       .repartition(target)
     val (add, stats) = stage(df)
@@ -2868,7 +2810,7 @@ final class GraftTable private (
     // is untouched by a dataChange=false rewrite).
     val stored = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson.get)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val packed = readDataFiles(small, snap.schemaJson)
+    val packed = readDataFiles(small, schemaOf(snap))
     val df = DeletionVectors.filterDeleted(packed, spark, loadDvs(dvNow, small), qualifiedRootUris)
       .repartition(target)
     val (add, stats) = stage(df)
@@ -3195,15 +3137,6 @@ object GraftTable {
   private[graft] def hiveUnescapeOrRaw(raw: String): String =
     try hiveUnescape(raw) catch { case _: IllegalArgumentException => raw }
 
-  /** Synthesize hive-dir partition columns for files adopted by a
-    * partitioned-tree [[GraftTable.convert]]: a file living under `k=v/`
-    * carries `k`'s value in its PATH, not its pages, so the column is
-    * derived from `_metadata.file_path` per row — and COALESCED with the
-    * data value, because later DML rewrites stage flat files that carry
-    * the column physically (the two layouts coexist in one table).
-    * Flat-only file sets (every table that never converted a tree)
-    * return the frame untouched — zero plan change. Shared by the batch
-    * read path ([[GraftTable.readDataFiles]]) and the streaming source. */
   /** Ordered hive partition KEY names from one nested live name
     * (`k1=v1/k2=v2/file`): THE key-extraction convention every read-side
     * consumer of an adopted tree shares — the native relation and the
@@ -3244,13 +3177,23 @@ object GraftTable {
       })
   }
 
+  /** Synthesize hive-dir partition columns for files adopted by a
+    * partitioned-tree [[GraftTable.convert]]: a file living under `k=v/`
+    * carries `k`'s value in its PATH, not its pages, so the column is
+    * derived from `_metadata.file_path` per row — and COALESCED with the
+    * data value, because later DML rewrites stage flat files that carry
+    * the column physically (the two layouts coexist in one table).
+    * Flat-only file sets (every table that never converted a tree)
+    * return the frame untouched — zero plan change. The batch read path
+    * ([[GraftTable.readDataFiles]]) applies it, which the streaming source
+    * reuses. */
   private[tables] def withDirPartitionColumns(df: DataFrame, files: Seq[String],
-      stored: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+      stored: org.apache.spark.sql.types.StructType): DataFrame = {
     val nested = files.find(_.contains("/")).toSeq
     if (nested.isEmpty) return df
     val keys = dirKeyNames(nested.head)
     keys.zipWithIndex.foldLeft(df) { case (acc, (k, i)) =>
-      val dt = stored.flatMap(_.fields.find(_.name == k).map(_.dataType))
+      val dt = stored.fields.find(_.name == k).map(_.dataType)
         .getOrElse(org.apache.spark.sql.types.StringType)
       // END-anchored at the key's exact depth from the basename: key i of
       // n sits (n - i) segments before the file name, so a k=v segment in

@@ -137,7 +137,8 @@ private[tables] object ParquetCheckpoint {
   def read(spark: SparkSession, fs: FileSystem, conf: Configuration,
       p: Path, distributedReadBytes: Long): LogCheckpoint = {
     val inputFile = HadoopInputFile.fromPath(p, conf)
-    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(inputFile)
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(inputFile,
+      org.apache.parquet.HadoopReadOptions.builder(conf, p).build())
     val (version, schemaJson, numFiles, features, writerFeatures) =
       try {
         val kv = footer.getFooter.getFileMetaData.getKeyValueMetaData

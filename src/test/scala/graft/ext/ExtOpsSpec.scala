@@ -1043,6 +1043,35 @@ class ExtOpsSpec extends SparkSpecBase {
     graft.lake.FsUtils.deletePath(spark, s"file://$dir")
   }
 
+  test("AnnIndex: a purge through another instance re-opens the vector width") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ann-rewidth-").toString
+    val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
+    def open() = new AnnIndex(spark, s"$dir/idx", nTables = 8, bitsPerTable = 6,
+      portable = true)
+    val a = open()
+    val b = open()
+    // A memoizes the stored width with its own add
+    a.add(emb, "vec_id", "embedding")
+    // B empties the store: every id tombstoned, then purged
+    b.remove(emb.select("vec_id"), "vec_id")
+    b.purge()
+    assert(a.indexedCount === 0L)
+    // A adds a narrower width under fresh ids: the store moved under A,
+    // so A must probe the width again instead of rejecting the batch
+    val narrow = emb.select((col("vec_id") + 1000000L).as("vec_id"),
+      slice(col("embedding"), 1, 8).as("embedding"))
+    a.add(narrow, "vec_id", "embedding")
+    assert(a.indexedCount === emb.count())
+    val probes = narrow.filter(col("vec_id") < 1000005L)
+    val got = a.query(probes, "vec_id", "embedding", k = 3)
+      .select("probe_id", "neighbor_id", "rnk").as[(Long, Long, Int)].collect().toSet
+    val want = Similarity.annTopK(narrow, probes, "vec_id", "embedding", 3,
+        nTables = 8, bitsPerTable = 6, portable = true)
+      .select("probe_id", "neighbor_id", "rnk").as[(Long, Long, Int)].collect().toSet
+    assert(got.nonEmpty && got === want)
+    graft.lake.FsUtils.deletePath(spark, s"file://$dir")
+  }
+
   test("AnnIndex: empty probe frame returns an empty typed result") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-empty-").toString
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")

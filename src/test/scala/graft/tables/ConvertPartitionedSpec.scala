@@ -52,7 +52,7 @@ class ConvertPartitionedSpec extends SparkSpecBase {
 
   test("many-partition tree (48 slices): pruning stays O(one partition)") {
     // the 100 TB shape in miniature: a lake tree with many partition dirs
-    // must adopt in one listing + one stats scan, and a point predicate
+    // must adopt in one listing + per-file footer reads, and a point predicate
     // must reach exactly one slice's files — the whole reason partition
     // values become stats atoms
     val dir = s"${tmp()}/t"
@@ -165,6 +165,39 @@ class ConvertPartitionedSpec extends SparkSpecBase {
     assert(t.prunedFiles(col("id") === -5).size === t.liveFiles().size)
     assert(t.readWhere(col("region") === "eu").count() === (1 to 60).count(_ % 3 == 0))
   }
+
+  test("convert reads footer stats with no data scan: job budget, point predicates prune") {
+    val dir = s"${tmp()}/t"
+    writeTree(dir)
+    val t = GraftTable(spark, dir)(GraftSettings.default)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // drain first: the tree write's jobs must not land in the count
+    org.apache.spark.graftbridge.ListenerBusBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      t.convert()
+      org.apache.spark.graftbridge.ListenerBusBridge.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    // what remains is the schema inference of the adopted tree; a
+    // distributed stats aggregation over the data would add to it
+    assert(jobs.get <= ConvertJobBudget,
+      s"convert ran ${jobs.get} Spark jobs (budget $ConvertJobBudget)")
+    // data-column footer stats still prune: out of range -> no file; a
+    // point inside one partition -> the one file holding it
+    assert(t.prunedFiles(col("id") === -5).isEmpty)
+    val point = col("region") === "us" && col("d") === 1 && col("id") === 7
+    assert(t.prunedFiles(point).size === 1, t.prunedFiles(point))
+    assert(t.readWhere(point).select("id", "v").as[(Int, String)].collect().toSeq
+      === Seq((7, "v7")))
+  }
+
+  private val ConvertJobBudget = 1
 
   private def scanOf(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.execution.FileSourceScanExec =

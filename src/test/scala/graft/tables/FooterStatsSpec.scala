@@ -5,14 +5,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
 
-/** Pins the r19 optimization that replaced the per-commit distributed
-  * stats re-scan with a parquet-footer read ([[FooterStats]]): for every
-  * stat type the footer-derived values must agree with the distributed
-  * aggregation's encoding — byte-equal where consumers compare bytes
-  * (strings; [[StatsPruning]] orders them by unsigned UTF-8, the parquet
+/** Pins [[FooterStats]], the only source of per-file stats: staged
+  * commits and `convert` both read parquet footers, never the data. For
+  * every stat type the footer-derived values must follow the stats
+  * encoding — byte-equal where consumers compare bytes (strings;
+  * [[StatsPruning]] orders them by unsigned UTF-8, the parquet
   * binary-stats order), value-equal elsewhere (numeric domains parse back
   * through BigDecimal). Also pins the conservative degrades: all-null
-  * columns, NaN floats, zero-row files, and graft_bucket dir synthesis. */
+  * columns, NaN floats, zero-row files, graft_bucket dir synthesis, INT96
+  * timestamps and LEGACY-rebased dates — a column without stats keeps
+  * every file, so answers stay exact. */
 class FooterStatsSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -21,7 +23,7 @@ class FooterStatsSpec extends SparkSpecBase {
   private def footerOf(dir: String, schema: StructType): Map[String, FileStats] = {
     val conf = spark.sparkContext.hadoopConfiguration
     graft.lake.FsUtils.dataFiles(spark, dir).flatMap { st =>
-      FooterStats.forFile(st.getPath, conf, schema.fields.toSeq)
+      FooterStats.forFile(st.getPath, conf, schema.fields.toSeq, "CORRECTED")
         .map(f => st.getPath.getName -> f)
     }.toMap
   }
@@ -102,7 +104,7 @@ class FooterStatsSpec extends SparkSpecBase {
       StructField("v", StringType), StructField("graft_bucket", IntegerType)))
     val conf = spark.sparkContext.hadoopConfiguration
     val perFile = graft.lake.FsUtils.dataFiles(spark, dir).flatMap { st =>
-      FooterStats.forFile(st.getPath, conf, schema.fields.toSeq)
+      FooterStats.forFile(st.getPath, conf, schema.fields.toSeq, "CORRECTED")
         .map(f => st.getPath.getParent.getName -> f)
     }
     assert(perFile.nonEmpty)
@@ -136,4 +138,167 @@ class FooterStatsSpec extends SparkSpecBase {
     assert(scan.metrics("numFiles").value == 1L)
     assert(t.read().count() == 201L)
   }
+
+  /** The WARN messages [[GraftTable]] logs while `body` runs. */
+  private def tableWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-table-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val logger = LoggerContext.getContext(false).getLogger(classOf[GraftTable].getName)
+    logger.addAppender(app)
+    try body
+    finally { logger.removeAppender(app); app.stop() }
+    seen.asScala.toSeq
+  }
+
+  /** Runs `body` with one session conf set, restoring the previous value. */
+  private def withConf(key: String, value: String)(body: => Unit): Unit = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def statCols(t: GraftTable): Set[String] =
+    t.snapshot().stats.values.flatMap(_.cols.keys).toSet
+
+  private val LostTimestampStats = "yielded no usable footer stats"
+
+  test("INT96 timestamps: one warning per table, no ts stats, exact answers (append and convert)") {
+    val t0 = java.time.Instant.parse("2024-03-01T00:00:00Z")
+    def rows(lo: Int): Seq[(Int, java.sql.Timestamp)] =
+      (lo until lo + 20).map(i => (i, java.sql.Timestamp.from(t0.plusSeconds(3600L * i))))
+    def frame(lo: Int) = rows(lo).toDF("id", "ts").coalesce(1)
+    val all = rows(0) ++ rows(100)
+    val cut = java.sql.Timestamp.from(t0.plusSeconds(3600L * 50))
+    // with ts stats this predicate would prune the first batch's file
+    val pred = col("ts") >= lit(cut)
+    val want = all.filter(_._2.compareTo(cut) >= 0).toSet
+    def check(t: GraftTable): Unit = {
+      assert(t.liveFiles().size === 2)
+      assert(!statCols(t).contains("ts") && statCols(t).contains("id"))
+      assert(t.prunedFiles(pred).toSet === t.liveFiles().toSet,
+        "a timestamp predicate must keep every file when ts has no stats")
+      assert(t.readWhere(pred).as[(Int, java.sql.Timestamp)].collect().toSet === want)
+      assert(t.prunedFiles(col("id") === 105).size === 1)
+    }
+    withConf("spark.sql.parquet.outputTimestampType", "INT96") {
+      val t = GraftTable(spark, s"${tmp()}/t")
+      val warned = tableWarnings { t.append(frame(0)); t.append(frame(100)) }
+      assert(warned.count(_.contains(LostTimestampStats)) === 1, warned)
+      assert(!warned.exists(_.contains("footer stats failed")), warned)
+      check(t)
+
+      val tree = s"${tmp()}/tree"
+      frame(0).write.parquet(tree)
+      frame(100).write.mode("append").parquet(tree)
+      val c = GraftTable(spark, tree)
+      val convertWarned = tableWarnings(c.convert())
+      assert(convertWarned.count(_.contains(LostTimestampStats)) === 1, convertWarned)
+      check(c)
+    }
+  }
+
+  test("LEGACY-rebased dates record no date stats; an int column still prunes (append and convert)") {
+    // pre-1582 dates are where the hybrid calendar and the proleptic one
+    // disagree; the second batch is modern
+    def rows(lo: Int, year0: Int): Seq[(Int, String)] =
+      (lo until lo + 10).map(i => (i, f"${year0 + (i - lo) * 7}%04d-03-15"))
+    def frame(lo: Int, year0: Int) = rows(lo, year0).toDF("id", "ds")
+      .select(col("id"), col("ds").cast(DateType).as("d")).coalesce(1)
+    val all = rows(0, 1000) ++ rows(100, 1950)
+    val pred = col("d") < lit(java.time.LocalDate.parse("1500-01-01"))
+    val want = all.filter(r => java.time.LocalDate.parse(r._2)
+      .isBefore(java.time.LocalDate.parse("1500-01-01"))).toSet
+    def check(t: GraftTable): Unit = {
+      assert(t.liveFiles().size === 2)
+      assert(!statCols(t).contains("d") && statCols(t).contains("id"))
+      assert(t.readWhere(pred).select(col("id"), col("d").cast("string"))
+        .as[(Int, String)].collect().toSet === want)
+      assert(t.prunedFiles(col("id") === 105).size === 1)
+    }
+    withConf("spark.sql.parquet.datetimeRebaseModeInWrite", "LEGACY") {
+      val t = GraftTable(spark, s"${tmp()}/t")
+      t.append(frame(0, 1000))
+      t.append(frame(100, 1950))
+      check(t)
+
+      val tree = s"${tmp()}/tree"
+      frame(0, 1000).write.parquet(tree)
+      frame(100, 1950).write.mode("append").parquet(tree)
+      val c = GraftTable(spark, tree)
+      c.convert()
+      check(c)
+    }
+  }
+
+  /** Writes one parquet file of `(id INT, d DATE)` rows through parquet-mr,
+    * as a writer other than this Spark would: the DATE values are the
+    * given PHYSICAL epoch days, and `kv` is the footer's key-value
+    * metadata. */
+  private def writeForeign(file: String, rows: Seq[(Int, Int)], kv: Map[String, String]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import scala.jdk.CollectionConverters._
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { optional int32 id; optional int32 d (DATE); }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(file))
+      .withType(schema).withExtraMetaData(kv.asJava)
+      .withConf(spark.sparkContext.hadoopConfiguration).build()
+    try {
+      val groups = new SimpleGroupFactory(schema)
+      rows.foreach { case (id, d) => w.write(groups.newGroup().append("id", id).append("d", d)) }
+    } finally w.close()
+  }
+
+  test("a Spark 2.x tree, or a version-less one read in LEGACY mode, records no date stats on convert") {
+    // physical epoch days of pre-1582 dates: Spark reads a Spark 2.x file
+    // through the hybrid calendar, so its dates land days away from the
+    // proleptic decoding of these values
+    val old = march15Days(1000, 1063)
+    def tree(kv: Map[String, String]): String = {
+      val dir = s"${tmp()}/tree"
+      Files.createDirectories(java.nio.file.Paths.get(dir))
+      writeForeign(s"$dir/part-0.parquet", old.zipWithIndex.map { case (d, i) => (i, d) }, kv)
+      writeForeign(s"$dir/part-1.parquet",
+        (0 until 10).map(i => (100 + i, 18000 + i)), kv)
+      dir
+    }
+    // the earliest date of the old file as Spark reads it: below the raw
+    // values' min, so stats of the raw values would skip the file
+    def check(dir: String): Unit = {
+      val raw = spark.read.parquet(dir)
+      val first = raw.where(col("id") < 100).agg(min(col("d"))).head.getDate(0).toLocalDate
+      assert(first.toEpochDay < old.min, "the fixture must exercise the calendar rebase")
+      val pred = col("d") === lit(first)
+      val want = raw.where(pred).as[(Int, java.sql.Date)].collect().toSet
+      assert(want.size === 1)
+      val t = GraftTable(spark, dir)
+      t.convert()
+      assert(!statCols(t).contains("d") && statCols(t).contains("id"))
+      assert(t.readWhere(pred).as[(Int, java.sql.Date)].collect().toSet === want)
+      assert(t.prunedFiles(col("id") === 105).size === 1)
+    }
+    check(tree(Map("org.apache.spark.version" -> "2.4.8")))
+    withConf("spark.sql.parquet.datetimeRebaseModeInRead", "LEGACY") { check(tree(Map.empty)) }
+    // a version-less file under the default (CORRECTED) read mode is read
+    // as written, so its date stats stay
+    val modern = GraftTable(spark, tree(Map.empty))
+    modern.convert()
+    assert(statCols(modern).contains("d"))
+  }
+
+  /** Proleptic epoch days of March 15th, every 7 years from `from` to `to`. */
+  private def march15Days(from: Int, to: Int): Seq[Int] =
+    (from to to by 7).map(y => java.time.LocalDate.of(y, 3, 15).toEpochDay.toInt)
 }

@@ -328,6 +328,38 @@ class LogCheckpointSpec extends SparkSpecBase {
       "file stats must survive the JSON checkpoint")
   }
 
+  test("a hand-laid checkpoint with live files but no schemaJson is skipped") {
+    val root = tmp()
+    val t = GraftTable(spark, s"$root/t")(GraftSettings(logCheckpointInterval = 0))
+    t.append(Seq((1, "v1"), (2, "v2")).toDF("id", "v"))
+    t.append(Seq((3, "v3", 30L)).toDF("id", "v", "n")) // additive: n joins
+    t.renameColumn("v", "label")                       // v3: metadata-only
+    t.append(Seq((4, "v4", 40L)).toDF("id", "label", "n"))
+    val wantSchema = t.read().schema
+    val wantRows = t.read().collect().toSet
+    // a checkpoint at v3 that carries the live files but no schema
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val laid = org.json4s.jackson.Serialization.write(t.snapshot(3).copy(schemaJson = None))
+    assert(!laid.contains("schemaJson"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(f"${t.path}/_graft_log/${3L}%020d.checkpoint.json"),
+      laid.getBytes("UTF-8"))
+
+    // full log: the fold skips the checkpoint and replays every commit
+    val cold = GraftTable(spark, s"$root/t")(GraftSettings(logCheckpointInterval = 0))
+    assert(cold.read().schema === wantSchema)
+    assert(cold.read().collect().toSet === wantRows)
+    assert(cold.readAt(3).columns.toSeq === Seq("id", "label", "n"))
+
+    // trimmed log: nothing else can reconstruct v1..v3, so the read fails
+    // loudly instead of serving the schemaless checkpoint
+    logFiles(t.path, "\\.json").filter(_.getName.take(20).toLong <= 3L)
+      .filterNot(_.getName.contains("checkpoint")).foreach(f => assert(f.delete()))
+    val trimmed = GraftTable(spark, s"$root/t")(GraftSettings(logCheckpointInterval = 0))
+    val e = intercept[IllegalStateException](trimmed.read())
+    assert(e.getMessage.contains("cannot reconstruct"), e.getMessage)
+  }
+
   // the retired twin cap still loads from a properties file; whatever its
   // value, checkpoints stay parquet-only
   private def withTwinCap(s: GraftSettings, cap: String): GraftSettings =

@@ -78,12 +78,12 @@ class LogSchemaReadSpec extends SparkSpecBase {
     val toLogical = ColumnMapping.nameMap(stored).map(_.swap)
     val renamed = raw.columns.foldLeft(raw)((df, c) =>
       toLogical.get(c).fold(df)(df.withColumnRenamed(c, _)))
-    GraftTable.withDirPartitionColumns(renamed, snap.live, Some(stored))
+    GraftTable.withDirPartitionColumns(renamed, snap.live, stored)
   }
 
   private def assertSameRows(t: GraftTable, history: Any): Unit = {
     val snap = t.snapshot()
-    val got = t.readDataFiles(snap.live, snap.schemaJson)
+    val got = t.readDataFiles(snap.live, snap.schemaJson.get)
     val want = mergeSchemaRead(t)
     assert(got.columns.toSet === want.columns.toSet, s"columns differ after $history")
     assert(multiset(got) === multiset(want), s"rows differ after $history")
