@@ -349,6 +349,7 @@ object CdcPipelines {
     val staged = GraftTable(spark, LakePath.data(stagedRef))
     val curated = GraftTable(spark, LakePath.data(curatedRef))
     val checkpoint = LakePath.checkpoint(curatedRef)
+    val historyTable = GraftTable(spark, LakePath.history(curatedRef))
 
     // re-bootstrap: curated output missing -> drop checkpoint, reprocess all
     // (`cdc.py:117-119`)
@@ -365,15 +366,14 @@ object CdcPipelines {
       // carries the post-compaction file count, the data version the
       // pre-compaction count (`cdc.py:228-243`); otherwise one row with
       // the current count (`cdc.py:244-247`)
-      val historyTable = GraftTable(spark, LakePath.history(curatedRef))
       val histRows = compacted match {
         case Some(c) =>
           val before = c.metrics.getOrElse("numRemovedFiles", "0").toLong
           val after = c.metrics.getOrElse("numOutputFiles", "0").toLong
-          curated.history().limit(2)
+          curated.history(2)
             .withColumn("numFiles",
               when(col("version") === c.version, lit(after)).otherwise(lit(before)))
-        case None => curated.history().limit(1)
+        case None => curated.history(1)
       }
       historyTable.append(histRows)
       // vacuum every Nth version (`cdc.py:264-269`); <= 0 disables (the

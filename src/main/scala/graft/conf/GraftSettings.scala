@@ -182,38 +182,47 @@ object GraftSettings {
 
   /** One settings override by snake_case key — shared by the properties
     * file loader and per-table TBLPROPERTIES ([[graft.tables.GraftTable]]
-    * `effectiveSettings`). None = unrecognized key. */
-  def withSetting(s: GraftSettings, key: String, v: String): Option[GraftSettings] =
+    * `effectiveSettings`). None = unrecognized key; a malformed value for a
+    * known key fails HERE, naming the key and the value. */
+  def withSetting(s: GraftSettings, key: String, v: String): Option[GraftSettings] = {
+    def parsed[T](parse: String => T, expected: String): T =
+      try parse(v) catch { case _: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"setting '$key' expects $expected, got '$v'") }
+    def int = parsed(_.toInt, "an int")
+    def long = parsed(_.toLong, "a long")
+    def bool = parsed(_.toBoolean, "true or false")
     key match {
       case "protocol"                          => Some(s.copy(protocol = v))
       case "raw_bucket"                        => Some(s.copy(rawBucket = v))
       case "staged_bucket"                     => Some(s.copy(stagedBucket = v))
       case "curated_bucket"                    => Some(s.copy(curatedBucket = v))
       case "control_bucket"                    => Some(s.copy(controlBucket = v))
-      case "max_num_files_allowed"             => Some(s.copy(maxNumFilesAllowed = v.toInt))
-      case "compact_target_bytes"              => Some(s.copy(compactTargetBytes = v.toLong))
-      case "vacuum_every_n_versions"           => Some(s.copy(vacuumEveryNVersions = v.toInt))
-      case "vacuum_retention_hours"            => Some(s.copy(vacuumRetentionHours = v.toInt))
-      case "curated_buckets"                   => Some(s.copy(curatedBuckets = v.toInt))
-      case "upsert_broadcast_threshold_bytes"  => Some(s.copy(upsertBroadcastThresholdBytes = v.toLong))
-      case "probe_broadcast_threshold_bytes"   => Some(s.copy(probeBroadcastThresholdBytes = v.toLong))
-      case "ann_prune_max_keys"                => Some(s.copy(annPruneMaxKeys = v.toInt))
-      case "barrier_mode"                      => Some(s.copy(barrierMode = v))
-      case "log_checkpoint_interval"           => Some(s.copy(logCheckpointInterval = v.toInt))
+      case "max_num_files_allowed"             => Some(s.copy(maxNumFilesAllowed = int))
+      case "compact_target_bytes"              => Some(s.copy(compactTargetBytes = long))
+      case "vacuum_every_n_versions"           => Some(s.copy(vacuumEveryNVersions = int))
+      case "vacuum_retention_hours"            => Some(s.copy(vacuumRetentionHours = int))
+      case "curated_buckets"                   => Some(s.copy(curatedBuckets = int))
+      case "upsert_broadcast_threshold_bytes"  => Some(s.copy(upsertBroadcastThresholdBytes = long))
+      case "probe_broadcast_threshold_bytes"   => Some(s.copy(probeBroadcastThresholdBytes = long))
+      case "ann_prune_max_keys"                => Some(s.copy(annPruneMaxKeys = int))
+      case "barrier_mode" => Some(s.copy(barrierMode = parsed(
+        m => { require(m == "localCheckpoint" || m == "persist"); m }, "localCheckpoint | persist")))
+      case "log_checkpoint_interval"           => Some(s.copy(logCheckpointInterval = int))
       case "log_checkpoint_distributed_read_bytes" =>
-        Some(s.copy(logCheckpointDistributedReadBytes = v.toLong))
+        Some(s.copy(logCheckpointDistributedReadBytes = long))
       // retired: checkpoints are parquet-only; accepted so old property
       // files still load
       case "log_checkpoint_json_twin_max_files" => Some(s)
-      case "collect_file_stats"                => Some(s.copy(collectFileStats = v.toBoolean))
-      case "change_data_feed"                  => Some(s.copy(changeDataFeed = v.toBoolean))
-      case "append_only"                       => Some(s.copy(appendOnly = v.toBoolean))
-      case "deletion_vectors"                  => Some(s.copy(deletionVectors = v.toBoolean))
-      case "dv_max_deleted_rows"               => Some(s.copy(dvMaxDeletedRows = v.toLong))
+      case "collect_file_stats"                => Some(s.copy(collectFileStats = bool))
+      case "change_data_feed"                  => Some(s.copy(changeDataFeed = bool))
+      case "append_only"                       => Some(s.copy(appendOnly = bool))
+      case "deletion_vectors"                  => Some(s.copy(deletionVectors = bool))
+      case "dv_max_deleted_rows"               => Some(s.copy(dvMaxDeletedRows = long))
       case "bloom_filter_columns" =>
         Some(s.copy(bloomFilterColumns = v.split(',').map(_.trim).filter(_.nonEmpty).toSeq))
       case _ => None
     }
+  }
 }
 
 /** The three medallion layers (reference `jibaro/datalake/path.py:17-21`). */

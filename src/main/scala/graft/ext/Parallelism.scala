@@ -8,9 +8,9 @@ import org.apache.spark.sql.DataFrame
   * explode-heavy pipeline (per-shingle hashing, per-dimension projections)
   * does work proportional to the POST-explode volume: a corpus that
   * arrives as one small parquet file (one row group = one unsplittable
-  * partition) serializes the whole hot stage onto one core — measured 12x
-  * on the signature aggregates. On a real cluster inputs arrive as many
-  * files, so the repartition is a cheap no-op there (guarded below);
+  * partition) serializes the whole hot stage onto one core; `plans/r21/`
+  * shows each such sf0.1 scan gain a RoundRobin Exchange. On a cluster
+  * inputs arrive as many files, so the repartition is a no-op (guarded below);
   * locally it spreads the narrow pre-explode rows across all cores.
   *
   * CLUSTER FAULT-TOLERANCE NOTE — barriers. Operators in this package
@@ -28,15 +28,15 @@ import org.apache.spark.sql.DataFrame
 private[graft] object Parallelism {
 
   /** Bytes of (compressed, pre-explode) INPUT a widened task should own.
-    * Sized for explode-amplified per-row work: the operators behind widen
-    * fan each input byte into ~10-50 bytes of downstream work (shingle
-    * hashing, per-dimension projections, multi-regex passes — 12x was
-    * measured on the signature aggregates), so 64 KiB of input is ~1 MiB
-    * of per-task compute (~100-200ms measured on the regex-metrics chain): big enough that per-task fixed overhead
-    * (launch + scheduling + result, ~ms) stays noise, small enough that a
-    * modest single-file input still fans out. Overridable via
-    * `spark.graft.widen.bytesPerTask` (session or SparkConf); values
-    * below 1 clamp to 1, and a non-integer fails naming the key. */
+    * Sized for explode-amplified per-row work (shingle hashing,
+    * per-dimension projections, multi-regex passes), so that per-task
+    * overhead stays noise while a modest input still fans out; the
+    * per-site amplification is an estimate, not a committed measurement.
+    * Committed evidence: at 32 cores the one-file sf0.1 scans of
+    * d02/d13/d32 widen to 10 tasks (32 with `bytesPerTask=1`, `plans/r21/`),
+    * and the same-binary bench A/B in `plans/r20/` ran 184 s vs 221 s.
+    * Overridable via `spark.graft.widen.bytesPerTask` (session or
+    * SparkConf); values below 1 clamp to 1, a non-integer fails naming it. */
   private val WidenBytesPerTaskKey = "spark.graft.widen.bytesPerTask"
   private val WidenBytesPerTaskDefault = 64L * 1024
 

@@ -731,10 +731,10 @@ final class GraftTable private (
     c
   }
 
-  /** Every commit, oldest first — the full-history read used by consumers
-    * that need PER-COMMIT detail (time travel audit, CDF, vacuum, history
-    * metrics). Current-state reads go through [[snapshot]] instead, which
-    * parses only the latest checkpoint plus the commits after it. */
+  /** Every commit, oldest first — read only by [[history]] without a limit
+    * (`DESCRIBE HISTORY`), [[vacuum]] and [[detail]]. Per-batch readers
+    * parse just their versions ([[commitsInRange]], [[commitsNewestFirst]]);
+    * current-state reads go through [[snapshot]]. */
   def commits(): Seq[Commit] = listLog()._1.map(parseCommit)
 
   /** Commits in `(fromExclusive, toInclusive]`, oldest first — file names
@@ -753,18 +753,17 @@ final class GraftTable private (
   def commitsNewestFirst: Iterator[Commit] =
     listLog()._1.reverseIterator.map(parseCommit)
 
-  /** Oldest commit version still in the log (None for an empty log).
-    * Versions are dense from 1, so a value above 1 means [[vacuumLog]]
-    * trimmed the history — the horizon below which per-commit reads
-    * (time travel, CDF, streaming replay) must fail LOUDLY. */
-  private[tables] def oldestCommitVersion: Option[Long] =
-    listLog()._1.headOption.map(versionOf)
+  /** Protocol gate for readers that parse only part of the log: the current
+    * snapshot gates the newest checkpoint (whose feature union covers every
+    * version below it) and each tail commit, so this refuses exactly what a
+    * whole-log walk would, for a snapshot whose parses are cached. */
+  private def requireReadableLog(): Unit = snapshot()
 
   /** Guard for consumers that replay commits in `(fromExclusive, ...]`:
     * throws when the log no longer holds them (trimmed by [[vacuumLog]])
     * — a silent partial replay would be wrong results, not staleness. */
   private[tables] def requireLogSince(fromExclusive: Long, what: String): Unit =
-    oldestCommitVersion.foreach { oldest =>
+    listLog()._1.headOption.map(versionOf).foreach { oldest =>
       // oldest == 1 means untrimmed: versions below 1 never existed, so a
       // sub-1 start (e.g. startingVersion=0 = full history) is vacuous
       if (oldest > 1 && fromExclusive + 1 < oldest)
@@ -963,11 +962,13 @@ final class GraftTable private (
   /** The newest version committed at or before `timestampMs` — the
     * Delta `TIMESTAMP AS OF` convention, shared by the SQL time-travel
     * rule and the `timestampAsOf` reader option. */
-  def versionAt(timestampMs: Long): Long =
-    commits().filter(_.timestampMs <= timestampMs).lastOption.map(_.version)
+  def versionAt(timestampMs: Long): Long = {
+    requireReadableLog()
+    commitsNewestFirst.find(_.timestampMs <= timestampMs).map(_.version)
       .getOrElse(throw new IllegalArgumentException(
         s"no commit at or before timestamp $timestampMs in $path " +
           s"(earliest: ${commits().headOption.map(_.timestampMs).getOrElse(-1L)})"))
+  }
 
   /** Publish one commit file atomically with real conflict detection.
     *
@@ -1278,8 +1279,9 @@ final class GraftTable private (
     * batch sizes but must checkpoint on version boundaries. */
   def changesByVersion(fromExclusive: Long): Seq[(Long, Seq[String])] = {
     requireLogSince(fromExclusive, "incremental consumption")
-    commits()
-      .filter(c => c.version > fromExclusive && c.dataChange)
+    requireReadableLog()
+    commitsInRange(fromExclusive, Long.MaxValue)
+      .filter(_.dataChange)
       .map(c => c.version -> c.add.map(f => s"$path/$f"))
   }
 
@@ -1693,15 +1695,8 @@ final class GraftTable private (
     * require. */
   def readChanges(fromExclusive: Long, toInclusive: Long = Long.MaxValue): DataFrame = {
     requireLogSince(fromExclusive, "the change feed")
-    val inRange = commits()
-      .filter(c => c.version > fromExclusive && c.version <= toInclusive && c.dataChange)
-    // deletion vectors bend the synthesized (file-level) changes: rows
-    // already DV-dead before a commit are not deleted AGAIN by its file
-    // removals, and a restore's re-binds resurrect/kill rows with no file
-    // motion at all. All of it is position arithmetic on the bitmaps —
-    // paid only when the log has ever carried a DV.
-    val anyDvs = inRange.exists(_.dvs.nonEmpty) ||
-      commits().exists(c => c.version <= fromExclusive && c.dvs.nonEmpty)
+    requireReadableLog()
+    val inRange = commitsInRange(fromExclusive, toInclusive).filter(_.dataChange)
     val frames = inRange.flatMap { c =>
       // change FILES are written from logical frames (no mapping); DATA
       // files read under the COMMIT's schema, so synthesis sees the
@@ -1727,10 +1722,8 @@ final class GraftTable private (
       // overwrite shedding column mapping: the removed files' parquet
       // columns carry the OLD physical names, and a new-schema read would
       // serve the delete rows with the logical column NULL plus a phantom
-      // physical column).
+      // physical column). Its DVs keep rows already dead from dying again.
       lazy val preSnap: LogCheckpoint = snapshot(c.version - 1)
-      lazy val preDvs: Map[String, String] =
-        if (anyDvs) preSnap.dvFor else Map.empty
       val cDvs = c.dvs.getOrElse(Map.empty)
       val changed: Seq[DataFrame] = c.changes match {
         case Some(files) => readChangeFiles(files).toSeq
@@ -1749,7 +1742,7 @@ final class GraftTable private (
               readFiles(c.add, f => cDvs.get(f).filter(_ != DeletionVectors.Cleared),
                 c.schemaJson)
                 .map(tagged(_, "insert")).toSeq ++
-                readFiles(c.remove, preDvs.get, schemaOf(preSnap))
+                readFiles(c.remove, preSnap.dvFor.get(_), schemaOf(preSnap))
                   .map(tagged(_, "delete")).toSeq
             // re-binds on files that stay live (restore only): the bitmap
             // DELTA is the change — resurrected positions are inserts,
@@ -1757,7 +1750,7 @@ final class GraftTable private (
             val stayLive = cDvs.keys.toSeq
               .filterNot(c.add.contains).filterNot(c.remove.contains)
             val rebindChanges = stayLive.flatMap { f =>
-              val before = preDvs.get(f)
+              val before = preSnap.dvFor.get(f)
                 .map(dv => DeletionVectors.read(fs, path, dv)).getOrElse(Array.empty[Long])
               val after = Some(cDvs(f)).filter(_ != DeletionVectors.Cleared)
                 .map(dv => DeletionVectors.read(fs, path, dv)).getOrElse(Array.empty[Long])
@@ -2905,12 +2898,16 @@ final class GraftTable private (
         "readerFeatures", "writerFeatures")
   }
 
-  /** History as a DataFrame (reference reads `DESCRIBE HISTORY` +
-    * `numFiles`, `cdc.py:224-247`). */
-  def history(): DataFrame = {
+  /** History as a DataFrame, newest first (reference reads `DESCRIBE
+    * HISTORY` + `numFiles`, `cdc.py:224-247`). */
+  def history(): DataFrame = history(Int.MaxValue)
+
+  /** The newest `limit` history rows — parses only those commits. The
+    * snapshot behind `numFiles` is also the protocol gate for the rest. */
+  private[graft] def history(limit: Int): DataFrame = {
     import spark.implicits._
     val live = liveFiles().size.toLong
-    commits().reverse
+    commitsNewestFirst.take(limit).toList
       .map(c => (c.version, new java.sql.Timestamp(c.timestampMs), c.action,
         c.dataChange, c.add.size.toLong, c.metrics))
       .toDF("version", "timestamp", "operation", "dataChange", "numAddedFiles", "operationMetrics")
@@ -2934,21 +2931,16 @@ final class GraftTable private (
       else effectiveSettings.vacuumRetentionHours
     val cutoff = System.currentTimeMillis() - (retention * 3600 * 1000).toLong
     val live = liveFiles().toSet
+    val cs = commits()
+    val aged = cs.filter(_.timestampMs < cutoff)
     // a file is GC-able when some commit removed it, it is not live now,
     // and the REMOVING commit is older than the cutoff
-    val removable = commits()
-      .filter(_.timestampMs < cutoff)
-      .flatMap(c => c.remove)
-      .distinct
-      .filterNot(live)
+    val removable = aged.flatMap(_.remove).distinct.filterNot(live)
     // change-data files age out on the same clock: reading changes for a
     // vacuumed-out version then fails like time travel does (Delta's CDF
     // retention contract). The commit log keeps the names, so the failure
     // is a missing file, never silently empty changes.
-    val agedChanges = commits()
-      .filter(_.timestampMs < cutoff)
-      .flatMap(_.changes.getOrElse(Seq.empty))
-      .distinct
+    val agedChanges = aged.flatMap(_.changes.getOrElse(Seq.empty)).distinct
     // DV sidecars age out when SUPERSEDED (their file re-bound, cleared,
     // or removed) — clocked by the SUPERSEDING commit, exactly like
     // removed data files. A restore can re-bind an old sidecar, so the
@@ -2956,7 +2948,7 @@ final class GraftTable private (
     val liveDvs = snapshot().dvFor.values.toSet
     val bound = scala.collection.mutable.Map.empty[String, String]
     val superseded = scala.collection.mutable.Map.empty[String, Long]
-    commits().foreach { c =>
+    cs.foreach { c =>
       c.remove.foreach(f =>
         bound.remove(f).foreach(dv => superseded(dv) = c.timestampMs))
       c.dvs.getOrElse(Map.empty).foreach { case (f, dv) =>
@@ -2974,7 +2966,6 @@ final class GraftTable private (
     // by file mtime; the retention window is also what protects an
     // IN-FLIGHT writer's staged-but-uncommitted files (same contract as
     // Delta: don't vacuum with retention below your longest write).
-    val cs = commits()
     val referencedData = cs.flatMap(c => c.add ++ c.remove).toSet
     // commit names are TABLE-RELATIVE paths (a partitioned-tree convert
     // records `k=v/part-...`), so the listing must relativize the same

@@ -48,6 +48,17 @@ class LakePathSpec extends AnyFunSuite {
       GraftSettings.fromProperties(bad.toString)
     }
     assert(e.getMessage.contains("compact_trget_bytes"))
+
+    // malformed values for known keys fail at load, naming key and value
+    Seq("barrier_mode = eager", "vacuum_every_n_versions = 2.5",
+        "compact_target_bytes = huge", "collect_file_stats = yes").foreach { line =>
+      val f2 = java.nio.file.Files.createTempFile("graft-settings-bad-", ".properties")
+      java.nio.file.Files.writeString(f2, line + "\n")
+      val e2 = intercept[IllegalArgumentException](GraftSettings.fromProperties(f2.toString))
+      val Array(key, value) = line.split(" = ")
+      assert(e2.getMessage.contains(s"'$key'") && e2.getMessage.contains(s"'$value'"),
+        e2.getMessage)
+    }
   }
 
   test("unknown layer rejected") {

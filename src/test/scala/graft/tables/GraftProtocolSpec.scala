@@ -92,6 +92,18 @@ class GraftProtocolSpec extends SparkSpecBase {
     val fresh = GraftTable(spark, path)(GraftSettings.default)
     assertRefused(fresh.changesByVersion(0L))
     assertRefused(fresh.history().collect())
+    // a featureless v3 on top: readers that parse only their own versions
+    // (v3 here) must still refuse the v2 feature below them
+    writeRawCommit(path, Commit(3L, "append", dataChange = true,
+      timestampMs = System.currentTimeMillis(),
+      add = Seq.empty, remove = Seq.empty, schemaJson = schema,
+      metrics = Map.empty))
+    def handle() = GraftTable(spark, path)(GraftSettings.default)
+    assertRefused(handle().changesByVersion(2L))
+    assertRefused(handle().readChanges(2L).collect())
+    assertRefused(handle().history().collect())
+    assertRefused(handle().history(1).collect())
+    assertRefused(handle().versionAt(System.currentTimeMillis()))
     // writers gate transitively (append pins the current schema via
     // snapshot): a foreign binary cannot corrupt a future-feature table
     assertRefused(fresh.append(Seq((3, "c")).toDF("id", "v")))

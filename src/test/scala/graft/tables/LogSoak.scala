@@ -20,7 +20,11 @@ class CountingLocalFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("cfile:///")
   private def isLog(p: HPath): Boolean = p.toString.contains("_graft_log")
   override def open(f: HPath, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
-    if (isLog(f)) CountingLocalFs.logOpens.incrementAndGet()
+    if (isLog(f)) {
+      CountingLocalFs.logOpens.incrementAndGet()
+      val table = new HPath(f.toString.split("/_graft_log").head).toUri.getPath
+      CountingLocalFs.tableOpens.computeIfAbsent(table, _ => new AtomicLong).incrementAndGet()
+    }
     super.open(f, bufferSize)
   }
   override def listStatus(f: HPath): Array[org.apache.hadoop.fs.FileStatus] = {
@@ -44,7 +48,13 @@ object CountingLocalFs {
   val logOpens = new AtomicLong
   val logLists = new AtomicLong
   val logHeads = new AtomicLong
-  def reset(): Unit = { logOpens.set(0); logLists.set(0); logHeads.set(0) }
+  /** Log opens per table, keyed by the table root's path (no scheme). */
+  val tableOpens = new java.util.concurrent.ConcurrentHashMap[String, AtomicLong]
+  def reset(): Unit = {
+    logOpens.set(0); logLists.set(0); logHeads.set(0); tableOpens.clear()
+  }
+  def opensOf(tableRoot: String): Long =
+    Option(tableOpens.get(new HPath(tableRoot).toUri.getPath)).map(_.get).getOrElse(0L)
   def snap(): (Long, Long, Long) =
     (logOpens.get(), logLists.get(), logHeads.get())
 }

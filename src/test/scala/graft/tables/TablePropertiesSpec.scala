@@ -69,6 +69,12 @@ class TablePropertiesSpec extends SparkSpecBase {
     // a malformed value for a KNOWN key fails at SET time, not on a write
     intercept[Exception](
       spark.sql(s"ALTER TABLE '$p' SET TBLPROPERTIES ('compact_target_bytes' = 'huge')"))
+    // ...naming the key and the value, for enumerations and booleans too
+    Seq("barrier_mode" -> "eager", "deletion_vectors" -> "yes").foreach { case (k, v) =>
+      val e = intercept[IllegalArgumentException](t.setProperties(Map(k -> v)))
+      assert(e.getMessage.contains(s"'$k'") && e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+    assert(t.tableProperties === Map("deletion_vectors" -> "true"))
     // vanilla catalog TBLPROPERTIES still delegates
     spark.sql("DROP TABLE IF EXISTS props_plain")
     spark.sql("CREATE TABLE props_plain (id INT) USING parquet")
