@@ -84,16 +84,9 @@ object CdcPipelines {
 
     // distinct schema pairs to the driver — one decode job per pair, so
     // each `from_avro` sees exactly one literal schema (`cdc.py:151-176`)
-    val pairs = distinctPairs[Int](withIds, "keySchemaId", "valueSchemaId")
-
-    pairs.foreach { row =>
+    pairSlices[Int](withIds, "keySchemaId", "valueSchemaId").foreach { case (row, slice) =>
       val keyId = if (row.isNullAt(0)) None else Some(row.getInt(0))
       val valueId = row.getInt(1)
-      val slice = withIds.filter(
-        (keyId match {
-          case Some(id) => col("keySchemaId") === id
-          case None     => col("keySchemaId").isNull
-        }) && col("valueSchemaId") === valueId)
 
       def schemaText(id: Int): String = registry.getById(id)
         .getOrElse(throw new IllegalStateException(s"schema id $id not in registry"))
@@ -140,9 +133,8 @@ object CdcPipelines {
     // Debezium tombstones (null value) carry no payload — drop, as the
     // avro/proto path does
     val events = batch.filter(col("value").isNotNull)
-    if (events.isEmpty) return
     // consumed multiple times (schema pairs + inference + decode):
-    // materialize once
+    // materialize once; an empty batch yields no schema pair below
     val unwrapped = events.select(
       ConnectJsonCodec.unwrap(col("key")).as("__kjson"),
       ConnectJsonCodec.unwrap(col("value")).as("__vjson"),
@@ -155,20 +147,9 @@ object CdcPipelines {
     // JSON analogue of the avro path's per-(keySchemaId, valueSchemaId)
     // slices (`cdc.py:151-176`): schema evolution mid-batch decodes each
     // record against ITS OWN schema, and the staged schema merge unions
-    val pairs = distinctPairs[String](unwrapped, "__kschema", "__vschema")
-
-    pairs.foreach { row =>
+    pairSlices[String](unwrapped, "__kschema", "__vschema").foreach { case (row, slice) =>
       val kEmbedded = Option(row.getString(0))
       val vEmbedded = Option(row.getString(1))
-      val slice = unwrapped.filter(
-        (kEmbedded match {
-          case Some(s) => col("__kschema") === s
-          case None    => col("__kschema").isNull
-        }) &&
-          (vEmbedded match {
-            case Some(s) => col("__vschema") === s
-            case None    => col("__vschema").isNull
-          }))
 
       // embedded Connect schema when present (type-faithful: int32 stays
       // INT); schemas.enable=false records fall back to Spark inference.
@@ -267,12 +248,16 @@ object CdcPipelines {
     q.awaitTermination()
   }
 
-  /** A frame's distinct `(a, b)` pairs, sorted on the driver with nulls
-    * last. An `orderBy` before the collect would add a range-partition
-    * sampling job to sort a handful of rows. */
-  private def distinctPairs[A: Ordering](df: DataFrame, a: String, b: String): Seq[Row] = {
+  /** A frame's distinct `(a, b)` pairs, each with its slice of `df`
+    * (null-safe equality on both columns). The pairs are sorted on the
+    * driver with nulls last: an `orderBy` before the collect would add a
+    * range-partition sampling job to sort a handful of rows. An empty
+    * frame yields no pair. */
+  private def pairSlices[A: Ordering](df: DataFrame, a: String, b: String)
+      : Seq[(Row, DataFrame)] = {
     def key(r: Row, i: Int): (Boolean, Option[A]) = (r.isNullAt(i), Option(r.getAs[A](i)))
     df.select(a, b).distinct().collect().toSeq.sortBy(r => (key(r, 0), key(r, 1)))
+      .map(r => r -> df.filter(col(a).eqNullSafe(r.get(0)) && col(b).eqNullSafe(r.get(1))))
   }
 
   // --------------------------------------------------- staged -> curated
@@ -295,15 +280,7 @@ object CdcPipelines {
         batch, Seq("key"), Seq(col("timestamp").desc, col("offset").desc)))
 
     // an empty batch yields no pair, so nothing below runs for it
-    val pairs = distinctPairs[Int](deduped, "keySchemaId", "valueSchemaId")
-
-    pairs.foreach { row =>
-      val slice = deduped.filter(
-        (if (row.isNullAt(0)) col("keySchemaId").isNull
-         else col("keySchemaId") === row.getInt(0)) &&
-          (if (row.isNullAt(1)) col("valueSchemaId").isNull
-           else col("valueSchemaId") === row.getInt(1)))
-
+    pairSlices[Int](deduped, "keySchemaId", "valueSchemaId").foreach { case (_, slice) =>
       val keyType = slice.schema("key").dataType
       require(keyType.isInstanceOf[StructType],
         s"CDC apply requires a keyed topic (struct key); got $keyType — keyless " +
@@ -488,15 +465,9 @@ object CdcPipelines {
       registry: SchemaRegistryClient,
       bus: MessageBus,
       contentType: String = "avro")(implicit s: GraftSettings): Long = {
-    val cursorDir = s"${s.protocol}://${s.controlBucket}/_cdcout"
-    val cursorPath = new org.apache.hadoop.fs.Path(s"$cursorDir/$topic.version")
-    val fs = FsUtils.fs(spark, cursorDir)
-    val from =
-      if (!fs.exists(cursorPath)) 0L
-      else {
-        val in = fs.open(cursorPath)
-        try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
-      }
+    val cursorPath = new org.apache.hadoop.fs.Path(
+      s"${s.protocol}://${s.controlBucket}/_cdcout/$topic.version")
+    val from = FsUtils.readLong(spark, cursorPath)
     val to = table.version
     if (to > from) graft.ext.Parallelism.scoped {
       // consumed twice (emptiness probe + publish): materialize once,
@@ -507,30 +478,10 @@ object CdcPipelines {
           .drop("_commit_version"))
       if (!changes.isEmpty)
         dataframeToKafka(spark, changes, topic, keyColumns, registry, bus, contentType)
-      // cursor advance is a single OVERWRITE rename — no delete-then-rename
-      // window where a crash loses the cursor and the next run re-publishes
-      // the table's whole history. A crash BEFORE the rename re-publishes
+      // advance only after the publish: a crash before it re-publishes
       // just this window (at-least-once, like any Kafka producer without
-      // transactions) but never records progress it didn't make.
-      fs.mkdirs(cursorPath.getParent)
-      val tmp = new org.apache.hadoop.fs.Path(s"$cursorDir/.$topic.version.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(to.toString.getBytes("UTF-8")) finally out.close()
-      try
-        org.apache.hadoop.fs.FileContext
-          .getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
-          .rename(tmp, cursorPath, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          // connectors without an AbstractFileSystem binding (only
-          // file/hdfs/viewfs and the big-cloud schemes ship one) fall back
-          // to delete+rename: a small non-atomic window beats never
-          // advancing the cursor and re-publishing this window forever
-          fs.delete(cursorPath, false)
-          if (!fs.rename(tmp, cursorPath))
-            throw new IllegalStateException(
-              s"failed to advance cdc-out cursor for $topic")
-      }
+      // transactions) but never records progress it didn't make
+      FsUtils.writeLong(spark, cursorPath, to)
     }
     math.max(from, to)
   }

@@ -52,4 +52,44 @@ object FsUtils {
 
   def totalSizeBytes(spark: SparkSession, path: String): Long =
     dataFiles(spark, path).map(_.getLen).sum
+
+  /** The Long a consumer cursor file holds (a checkpoint's last processed
+    * version); 0 when the file does not exist yet. */
+  def readLong(spark: SparkSession, file: Path): Long = {
+    val f = fs(spark, file.toString)
+    if (!f.exists(file)) 0L
+    else {
+      val in = f.open(file)
+      try new String(in.readAllBytes(), "UTF-8").trim.toLong
+      finally in.close()
+    }
+  }
+
+  /** Replace a cursor file's Long with `v` through `.<name>.tmp` beside it
+    * and a single OVERWRITE rename — no delete-then-rename window where a
+    * crash loses the cursor and the next run replays its WHOLE history. A
+    * crash before the rename keeps the old value (at-least-once), never
+    * progress that was not made. */
+  def writeLong(spark: SparkSession, file: Path, v: Long): Unit = {
+    val f = fs(spark, file.toString)
+    f.mkdirs(file.getParent)
+    val tmp = new Path(file.getParent, s".${file.getName}.tmp")
+    val out = f.create(tmp, true)
+    try out.write(v.toString.getBytes("UTF-8"))
+    finally out.close()
+    try
+      org.apache.hadoop.fs.FileContext
+        .getFileContext(f.getUri, spark.sparkContext.hadoopConfiguration)
+        .rename(tmp, file, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    catch {
+      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+        // connectors without an AbstractFileSystem binding (only
+        // file/hdfs/viewfs and the big-cloud schemes ship one) fall back
+        // to delete+rename: a small non-atomic window beats never
+        // advancing the cursor
+        f.delete(file, false)
+        if (!f.rename(tmp, file))
+          throw new IllegalStateException(s"failed to write cursor $file")
+    }
+  }
 }

@@ -18,41 +18,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalRunner {
 
-  def lastProcessedVersion(spark: SparkSession, checkpointPath: String): Long = {
-    val fs = FsUtils.fs(spark, checkpointPath)
-    val p = new Path(checkpointPath, "version")
-    if (!fs.exists(p)) 0L
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    }
-  }
+  def lastProcessedVersion(spark: SparkSession, checkpointPath: String): Long =
+    FsUtils.readLong(spark, new Path(checkpointPath, "version"))
 
-  private def writeCheckpoint(spark: SparkSession, checkpointPath: String, v: Long): Unit = {
-    val fs = FsUtils.fs(spark, checkpointPath)
-    fs.mkdirs(new Path(checkpointPath))
-    val tmp = new Path(checkpointPath, s".version.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8"))
-    finally out.close()
-    val dst = new Path(checkpointPath, "version")
-    // single OVERWRITE rename — no delete-then-rename window where a crash
-    // loses the mark and the next run replays the table's WHOLE history
-    // (the tableChangesToKafka cursor-advance discipline)
-    try
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        // connectors without an AbstractFileSystem binding fall back to
-        // delete+rename: a small non-atomic window beats never advancing
-        fs.delete(dst, false)
-        if (!fs.rename(tmp, dst))
-          throw new IllegalStateException(s"failed to commit checkpoint $checkpointPath")
-    }
-  }
+  private def writeCheckpoint(spark: SparkSession, checkpointPath: String, v: Long): Unit =
+    FsUtils.writeLong(spark, new Path(checkpointPath, "version"), v)
 
   def deleteCheckpoint(spark: SparkSession, checkpointPath: String): Unit =
     FsUtils.deletePath(spark, checkpointPath)

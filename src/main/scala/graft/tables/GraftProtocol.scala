@@ -71,10 +71,10 @@ object GraftProtocol {
   // can READ such a table could still commit rows that violate it — rows
   // breaking a CHECK constraint, DML without its change-data files,
   // removals on a table consumers trust to be append-only. The gate is
-  // therefore on COMMITS: [[GraftTable.stampFeatures]] (the single funnel
-  // every commit passes through) refuses when the table's recorded union
-  // holds a writer feature outside [[WriterFeatures]], with the feature
-  // named; every read surface serves unchanged. Like the reader set, the
+  // therefore on COMMITS: [[GraftTable.stampFeatures]], run on every
+  // attempt of the one commit funnel ([[GraftTable.commitRewrite]]),
+  // refuses when the table's recorded union holds a writer feature
+  // outside [[WriterFeatures]], with the feature named; every read surface serves unchanged. Like the reader set, the
   // union is monotone (Delta never auto-downgrades protocol) and absent
   // fields decode as baseline, so pre-gate tables write unchanged.
 

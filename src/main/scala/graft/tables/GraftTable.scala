@@ -133,11 +133,12 @@ final case class LogCheckpoint(
   * Concurrency: commits are made visible by an atomic rename of the
   * version file; readers replay the log (driver-side, tiny) and read
   * exactly the live file set — so reads never observe a partial write,
-  * and time travel is `readAt(version)`. Appends retry a lost version
-  * race verbatim (they commute); rewrites (upsert/delete/update) go
-  * through Delta-style LOGICAL conflict detection ([[commitRewrite]]):
-  * disjoint concurrent writers (different buckets / provably different
-  * key ranges) land without manual retry, overlapping ones fail loudly.
+  * and time travel is `readAt(version)`. Every commit goes through one
+  * funnel with Delta-style LOGICAL conflict detection ([[commitRewrite]]):
+  * appends and metadata commits commute and retry a lost version race
+  * verbatim; disjoint concurrent rewriters (different buckets / provably
+  * different key ranges) land without manual retry, overlapping ones
+  * fail loudly.
   *
   * Scale: the log holds file NAMES only (KBs per commit); data files are
   * immutable parquet that Spark scans with full pushdown/pruning. Appends
@@ -454,25 +455,22 @@ final class GraftTable private (
     * re-reading and re-validating the CURRENT schema per attempt so an
     * interleaved append's widening is never overwritten. */
   private def commitSchemaChange(action: String, info: Map[String, String])(
-      transform: org.apache.spark.sql.types.StructType => org.apache.spark.sql.types.StructType): Unit = {
-    var attempt = 0
-    while (true) {
-      val stored = org.apache.spark.sql.types.DataType.fromJson(
-        snapshot().schemaJson.getOrElse(
-          throw new IllegalStateException(s"table does not exist: $path")))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      try {
-        nextCommit(action, dataChange = false, Seq.empty, Seq.empty,
-          transform(stored).json, info)
-        return
-      } catch {
-        case e: IllegalStateException
-            if e.getMessage.contains("concurrent commit") && attempt < 10 =>
-          attempt += 1
-          Thread.sleep(20L * attempt)
-      }
+      transform: org.apache.spark.sql.types.StructType => org.apache.spark.sql.types.StructType): Unit =
+    commitMetadata(action, info) { () =>
+      transform(org.apache.spark.sql.types.DataType.fromJson(currentSchemaOrFail)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]).json
     }
-  }
+
+  /** A file-less, dataChange=false commit through the funnel: it reads no
+    * file, so it commutes with every interleaved writer, and `schemaJson`
+    * re-reads the current schema per attempt. */
+  private def commitMetadata(action: String, info: Map[String, String])(
+      schemaJson: () => String): Commit =
+    commitRewrite(action, version, Seq.empty, Seq.empty, mayOverlap = _ => false,
+      schemaJson, info, dataChange = false)
+
+  private def currentSchemaOrFail: String = snapshot().schemaJson.getOrElse(
+    throw new IllegalStateException(s"table does not exist: $path"))
 
   /** Drop a persisted CHECK constraint. */
   def dropConstraint(name: String, ifExists: Boolean = false): Unit = {
@@ -559,27 +557,13 @@ final class GraftTable private (
     }
     blocker.foreach(b => throw new IllegalStateException(
       s"cannot drop feature '$name' from $path: $b"))
-    var attempt = 0
-    while (true) {
-      try {
-        val c = nextCommit("drop_feature", dataChange = false, Seq.empty,
-          Seq.empty, snapshot().schemaJson.getOrElse(
-            throw new IllegalStateException(s"table does not exist: $path")),
-          Map("feature" -> name))
-        // checkpoint NOW (off-cadence): cold opens and vacuumLog-trimmed
-        // tables must start from the union WITHOUT the feature — waiting
-        // for the cadence would leave the drop invisible to any reader
-        // whose fold starts from the previous checkpoint's union
-        maybeWriteCheckpoint(c.version, force = true)
-        return c
-      } catch {
-        case e: IllegalStateException
-            if e.getMessage.contains("concurrent commit") && attempt < 10 =>
-          attempt += 1
-          Thread.sleep(20L * attempt)
-      }
-    }
-    sys.error("unreachable")
+    val c = commitMetadata("drop_feature", Map("feature" -> name))(() => currentSchemaOrFail)
+    // checkpoint NOW (off-cadence): cold opens and vacuumLog-trimmed
+    // tables must start from the union WITHOUT the feature — waiting
+    // for the cadence would leave the drop invisible to any reader
+    // whose fold starts from the previous checkpoint's union
+    maybeWriteCheckpoint(c.version, force = true)
+    c
   }
 
   private def writeConstraints(cs: Map[String, String]): Unit = {
@@ -604,22 +588,10 @@ final class GraftTable private (
     * incremental consumers. A pre-first-commit table has no log schema to
     * stamp, so the DDL is sidecar-only until data arrives. */
   private def recordConstraintCommit(op: String, name: String, pred: String): Unit =
-    if (exists) {
-      var attempt = 0
-      while (attempt >= 0) {
-        try {
-          nextCommit("constraint", dataChange = false, Seq.empty, Seq.empty,
-            snapshot().schemaJson.getOrElse(Serialization.write(Map.empty[String, String])),
-            Map("op" -> op, "name" -> name, "predicate" -> pred))
-          return
-        } catch {
-          case e: IllegalStateException
-              if e.getMessage.contains("concurrent commit") && attempt < 10 =>
-            attempt += 1
-            Thread.sleep(20L * attempt)
-        }
+    if (exists)
+      commitMetadata("constraint", Map("op" -> op, "name" -> name, "predicate" -> pred)) {
+        () => snapshot().schemaJson.getOrElse(Serialization.write(Map.empty[String, String]))
       }
-    }
 
   /** Wrap `df` so every persisted CHECK constraint is enforced per row
     * inside the write pass itself. */
@@ -649,9 +621,9 @@ final class GraftTable private (
     *
     * CACHED per table instance, revalidated on EVERY access with one
     * existence probe of the next version's commit file: versions are dense
-    * ([[nextCommit]] publishes `version + 1` under the O_EXCL claim mutex,
-    * so no version is ever skipped), which makes "v+1 absent" a proof that
-    * the cached listing is still current. An external writer's commit is
+    * ([[commitRewrite]] publishes `base + 1` only once `base` is the head,
+    * under the O_EXCL claim mutex, so no version is ever skipped), which
+    * makes "v+1 absent" a proof that the cached listing is still current. An external writer's commit is
     * therefore visible immediately — there is NO stale-read window, unlike
     * a TTL cache — while the steady state costs one HEAD-class RPC instead
     * of a LIST plus k opens. On an object store, where every log RPC is
@@ -732,7 +704,7 @@ final class GraftTable private (
   }
 
   /** Every commit, oldest first — read only by [[history]] without a limit
-    * (`DESCRIBE HISTORY`), [[vacuum]] and [[detail]]. Per-batch readers
+    * (`DESCRIBE HISTORY`) and [[vacuum]]. Per-batch readers
     * parse just their versions ([[commitsInRange]], [[commitsNewestFirst]]);
     * current-state reads go through [[snapshot]]. */
   def commits(): Seq[Commit] = listLog()._1.map(parseCommit)
@@ -967,7 +939,7 @@ final class GraftTable private (
     commitsNewestFirst.find(_.timestampMs <= timestampMs).map(_.version)
       .getOrElse(throw new IllegalArgumentException(
         s"no commit at or before timestamp $timestampMs in $path " +
-          s"(earliest: ${commits().headOption.map(_.timestampMs).getOrElse(-1L)})"))
+          s"(earliest: ${listLog()._1.headOption.map(parseCommit(_).timestampMs).getOrElse(-1L)})"))
   }
 
   /** Publish one commit file atomically with real conflict detection.
@@ -982,8 +954,8 @@ final class GraftTable private (
     * protocol); (2) under the claim, check the version file doesn't
     * already exist (a finished writer releases its claim, but its commit
     * file remains forever); (3) write-then-rename so readers never see
-    * partial content. Losers throw `concurrent commit` — append retries
-    * at the next version, read-modify-write callers fail fast.
+    * partial content. Losers throw `concurrent commit`; [[commitRewrite]]
+    * catches it, checks the winner against its read set and retries.
     *
     * Crashed-winner recovery is LEASE-based, no FSCK required: a claim
     * older than `spark.graft.logStore.claimTtlMs` (default 10 min; claims
@@ -1502,29 +1474,14 @@ final class GraftTable private (
       namesAndStats.collect { case (n, Some(st)) => n -> st }.toMap)
   }
 
-  private def nextCommit(action: String, dataChange: Boolean, add: Seq[String],
-      remove: Seq[String], schemaJson: String, metrics: Map[String, String],
-      stats: Map[String, FileStats] = Map.empty,
-      changes: Option[Seq[String]] = None,
-      dvs: Map[String, String] = Map.empty): Commit = {
-    val c = stampFeatures(Commit(version + 1, action, dataChange,
-      System.currentTimeMillis(), add, remove, schemaJson, metrics,
-      if (stats.isEmpty) None else Some(stats),
-      changes,
-      if (dvs.isEmpty) None else Some(dvs)))
-    writeCommit(c)
-    maybeWriteCheckpoint(c.version)
-    c
-  }
-
   /** Derive and record the commit's required reader features from its
     * content ([[GraftProtocol.featuresOf]]) and its writer features from
     * table state + content ([[GraftProtocol.writerFeaturesOf]]) — stamped
-    * here, at the single funnel both construction sites ([[nextCommit]],
-    * [[commitRewrite]]) pass through, so no write path can forget either
-    * gate. The WRITE-side protocol gate also lives here: a table whose
-    * recorded union holds a writer feature this binary does not uphold
-    * refuses the commit (reads keep serving — [[parseCommit]]/[[snapshot]]
+    * on every attempt of [[commitRewrite]], the one funnel every commit is
+    * published through, so no write path can forget either gate. The
+    * WRITE-side protocol gate also lives here: a table whose recorded
+    * union holds a writer feature this binary does not uphold refuses the
+    * commit (reads keep serving — [[parseCommit]]/[[snapshot]]
     * check only the reader set), and a declared append-only table refuses
     * any data-changing commit that removes files or binds deletion
     * vectors (compaction/OPTIMIZE rewrites — dataChange=false, rows
@@ -1556,18 +1513,19 @@ final class GraftTable private (
         appendOnlyDeclared = appendOnlyDeclared))
   }
 
-  /** Test seam: invoked once just before a rewrite's first commit attempt
-    * (inside [[commitRewrite]]), so specs can deterministically interleave
-    * a foreign commit into the snapshot->publish window. No-op in
-    * production. */
+  /** Test seam: invoked once just before a commit's first attempt (inside
+    * [[commitRewrite]], which every commit passes through), so specs can
+    * deterministically interleave a foreign commit into the
+    * snapshot->publish window. No-op in production. */
   private[tables] var onBeforeRewriteCommit: () => Unit = () => ()
 
-  /** Publish a read-modify-write commit with Delta-style LOGICAL conflict
-    * detection (the multi-writer story beyond concurrent appends).
+  /** The one commit funnel: builds, stamps ([[stampFeatures]]), publishes
+    * ([[writeCommit]]), retries and checkpoints EVERY commit, with
+    * Delta-style LOGICAL conflict detection.
     *
-    * A rewrite's file sets were computed against the snapshot at
-    * `baseVersion`, so the commit targets EXACTLY `baseVersion + 1` —
-    * never a re-read `version + 1`, which would silently publish over an
+    * A commit's file sets were computed against the snapshot at
+    * `baseVersion`, so it targets EXACTLY `baseVersion + 1` — never a
+    * re-read `version + 1`, which would silently publish over an
     * interleaved writer (lost update: our `remove` list wouldn't cover
     * its files, leaving both its rows and our merged output live). When
     * another commit owns that version, the interleaved commits are
@@ -1577,21 +1535,28 @@ final class GraftTable private (
     *    (our rewrite was computed from files that no longer exist);
     *  - one ADDED files that `mayOverlap` says can hold rows in this
     *    txn's scope (same buckets for a keyed upsert, stats-compatible
-    *    with the predicate for delete/update) -> real conflict (our scan
-    *    missed rows the txn semantics must cover);
+    *    with the predicate for delete/update, every row for overwrite,
+    *    restore and convert) -> real conflict (our scan missed rows the
+    *    txn semantics must cover);
     *  - otherwise the writes are DISJOINT (different buckets, different
-    *    key ranges) and the rewrite is still valid verbatim: adopt the
+    *    key ranges) and the commit is still valid verbatim: adopt the
     *    new base and retry. Two CDC writers upserting different buckets
-    *    of a 100 TB table both land without manual retry.
+    *    of a 100 TB table both land without manual retry. Appends and
+    *    metadata commits read no file and pass `mayOverlap = _ => false`,
+    *    so they commute with every interleaved writer.
     *
     * `schemaJson` is re-evaluated per attempt — an interleaved append may
-    * have widened the log schema, and a rewrite must never narrow it. */
+    * have widened the log schema, and no commit may narrow it (metadata
+    * commits re-read and re-transform the current schema there). A lost
+    * claim (`concurrent commit` from [[writeCommit]]) retries up to 20
+    * times with a min(250 ms, 20 ms x attempt) backoff; the give-up error
+    * carries the last loser's message. */
   private def commitRewrite(action: String, baseVersion: Long,
       add: Seq[String], remove: Seq[String],
       mayOverlap: Commit => Boolean,
       schemaJson: () => String,
       metrics: Map[String, String],
-      stats: Map[String, FileStats],
+      stats: Map[String, FileStats] = Map.empty,
       changes: Option[Seq[String]] = None,
       dvs: Map[String, String] = Map.empty,
       dataChange: Boolean = true,
@@ -1606,6 +1571,7 @@ final class GraftTable private (
     onBeforeRewriteCommit = () => ()
     var base = baseVersion
     var attempts = 0
+    var lost: IllegalStateException = null
     while (attempts < 20) {
       val now = version
       if (now > base) {
@@ -1626,7 +1592,7 @@ final class GraftTable private (
               s"concurrent ${c.action} commit v${c.version} conflicts with this " +
                 s"$action on $path: it $why — re-run against the new table state")
           }
-        base = now // disjoint writers: the rewrite is still valid verbatim
+        base = now // disjoint writers: the commit is still valid verbatim
       } else {
         try {
           val c = stampFeatures(Commit(base + 1, action, dataChange,
@@ -1638,15 +1604,18 @@ final class GraftTable private (
           return c
         } catch {
           case e: IllegalStateException if e.getMessage.contains("concurrent commit") =>
+            lost = e
             attempts += 1 // loop re-reads the log and validates the winner
-            // brief backoff like append's: a spin against a stalled claim
-            // holder burns all 20 attempts in milliseconds
+            // linear backoff, capped: the winner needs time to publish its
+            // version file, and the ~3.5 s budget must survive a LOADED
+            // machine pausing the claim holder (N writers burning their
+            // budgets on one stalled winner was an observed flake at 1 s)
             Thread.sleep(math.min(250L, 20L * attempts))
         }
       }
     }
-    throw new IllegalStateException(
-      s"$action on $path gave up after $attempts contended commit attempts")
+    throw new IllegalStateException(s"$action on $path gave up after $attempts " +
+      s"contended commit attempts: ${lost.getMessage}", lost)
   }
 
   // ------------------------------------------------------ change data feed
@@ -1866,8 +1835,8 @@ final class GraftTable private (
     }
   }
 
-  private def requireCompatibleSchema(df: DataFrame): Unit = {
-    val sj = snapshot().schemaJson.getOrElse(return)
+  private def requireCompatibleSchema(snap: LogCheckpoint, df: DataFrame): Unit = {
+    val sj = snap.schemaJson.getOrElse(return)
     val cur = org.apache.spark.sql.types.DataType.fromJson(sj)
     val conflicts = schemaConflicts(cur, df.schema, "")
     if (conflicts.nonEmpty)
@@ -1877,40 +1846,25 @@ final class GraftTable private (
           conflicts.mkString("; "))
   }
 
-  /** Appends COMMUTE, so a lost version race is retried: the staged files
-    * are already in place under unique names, and re-reading the log gives
-    * the next free version. Read-modify-write commits must NOT blindly
-    * retry — their file sets were computed against a snapshot — so
-    * upsert/delete/update revalidate through [[commitRewrite]]'s logical
-    * conflict detection, while whole-table rewrites (overwrite/compact/
-    * restore) keep fail-fast semantics. */
+  /** Appends COMMUTE: the staged files are already in place under unique
+    * names and the append reads no file, so it goes through
+    * [[commitRewrite]] with no read set and `mayOverlap = _ => false` —
+    * every interleaved writer is disjoint, and a lost version race just
+    * retries at the next free version. */
   def append(df: DataFrame,
       extraMetrics: Map[String, String] = Map.empty): Commit = {
-    requireCompatibleSchema(df)
+    val snap = snapshot()
+    requireCompatibleSchema(snap, df)
     val (add, stats) = stage(df)
-    var attempt = 0
-    while (true) {
+    commitRewrite("append", snap.version, add, Seq.empty,
+      mayOverlap = _ => false,
       // the recorded schema is the EVOLVED UNION (current ∪ batch), not the
       // batch's — additive evolution must widen the log schema, never
       // narrow it (log-schema readers — readRelation, readAt's empty
       // path — would otherwise lose columns a narrow batch lacked).
-      // Computed inside the retry loop: a lost race may have widened it.
-      try return nextCommit("append", dataChange = true, add, Seq.empty,
-        unionSchemaJson(df.schema),
-        Map("numOutputFiles" -> add.size.toString) ++ extraMetrics, stats)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage.contains("concurrent commit") && attempt < 16 =>
-          attempt += 1
-          // linear backoff, capped: the competing writer needs time to
-          // publish its version file before our re-read can see it. The
-          // cumulative budget (~3s) must survive a LOADED machine pausing
-          // the claim holder — N writers all burning their budgets on one
-          // stalled winner was an observed flake at 1s
-          Thread.sleep(math.min(250L, 20L * attempt))
-      }
-    }
-    throw new IllegalStateException("unreachable")
+      // Evaluated per attempt: a lost race may have widened it.
+      schemaJson = () => unionSchemaJson(df.schema),
+      Map("numOutputFiles" -> add.size.toString) ++ extraMetrics, stats)
   }
 
   /** Append range-CLUSTERED on `clusterCols`: rows are range-partitioned
@@ -2314,9 +2268,11 @@ final class GraftTable private (
         case None => None
       }
     }.toMap
-    nextCommit("convert", dataChange = true,
-      add = rels, remove = Seq.empty,
-      unionSchemaJson(df.schema),
+    // the file set was listed against an empty log: any interleaved data
+    // commit (a racing convert adopting the same files) is a conflict
+    commitRewrite("convert", 0L, rels, Seq.empty,
+      mayOverlap = _ => true,
+      schemaJson = () => unionSchemaJson(df.schema),
       Map("numConvertedFiles" -> listed.size.toString,
         "numConvertedBytes" -> sizes.values.sum.toString,
         "partitionColumns" -> partKeys.mkString(",")), stats)
@@ -2703,9 +2659,12 @@ final class GraftTable private (
     if (report.isEmpty || dryRun) return report
     staleClaims.foreach(p => fs.delete(p, false))
     if (missing.nonEmpty)
-      nextCommit("repair", dataChange = true, add = Seq.empty, remove = missing,
-        snap.schemaJson.getOrElse(throw new IllegalStateException(
-          s"table does not exist: $path")),
+      // the missing files are the read set (they are the removes): an
+      // interleaved append commutes, a commit that already dropped one
+      // of them conflicts
+      commitRewrite("repair", snap.version, Seq.empty, missing,
+        mayOverlap = _ => false,
+        schemaJson = () => currentSchemaOrFail,
         Map("numRemovedFiles" -> missing.size.toString))
     report
   }
@@ -2807,10 +2766,9 @@ final class GraftTable private (
     val df = DeletionVectors.filterDeleted(packed, spark, loadDvs(dvNow, small), qualifiedRootUris)
       .repartition(target)
     val (add, stats) = stage(df)
-    // conflict-checked like compactWith: an interleaved rewrite/DV bind on
-    // a bin-packed file would otherwise have its pre-rewrite rows
-    // resurrected by this commit (nextCommit re-reads version and removes
-    // the stale name without complaint)
+    // the bin-packed files are the read set: an interleaved rewrite/DV
+    // bind on one conflicts instead of having its pre-rewrite rows
+    // resurrected by this commit
     Some(commitRewrite("compact", snap.version, add, small,
       mayOverlap = _ => false,
       schemaJson = () => unionSchemaJson(stored),
@@ -2869,12 +2827,13 @@ final class GraftTable private (
     * per-file stats; only pre-stats files pay one shared directory
     * listing). `createdAt` is the oldest RETAINED commit — after a
     * `vacuumLog` trim it reflects the log horizon, like Delta's after log
-    * retention. */
+    * retention. Parses the snapshot (also the protocol gate for the rest
+    * of the log) plus the oldest and newest commits, never the whole log. */
   def detail(): DataFrame = {
     import spark.implicits._
-    val cs = commits()
-    require(cs.nonEmpty, s"table does not exist: $path")
     val snap = snapshot()
+    val logged = listLog()._1
+    require(logged.nonEmpty, s"table does not exist: $path")
     lazy val listed: Map[String, Long] =
       FsUtils.dataFiles(spark, path).map(st => st.getPath.getName -> st.getLen).toMap
     val bytes = snap.live.map(f =>
@@ -2882,8 +2841,8 @@ final class GraftTable private (
     val spec = bucketSpec
     Seq((
       "graft", path,
-      new java.sql.Timestamp(cs.head.timestampMs),
-      new java.sql.Timestamp(cs.last.timestampMs),
+      new java.sql.Timestamp(parseCommit(logged.head).timestampMs),
+      new java.sql.Timestamp(parseCommit(logged.last).timestampMs),
       snap.version, snap.live.size.toLong, bytes,
       spec.map(_.keys).getOrElse(Seq.empty[String]),
       spec.map(_.numBuckets).getOrElse(0),

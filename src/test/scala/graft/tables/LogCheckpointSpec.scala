@@ -27,6 +27,32 @@ class LogCheckpointSpec extends SparkSpecBase {
       .filter(f => f.getName.matches("\\d{20}" + suffix)).sortBy(_.getName).toSeq
   }
 
+  test("detail() opens as many log files at v≈300 as at v≈20") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cfile.impl", classOf[CountingLocalFs].getName)
+    val interval = 20
+    val path = s"cfile:${tmp()}/t"
+    val settings = GraftSettings(logCheckpointInterval = interval)
+    val t = GraftTable(spark, path)(settings)
+    t.append(Seq((1, "a")).toDF("id", "v"))
+    // metadata-only commits (no Spark job) grow the log through the
+    // ordinary commit path, checkpoints included; a fresh handle then
+    // measures detail() with no parse cached
+    def opensAt(v: Long): Long = {
+      while (t.version < v) t.unsetProperties(Seq("log_growth"))
+      val cold = GraftTable(spark, path)(settings)
+      CountingLocalFs.reset()
+      assert(cold.detail().head().getAs[Long]("version") === v)
+      CountingLocalFs.opensOf(path)
+    }
+    // both measurements sit at the same offset from a checkpoint
+    val short = opensAt(interval - 2L)
+    val long = opensAt(15L * interval - 2)
+    info(s"detail() log opens at v${interval - 2}: $short; at v${15 * interval - 2}: $long")
+    assert(short > 0)
+    assert(long <= short + interval, s"detail() log opens grew with the log: $short vs $long")
+  }
+
   test("checkpoints appear on cadence and reads equal an uncheckpointed twin") {
     val root = tmp()
     val t = GraftTable(spark, s"$root/t")(ckptSettings)
