@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.TimestampType
   * against the target relation; an injected analyzer rule
   * ([[GraftDmlRule]]) then swaps the resolved node for a runnable command
   * that executes through the SAME [[GraftTable]] primitives the Scala API
-  * uses (`deleteImpl`/`updateImpl`/`replaceWith`), so both surfaces share
+  * uses (`deleteOrUpdate`/`replaceWith`), so both surfaces share
   * one implementation: stats/bucket file pruning, CDF recording rules,
   * and [[GraftTable]]'s logical conflict detection all apply identically.
   *
@@ -210,26 +210,22 @@ object GraftDml {
     // NORMAL OR EXCEPTIONAL — a conflict thrown by replaceWith must not
     // pin the scoped scan's blocks for the session's lifetime
     graft.ext.Parallelism.scoped {
-      val scoped0 = PlanBridge.ofRows(spark, scopedTo(target, index, affected.toSet))
-      // CDF consumes the scoped scan twice (remaining + deleted rows);
-      // barrier mode per settings, like every multi-consumer frame
-      val scoped =
-        if (table.effectiveSettings.changeDataFeed)
-          graft.ext.Parallelism.materialize(scoped0)(table.effectiveSettings)
-        else scoped0
+      // CDF consumes the scoped scan twice (remaining + deleted rows)
+      val scoped = table.cdfShared(
+        PlanBridge.ofRows(spark, scopedTo(target, index, affected.toSet)))
       val remaining = scoped.filter(!cond)
       val changeFiles =
         if (table.effectiveSettings.changeDataFeed)
           Some(table.stageChangeRows(table.tagged(scoped.filter(cond), "delete")))
         else None
-      table.replaceWith("delete", snap.version, affected, remaining,
-        Map.empty, atoms = ExpressionAtoms.conjuncts(condition),
+      table.replaceWith("delete", snap.version, affected, remaining, Map.empty,
+        mayOverlap = table.mayMatchPredicate(ExpressionAtoms.conjuncts(condition)),
         changes = changeFiles)
     }
   }
 
   /** UPDATE with subqueries in the condition or assignment values — the
-    * captured-plan twin of [[GraftTable.updateImpl]]. `assigns` maps each
+    * captured-plan twin of [[GraftTable.update]]. `assigns` maps each
     * affected TOP-LEVEL column to its effective value column
     * ([[effectiveAssigns]] — nested field assignments already folded). */
   private[tables] def updateFromPlan(spark: SparkSession, index: GraftFileIndex,
@@ -250,11 +246,8 @@ object GraftDml {
     table.preWriteGate("update", removesRows = true)
     // scoped barrier lifecycle: freed on exit, normal or exceptional
     graft.ext.Parallelism.scoped {
-      val scoped0 = PlanBridge.ofRows(spark, scopedTo(target, index, affected.toSet))
-      val scoped =
-        if (table.effectiveSettings.changeDataFeed)
-          graft.ext.Parallelism.materialize(scoped0)(table.effectiveSettings)
-        else scoped0
+      val scoped = table.cdfShared(
+        PlanBridge.ofRows(spark, scopedTo(target, index, affected.toSet)))
       val targetCols = target.output
       def projected(rows: DataFrame, applyAssigns: Boolean): DataFrame =
         rows.select(targetCols.map { a =>
@@ -265,7 +258,7 @@ object GraftDml {
         }: _*)
       val updated = scoped.select(targetCols.map { a =>
         assigns.get(a.name) match {
-          // per-row gate, like updateImpl: scoped files hold non-matching
+          // per-row gate, like deleteOrUpdate: scoped files hold non-matching
           // rows too — those carry through unchanged
           case Some(v) =>
             when(cond, v.cast(a.dataType))
@@ -282,9 +275,9 @@ object GraftDml {
                 table.tagged(projected(matched, applyAssigns = true), "update_postimage"),
                 allowMissingColumns = true)))
         } else None
-      table.replaceWith("update", snap.version, affected, updated,
-        Map.empty,
-        atoms = condition.map(ExpressionAtoms.conjuncts).getOrElse(Seq(PredOpaque)),
+      table.replaceWith("update", snap.version, affected, updated, Map.empty,
+        mayOverlap = table.mayMatchPredicate(
+          condition.map(ExpressionAtoms.conjuncts).getOrElse(Seq(PredOpaque))),
         changes = changeFiles)
     }
   }
@@ -303,9 +296,9 @@ final case class GraftDeleteCommand(index: GraftFileIndex,
     if (GraftDml.hasSubquery(condition))
       GraftDml.deleteFromPlan(spark, index, target, condition)
     else
-      index.table.deleteImpl(
+      index.table.deleteOrUpdate(
         GraftDml.byName(condition, "DELETE"),
-        ExpressionAtoms.conjuncts(condition))
+        ExpressionAtoms.conjuncts(condition), None)
     index.refresh()
     GraftDml.refreshCatalog(spark, catalogIdent)
     Seq.empty
@@ -340,7 +333,7 @@ final case class GraftUpdateCommand(index: GraftFileIndex,
         valueOf = e => GraftDml.byName(e, "UPDATE"))
       val cond = condition.map(GraftDml.byName(_, "UPDATE")).getOrElse(lit(true))
       val atoms = condition.map(ExpressionAtoms.conjuncts).getOrElse(Seq(PredOpaque))
-      index.table.updateImpl(cond, atoms, assigns)
+      index.table.deleteOrUpdate(cond, atoms, Some(assigns))
     }
     index.refresh()
     GraftDml.refreshCatalog(spark, catalogIdent)
@@ -484,29 +477,10 @@ final case class GraftMergeCommand(merge: MergeIntoTable,
       }
       val (affected: Seq[String], pruneAtoms: Seq[PredAtom]) =
         if (keys.isEmpty) (snap.live, Seq(PredOpaque))
-        else {
-          // ONE aggregate over the source: per-key min/max. Null min ⇔ the
-          // key is all-null/empty — no target row can match it (EqualTo),
-          // so it contributes nothing; if EVERY key is null-ranged, no file
-          // holds matches at all and only inserts can apply.
-          val aggs = keys.zipWithIndex.flatMap { case ((_, s), i) =>
-            val c = ColumnBridge.column(s)
-            Seq(min(c).as(s"__mn$i"), max(c).as(s"__mx$i"))
-          }
-          val row = sourceDf.agg(aggs.head, aggs.tail: _*).head()
-          val atoms = keys.zipWithIndex.flatMap { case ((t, _), i) =>
-            (row.get(2 * i), row.get(2 * i + 1)) match {
-              case (mn, mx) if mn != null && mx != null =>
-                Seq(PredCmp(">=", t.name, mn), PredCmp("<=", t.name, mx))
-              case _ => Seq.empty
-            }
-          }
-          val allNullKeys = keys.nonEmpty && atoms.isEmpty
-          val files =
-            if (allNullKeys) Seq.empty[String]
-            else table.pruneLive(snap, atoms)
-          (files, if (atoms.isEmpty) Seq(PredOpaque) else atoms)
-        }
+        // the source keys' min/max bound the files that can hold matches
+        // (the rule the API upsert shares)
+        else table.keyRangeScope(snap, sourceDf,
+          keys.map { case (t, s) => t.name -> ColumnBridge.column(s) })
       // pre-stage protocol probe: an insert-only merge touching no stored
       // file stays allowed on append-only (Delta permits those); any
       // affected file will be removed/rewritten by the commit
@@ -636,7 +610,7 @@ final case class GraftMergeCommand(merge: MergeIntoTable,
         Map("mergeClauses" -> (merge.matchedActions.size + merge.notMatchedActions.size +
           merge.notMatchedBySourceActions.size).toString,
           "numTargetFilesSkipped" -> (snap.live.size - affected.size).toString),
-        atoms = pruneAtoms,
+        mayOverlap = table.mayMatchPredicate(pruneAtoms),
         changes = changeFiles,
         evolveSchema = merge.withSchemaEvolution && evolved.nonEmpty)
     } // Parallelism.scoped — frees the source + join barriers

@@ -1648,6 +1648,14 @@ final class GraftTable private (
   private[tables] def tagged(df: DataFrame, changeType: String): DataFrame =
     df.withColumn("_change_type", lit(changeType))
 
+  /** A rewrite source with more than one consumer when the change feed is
+    * on (the new files AND the change rows): materialized once, barrier
+    * per `settings.barrierMode`. Without the change feed it streams. */
+  private[tables] def cdfShared(df: DataFrame): DataFrame =
+    if (effectiveSettings.changeDataFeed)
+      graft.ext.Parallelism.materialize(df)(effectiveSettings)
+    else df
+
   /** Row-level changes between versions `(fromExclusive, toInclusive]` as
     * table columns + `_change_type` (insert / update_preimage /
     * update_postimage / delete) + `_commit_version` — Delta CDF semantics,
@@ -1667,13 +1675,19 @@ final class GraftTable private (
     requireReadableLog()
     val inRange = commitsInRange(fromExclusive, toInclusive).filter(_.dataChange)
     val frames = inRange.flatMap { c =>
-      // change FILES are written from logical frames (no mapping); DATA
-      // files read under the COMMIT's schema, so synthesis sees the
-      // mapping true at that version
+      // change FILES are written from logical frames (no mapping), so
+      // they read under the commit's LOGICAL schema plus `_change_type`
+      // with no footer opened; DATA files read under the COMMIT's schema,
+      // so synthesis sees the mapping true at that version
       def readChangeFiles(names: Seq[String]): Option[DataFrame] =
         if (names.isEmpty) None
-        else Some(spark.read.option("mergeSchema", "true")
-          .parquet(names.map(n => s"$path/$n"): _*))
+        else {
+          val st = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
+            .asInstanceOf[org.apache.spark.sql.types.StructType]
+          val logical = ColumnMapping.cleanMetadata(ColumnMapping.logicalSchema(st))
+            .add("_change_type", org.apache.spark.sql.types.StringType)
+          Some(spark.read.schema(logical).parquet(names.map(n => s"$path/$n"): _*))
+        }
       // schemaJson BY-NAME: the pre-state snapshot behind the removes'
       // binding is only computed when a commit actually removed files
       def readFiles(names: Seq[String], dvOf: String => Option[String],
@@ -2000,12 +2014,7 @@ final class GraftTable private (
 
     // bucket pruning: with a matching bucket spec only the buckets holding
     // updated keys are read and rewritten — O(batch), not O(table)
-    def readOf(files: Seq[String]): Option[DataFrame] =
-      if (files.isEmpty) None
-      else Some(DeletionVectors.filterDeleted(
-        readDataFiles(files, schemaOf(snap0)),
-        spark, loadDvs(snap0.dvFor, files), qualifiedRootUris))
-    val (oldFiles, current, touchedBuckets, keyAtoms) =
+    val (oldFiles, mayOverlap) =
       bucketSpec.filter(_.keys == keyCols) match {
         case Some(sp) =>
           // one stage, no shuffle: each task ships its own distinct ids
@@ -2016,27 +2025,29 @@ final class GraftTable private (
           // files with no bucket in their name (legacy flat writes) are
           // always treated as affected
           val affected = snap0.live.filter(f => bucketOf(f).forall(buckets.contains))
-          (affected, readOf(affected), Some(buckets), Seq(PredOpaque: PredAtom))
+          // the conflict scope is the key buckets: an interleaved commit
+          // adding files only in OTHER buckets cannot hold our keys (the
+          // writer hashed them the same way) — disjoint, safe to retry
+          (affected, (c: Commit) => c.add.exists(f => bucketOf(f).forall(buckets.contains)))
         case _ =>
-          // unbucketed table: the SAME stats pruning as the SQL MERGE —
-          // one min/max aggregate over the batch's keys bounds the files
-          // that can hold matched rows (sound: a file whose key range is
-          // disjoint from the batch's can lose no row to the anti-join).
-          // Key-clustered tables get the bucketed path's O(batch) shape;
-          // uniform keys degrade to the old whole-table rewrite.
-          val atoms = keyRangeAtoms(updates, keyCols)
-          val affected = pruneLive(snap0, atoms)
-          (affected, readOf(affected), None, atoms)
+          // unbucketed table: the SAME key-range scope as the SQL MERGE
+          // (sound: a file whose key range is disjoint from the batch's
+          // can lose no row to the anti-join). Key-clustered tables get
+          // the bucketed path's O(batch) shape; uniform keys degrade to
+          // the whole-table rewrite.
+          val (affected, atoms) = keyRangeScope(snap0, updates, keyCols.map(k => k -> col(k)))
+          (affected, mayMatchPredicate(atoms) _)
       }
     // a keyed upsert rewrites (= removes) every affected file; a batch
     // whose keys touch no stored file is a pure insert and stays allowed
     // on append-only — the funnel's exact remove-scope, probed pre-stage
     preWriteGate("upsert", removesRows = oldFiles.nonEmpty)
-    // CDF: the affected-file snapshot and the update batch each feed the
-    // merge AND the change-row joins — materialize once, not per consumer
-    val snap = if (effectiveSettings.changeDataFeed) current.map(graft.ext.Parallelism.materialize(_)(effectiveSettings)) else current
-    val ups = if (effectiveSettings.changeDataFeed) graft.ext.Parallelism.materialize(upserted)(effectiveSettings) else upserted
-    val merged = snap match {
+    // CDF: the affected-file rows and the update batch each feed the
+    // merge AND the change-row joins
+    val current =
+      if (oldFiles.isEmpty) None else Some(cdfShared(liveRows(snap0, oldFiles)))
+    val ups = cdfShared(upserted)
+    val merged = current match {
       case Some(df) =>
         df.join(updateKeys, keyCols, "left_anti")
           .unionByName(ups, allowMissingColumns = true)
@@ -2044,7 +2055,7 @@ final class GraftTable private (
     }
     val changeFiles: Option[Seq[String]] =
       if (!effectiveSettings.changeDataFeed) None
-      else Some(stageChangeRows(snap match {
+      else Some(stageChangeRows(current match {
         case Some(df) =>
           val delKeys = updates.filter(col(opCol) === deleteOp)
             .select(keyCols.map(col): _*).distinct()
@@ -2059,42 +2070,33 @@ final class GraftTable private (
               allowMissingColumns = true)
         case None => tagged(ups, "insert")
       }))
-    val (add, stats) = stage(merged)
-    commitRewrite("upsert", snap0.version, add, oldFiles,
-      // a keyed upsert's scope is its key buckets: an interleaved commit
-      // adding files only in OTHER buckets cannot hold our keys (the
-      // writer hashed them the same way) — disjoint, safe to retry. An
-      // unbucketed table answers with the key-range atoms instead: an
-      // interleaved append whose stats prove disjoint keys is safe too.
-      mayOverlap = c => touchedBuckets match {
-        case Some(bs) => c.add.exists(f => bucketOf(f).forall(bs.contains))
-        case None     => mayMatchPredicate(keyAtoms)(c)
-      },
-      schemaJson = () => unionSchemaJson(merged.schema),
-      Map("numOutputFiles" -> add.size.toString,
-        "numRewrittenFiles" -> oldFiles.size.toString),
-      stats, changes = changeFiles)
+    // the batch may bring new columns: the commit records the union
+    replaceWith("upsert", snap0.version, oldFiles, merged, Map.empty, mayOverlap,
+      changes = changeFiles, evolveSchema = true)
   }
 
-  /** Data-skipping atoms bounding a keyed batch: per key column, the
-    * batch's [min, max] as range conjuncts — ONE tiny aggregate over the
-    * batch. A key whose batch values are all NULL contributes nothing
-    * (NULL equals no stored key, so it constrains no file); if no key
-    * yields a range the result degrades to [[PredOpaque]] (no pruning,
-    * conservative conflicts) rather than an unsound empty-range claim. */
-  private def keyRangeAtoms(updates: DataFrame,
-      keyCols: Seq[String]): Seq[PredAtom] = {
-    val aggs = keyCols.flatMap(k =>
-      Seq(min(col(k)).as(s"__mn_$k"), max(col(k)).as(s"__mx_$k")))
-    val row = updates.agg(aggs.head, aggs.tail: _*).head()
-    val atoms = keyCols.zipWithIndex.flatMap { case (k, i) =>
+  /** The live files of `snap` a keyed batch can match, and the atoms that
+    * scope its conflicts — shared by [[upsert]] and SQL MERGE. ONE tiny
+    * aggregate bounds each key (`name -> batch expression`) to the batch's
+    * [min, max]; a file whose stats are disjoint from a range holds no
+    * matching row. A key whose batch values are all NULL matches no stored
+    * row (NULL equals nothing) and contributes no range; when EVERY key is
+    * all-NULL no file is touched (only inserts can apply) and the conflict
+    * scope degrades to [[PredOpaque]]. */
+  private[tables] def keyRangeScope(snap: LogCheckpoint, batch: DataFrame,
+      keys: Seq[(String, org.apache.spark.sql.Column)]): (Seq[String], Seq[PredAtom]) = {
+    val aggs = keys.zipWithIndex.flatMap { case ((_, c), i) =>
+      Seq(min(c).as(s"__mn$i"), max(c).as(s"__mx$i"))
+    }
+    val row = batch.agg(aggs.head, aggs.tail: _*).head()
+    val atoms = keys.zipWithIndex.flatMap { case ((k, _), i) =>
       (row.get(2 * i), row.get(2 * i + 1)) match {
         case (mn, mx) if mn != null && mx != null =>
           Seq(PredCmp(">=", k, mn), PredCmp("<=", k, mx))
         case _ => Seq.empty
       }
     }
-    if (atoms.isEmpty) Seq(PredOpaque) else atoms
+    if (atoms.isEmpty) (Seq.empty, Seq(PredOpaque)) else (pruneLive(snap, atoms), atoms)
   }
 
   /** Roll the LIVE SET back to `asOf` as a NEW commit (Delta's RESTORE):
@@ -2285,51 +2287,56 @@ final class GraftTable private (
     * recompression, no metrics churn). Returns None when the predicate
     * provably matches nothing. */
   def delete(predicate: org.apache.spark.sql.Column): Option[Commit] =
-    deleteImpl(predicate,
-      org.apache.spark.sql.graftbridge.ColumnBridge.conjuncts(predicate))
+    deleteOrUpdate(predicate,
+      org.apache.spark.sql.graftbridge.ColumnBridge.conjuncts(predicate), None)
 
-  /** [[delete]] with pre-extracted skipping atoms — the SQL DML path
+  /** The DELETE / UPDATE core behind [[delete]] (no `assignments`) and
+    * [[update]], with pre-extracted skipping atoms — the SQL DML path
     * extracts them from the ANALYZED Catalyst condition
-    * ([[ExpressionAtoms]]) instead of the ColumnNode tree. */
-  private[tables] def deleteImpl(predicate: org.apache.spark.sql.Column,
-      atoms: Seq[PredAtom]): Option[Commit] = {
+    * ([[ExpressionAtoms]]) instead of the ColumnNode tree. Only the files
+    * the atoms cannot rule out are touched: DV-marked when deletion
+    * vectors are on and the marks fit their cap ([[dvMark]]), otherwise
+    * rewritten through [[replaceWith]]. Rows where the predicate is NULL
+    * are neither deleted nor updated (SQL semantics). */
+  private[tables] def deleteOrUpdate(predicate: org.apache.spark.sql.Column,
+      atoms: Seq[PredAtom],
+      assignments: Option[Map[String, org.apache.spark.sql.Column]]): Option[Commit] = {
+    assignments.foreach(as => require(as.nonEmpty, "update requires assignments"))
+    val action = if (assignments.isEmpty) "delete" else "update"
     val snap = snapshot() // pinned: file set AND conflict base version
     val affected = pruneLive(snap, atoms)
     if (affected.isEmpty) return None
     // probed before the DV scan OR the rewrite stages anything: either
     // shape removes rows (file drops or DV binds) when it commits at all
-    preWriteGate("delete", removesRows = true)
+    preWriteGate(action, removesRows = true)
     if (effectiveSettings.deletionVectors)
-      dvMark(predicate, atoms, snap, affected, assignments = None) match {
+      dvMark(predicate, atoms, snap, affected, assignments) match {
         case Right(commit) => return commit
         case Left(_)       => () // over the cap: fall through to the rewrite
       }
-    val srcRaw = DeletionVectors.filterDeleted(
-      readDataFiles(affected, schemaOf(snap)),
-      spark, loadDvs(snap.dvFor, affected), qualifiedRootUris)
-    // CDF consumes the source twice (remaining + deleted rows)
-    val src = if (effectiveSettings.changeDataFeed) graft.ext.Parallelism.materialize(srcRaw)(effectiveSettings) else srcRaw
-    // SQL DELETE semantics: remove rows where the predicate is TRUE; rows
-    // where it is NULL are kept (a bare !predicate would drop them)
-    val remaining = src.filter(!coalesce(predicate, lit(false)))
+    val cond = coalesce(predicate, lit(false))
+    // CDF consumes the source more than once (new files + change rows)
+    val src = cdfShared(liveRows(snap, affected))
+    val (out, changeRows) = assignments match {
+      case None =>
+        (src.filter(!cond), tagged(src.filter(cond), "delete"))
+      case Some(as) =>
+        val updated = as.foldLeft(src) { case (df, (name, value)) =>
+          require(df.columns.contains(name), s"unknown column '$name' in update")
+          df.withColumn(name, when(cond, value).otherwise(col(name)))
+        }
+        (updated, tagged(src.filter(cond), "update_preimage")
+          .unionByName(tagged(updated.filter(cond), "update_postimage"),
+            allowMissingColumns = true))
+    }
     val changeFiles =
-      if (effectiveSettings.changeDataFeed)
-        Some(stageChangeRows(tagged(src.filter(coalesce(predicate, lit(false))), "delete")))
-      else None
-    val (add, stats) = stage(remaining)
-    Some(commitRewrite("delete", snap.version, add, affected,
-      mayOverlap = mayMatchPredicate(atoms),
-      // a DELETE never changes the schema: re-record the CURRENT log
-      // schema (per attempt — an interleaved append may widen it).
-      // Staging from a parquet read flips nullability, which would break
-      // catalog tables' user-specified schema equality on re-resolution.
-      schemaJson = () => currentSchemaJson.getOrElse(unionSchemaJson(remaining.schema)),
-      Map("numRewrittenFiles" -> affected.size.toString,
-        "numOutputFiles" -> add.size.toString), stats, changes = changeFiles))
+      if (effectiveSettings.changeDataFeed) Some(stageChangeRows(changeRows)) else None
+    Some(replaceWith(action, snap.version, affected, out, Map.empty,
+      mayOverlap = mayMatchPredicate(atoms), changes = changeFiles))
   }
 
-  /** The deletion-vector DML core, shared by [[deleteImpl]] (no
-    * `assignments`) and [[updateImpl]] (update = DV-mark the old row
+  /** The deletion-vector DML core of [[deleteOrUpdate]], for a delete (no
+    * `assignments`) and an update (update = DV-mark the old row
     * versions + append the new ones, Delta's DV-update shape). One scan
     * of the affected files pairs each matched row with its parquet ROW
     * POSITION (`_metadata.row_index` — the surviving rows of an already
@@ -2353,10 +2360,9 @@ final class GraftTable private (
     // bitmap. Fall back to the pruned rewrite (sound; it also flattens).
     if (affected.exists(_.contains("/"))) return Left(())
     val cond = coalesce(predicate, lit(false))
-    val raw = readDataFiles(affected, schemaOf(snap))
+    val src = liveRows(snap, affected)
     assignments.foreach(_.keys.foreach(name =>
-      require(raw.columns.contains(name), s"unknown column '$name' in update")))
-    val src = DeletionVectors.filterDeleted(raw, spark, loadDvs(snap.dvFor, affected), qualifiedRootUris)
+      require(src.columns.contains(name), s"unknown column '$name' in update")))
     // metadata columns must bind BEFORE materialization (a checkpointed
     // plan is an RDD scan with no file-source metadata to resolve)
     val matched = src
@@ -2429,43 +2435,55 @@ final class GraftTable private (
       // schema (re-read per attempt: an interleaved append may widen it).
       // Staging from a parquet read would silently flip every column
       // nullable and break catalog tables' user-specified schema check.
-      schemaJson = () => currentSchemaJson.getOrElse(unionSchemaJson(raw.schema)),
+      schemaJson = () => currentSchemaJson.getOrElse(unionSchemaJson(src.schema)),
       Map("numDeletedRows" -> totalMatched.toString,
         "numDeletionVectors" -> newDvs.size.toString,
         "numRemovedFiles" -> deadFiles.size.toString) ++ extraMetrics,
       stats, changes = changeFiles, dvs = newDvs)))
   }
 
-  /** Replace `removeFiles` of the snapshot at `baseVersion` with `merged`
-    * as one `action` commit through [[commitRewrite]] — the rewrite
-    * primitive behind SQL MERGE and the subquery DML paths.
+  /** The one rewrite primitive: stage `merged` and commit it through
+    * [[commitRewrite]] as the replacement of `removeFiles`, pinned at the
+    * snapshot of `baseVersion`. Every operation that replaces live files
+    * ends here — compaction and ZORDER ([[compactIfNeeded]]), bin-pack
+    * [[optimize]], [[purgeDeletionVectors]], the rewrite arm of
+    * DELETE/UPDATE, [[upsert]], SQL MERGE and the subquery DML paths.
     *
-    *  - `atoms`: the skipping atoms that SCOPED the rewrite (the MERGE's
-    *    source-key ranges, a DELETE's condition conjuncts). They drive the
-    *    conflict probe: an interleaved append whose stats prove disjoint
-    *    keys retries safely instead of conflicting. `PredOpaque` (default)
-    *    keeps the conservative any-add-conflicts behavior.
-    *  - `evolveSchema`: commit the UNION of the current log schema and the
-    *    frame's (MERGE `WITH SCHEMA EVOLUTION` — the additive contract
-    *    [[append]] implements); default re-records the current schema. */
+    *  - `mayOverlap`: the conflict scope [[commitRewrite]] probes
+    *    interleaved adds with — a predicate-scoped rewrite passes
+    *    [[mayMatchPredicate]] of its atoms (an interleaved append whose
+    *    stats prove disjoint keys retries safely), a bucketed upsert its
+    *    key buckets, a row-preserving maintenance rewrite `_ => false`.
+    *  - `dataChange = false`: the rewrite preserves rows exactly — it is
+    *    invisible to incremental consumers, stays allowed on append-only
+    *    tables, and counts its removes as `numRemovedFiles` where a data
+    *    change counts `numRewrittenFiles`.
+    *  - schema rule: the commit records the CURRENT log schema, re-read
+    *    per attempt (an interleaved append may widen it) — never a schema
+    *    derived from the staged frame, whose parquet read turned every
+    *    column nullable (a catalog table's user-specified schema would
+    *    then stop matching). `evolveSchema` (upsert, MERGE `WITH SCHEMA
+    *    EVOLUTION`) records the union of the current schema and the
+    *    frame's instead — the additive contract [[append]] implements. */
   private[tables] def replaceWith(action: String, baseVersion: Long,
       removeFiles: Seq[String], merged: DataFrame,
       metrics: Map[String, String],
-      atoms: Seq[PredAtom] = Seq(PredOpaque),
+      mayOverlap: Commit => Boolean,
       changes: Option[Seq[String]] = None,
-      evolveSchema: Boolean = false): Commit = {
-    // backstop for SQL DML callers (their entry points pre-gate earlier,
-    // before CDF change rows stage — this covers any future caller)
-    preWriteGate(action, removesRows = removeFiles.nonEmpty)
+      evolveSchema: Boolean = false,
+      dataChange: Boolean = true): Commit = {
+    // backstop for every caller (DML entry points pre-gate earlier, before
+    // CDF change rows stage): only a data-changing remove is gated
+    preWriteGate(action, removesRows = dataChange && removeFiles.nonEmpty)
     val (add, stats) = stage(merged)
-    commitRewrite(action, baseVersion, add, removeFiles,
-      mayOverlap = mayMatchPredicate(atoms),
+    commitRewrite(action, baseVersion, add, removeFiles, mayOverlap,
       schemaJson = () =>
         if (evolveSchema) unionSchemaJson(merged.schema)
         else currentSchemaJson.getOrElse(unionSchemaJson(merged.schema)),
       metrics ++ Map("numOutputFiles" -> add.size.toString,
-        "numRewrittenFiles" -> removeFiles.size.toString),
-      stats, changes = changes)
+        (if (dataChange) "numRewrittenFiles" else "numRemovedFiles") ->
+          removeFiles.size.toString),
+      stats, changes = changes, dataChange = dataChange)
   }
 
   /** Conflict probe for predicate-scoped rewrites: can an interleaved
@@ -2474,7 +2492,7 @@ final class GraftTable private (
     * interleaved append whose stats prove disjoint key ranges is safe to
     * retry over; missing stats or opaque predicates stay conservative
     * (conflict). */
-  private def mayMatchPredicate(atoms: Seq[PredAtom])(c: Commit): Boolean =
+  private[tables] def mayMatchPredicate(atoms: Seq[PredAtom])(c: Commit): Boolean =
     pruneLive(
       LogCheckpoint(c.version, c.add, Some(c.schemaJson), c.stats.getOrElse(Map.empty)),
       atoms).nonEmpty
@@ -2485,55 +2503,15 @@ final class GraftTable private (
     * (SQL semantics). Returns None when no file can contain a match. */
   def update(predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column]): Option[Commit] =
-    updateImpl(predicate,
-      org.apache.spark.sql.graftbridge.ColumnBridge.conjuncts(predicate), assignments)
-
-  /** [[update]] with pre-extracted skipping atoms (see [[deleteImpl]]). */
-  private[tables] def updateImpl(predicate: org.apache.spark.sql.Column,
-      atoms: Seq[PredAtom],
-      assignments: Map[String, org.apache.spark.sql.Column]): Option[Commit] = {
-    require(assignments.nonEmpty, "update requires assignments")
-    val snap = snapshot() // pinned: file set AND conflict base version
-    val affected = pruneLive(snap, atoms)
-    if (affected.isEmpty) return None
-    // same pre-stage probe as deleteImpl: both the DV path and the
-    // rewrite path remove/rewrite rows when they commit
-    preWriteGate("update", removesRows = true)
-    if (effectiveSettings.deletionVectors)
-      dvMark(predicate, atoms, snap, affected, Some(assignments)) match {
-        case Right(commit) => return commit
-        case Left(_)       => () // over the cap: fall through to the rewrite
-      }
-    val cond = coalesce(predicate, lit(false))
-    val srcRaw = DeletionVectors.filterDeleted(
-      readDataFiles(affected, schemaOf(snap)),
-      spark, loadDvs(snap.dvFor, affected), qualifiedRootUris)
-    // CDF consumes the source three times (rewrite + pre/postimage)
-    val src = if (effectiveSettings.changeDataFeed) graft.ext.Parallelism.materialize(srcRaw)(effectiveSettings) else srcRaw
-    val updated = assignments.foldLeft(src) { case (df, (name, value)) =>
-      require(df.columns.contains(name), s"unknown column '$name' in update")
-      df.withColumn(name, when(cond, value).otherwise(col(name)))
-    }
-    val changeFiles =
-      if (effectiveSettings.changeDataFeed)
-        Some(stageChangeRows(
-          tagged(src.filter(cond), "update_preimage")
-            .unionByName(tagged(updated.filter(cond), "update_postimage"),
-              allowMissingColumns = true)))
-      else None
-    val (add, stats) = stage(updated)
-    Some(commitRewrite("update", snap.version, add, affected,
-      mayOverlap = mayMatchPredicate(atoms),
-      // UPDATE SET never changes the schema (see the DELETE note)
-      schemaJson = () => currentSchemaJson.getOrElse(unionSchemaJson(updated.schema)),
-      Map("numRewrittenFiles" -> affected.size.toString,
-        "numOutputFiles" -> add.size.toString), stats, changes = changeFiles))
-  }
+    deleteOrUpdate(predicate,
+      org.apache.spark.sql.graftbridge.ColumnBridge.conjuncts(predicate), Some(assignments))
 
   /** Small-file compaction (reference `jibaro/datalake/delta_handler.py:9-35`):
-    * when the live file count exceeds `maxFiles`, rewrite to
-    * ceil(totalBytes / compactTargetBytes) files with dataChange=false so
-    * incremental consumers skip the rewrite. Returns the commit if run. */
+    * when the live file count exceeds `maxFiles`, rewrite the whole table
+    * to ceil(totalBytes / compactTargetBytes) files with dataChange=false
+    * so incremental consumers skip the rewrite. Like every maintenance
+    * rewrite it goes through [[replaceWith]] and records the table's
+    * current schema, nullability included. Returns the commit if run. */
   def compactIfNeeded(
       maxFiles: Int = effectiveSettings.maxNumFilesAllowed): Option[Commit] =
     compactWith(maxFiles, (df, target) => df.repartition(target))
@@ -2554,53 +2532,65 @@ final class GraftTable private (
         .sortWithinPartitions(clusterCols.map(col): _*))
   }
 
-  /** Small-file compaction core (reference `jibaro/datalake/delta_handler
-    * .py:9-35`): when the live file count exceeds `maxFiles`, rewrite to
-    * ceil(totalBytes / compactTargetBytes) files with dataChange=false so
-    * incremental consumers skip the rewrite. */
+  /** Whole-table compaction's file selection: every live file, once their
+    * count exceeds `maxFiles`. */
   private def compactWith(maxFiles: Int,
-      rewrite: (DataFrame, Int) => DataFrame): Option[Commit] = {
+      shape: (DataFrame, Int) => DataFrame): Option[Commit] = {
     val snap = snapshot()
     val files = snap.live
     if (files.size <= maxFiles) return None
     // a bucketed stage writes one file per bucket, so a table whose every
     // file carries a distinct bucket id would come back file for file;
     // files without a bucket id (legacy flat writes) still compact
-    val spec = bucketSpec
     val ids = files.map(bucketOf)
-    if (spec.isDefined && ids.forall(_.isDefined) && ids.distinct.size == ids.size)
+    if (bucketSpec.isDefined && ids.forall(_.isDefined) && ids.distinct.size == ids.size)
       return None
-    // log-recorded sizes when present (zero metadata RPCs); HEAD only for
-    // files from pre-stats commits
-    val totalBytes = files.map(f => snap.stats.get(f).flatMap(_.bytes)
-      .getOrElse(fs.getFileStatus(new Path(path, f)).getLen)).sum
-    val target = math.max(1, math.ceil(totalBytes.toDouble / effectiveSettings.compactTargetBytes).toInt)
-    // read EXACTLY the pinned file set, never a fresh snapshot: a commit
-    // landing between the pin and the read would have its rows baked into
-    // the compacted output while staying live itself — every one of its
-    // rows served twice, hidden from incremental consumers by
-    // dataChange=false. DVs of the pinned snapshot apply like any read.
-    val live = DeletionVectors.filterDeleted(
-      readDataFiles(files, schemaOf(snap)), spark,
-      loadDvs(snap.dvFor, files), qualifiedRootUris)
-    // [[stage]] routes a bucketed table's rows by bucket itself, so a
-    // rewrite shuffle before it would be thrown away
+    Some(rewriteMaintenance("compact", snap, files, compactedBytes, shape))
+  }
+
+  private val compactedBytes: Long => Map[String, String] =
+    bytes => Map("numCompactedBytes" -> bytes.toString)
+
+  /** A live file's size: the log-recorded bytes (zero metadata RPCs), else
+    * one HEAD for a file from a pre-stats commit. */
+  private def fileBytes(snap: LogCheckpoint, f: String): Long =
+    snap.stats.get(f).flatMap(_.bytes)
+      .getOrElse(fs.getFileStatus(new Path(path, f)).getLen)
+
+  /** The live rows of `files` as pinned by `snap`: read under the
+    * snapshot's recorded schema with the snapshot's deletion vectors
+    * applied — the one read every rewrite's source goes through. Never a
+    * fresh snapshot: a commit landing between the pin and the read would
+    * have its rows baked into the rewrite while staying live itself. A
+    * pre-evolution file's missing columns read as NULL, and a
+    * column-mapped table reads its physical names. */
+  private def liveRows(snap: LogCheckpoint, files: Seq[String]): DataFrame =
+    DeletionVectors.filterDeleted(readDataFiles(files, schemaOf(snap)),
+      spark, loadDvs(snap.dvFor, files), qualifiedRootUris)
+
+  /** The maintenance core under [[compactIfNeeded]], [[optimize]] and
+    * [[purgeDeletionVectors]], which only choose `files`: sizes them,
+    * reads their live rows pinned at `snap`, shapes the rows into
+    * ceil(bytes / compactTargetBytes) partitions with `shape`, and commits
+    * the row-preserving replacement (dataChange=false) through
+    * [[replaceWith]]. A bucketed table is not shaped: [[stage]] routes its
+    * rows by bucket itself, so a shuffle before it would be thrown away.
+    * The rewritten files are the read set — an interleaved rewrite or DV
+    * bind on one conflicts instead of having its rows resurrected;
+    * interleaved appends are disjoint. `metrics` gets the bytes read. */
+  private def rewriteMaintenance(action: String, snap: LogCheckpoint,
+      files: Seq[String], metrics: Long => Map[String, String],
+      shape: (DataFrame, Int) => DataFrame = (df, target) => df.repartition(target))
+      : Commit = {
+    val totalBytes = files.map(fileBytes(snap, _)).sum
+    val target = math.max(1,
+      math.ceil(totalBytes.toDouble / effectiveSettings.compactTargetBytes).toInt)
+    val live = liveRows(snap, files)
     val df =
-      if (spec.exists(_.keys.forall(live.columns.contains))) live
-      else rewrite(live, target)
-    val (add, stats) = stage(df)
-    // conflict-checked commit (base = the pinned version): an interleaved
-    // rewrite/DV bind on a compacted file means our output holds rows that
-    // no longer exist — fail loudly; interleaved appends are disjoint and
-    // land the compact against the new base verbatim
-    Some(commitRewrite("compact", snap.version, add, files,
-      mayOverlap = _ => false,
-      schemaJson = () => unionSchemaJson(df.schema),
-      Map("numOutputFiles" -> add.size.toString,
-        "numRemovedFiles" -> files.size.toString,
-        "numCompactedBytes" -> totalBytes.toString),
-      stats,
-      dataChange = false))
+      if (bucketSpec.exists(_.keys.forall(live.columns.contains))) live
+      else shape(live, target)
+    replaceWith(action, snap.version, files, df, metrics(totalBytes),
+      mayOverlap = _ => false, dataChange = false)
   }
 
   /** Delta's FSCK REPAIR TABLE: drop log references to live data files
@@ -2679,7 +2669,9 @@ final class GraftTable private (
     * rewrite (Delta's ZORDER also re-clusters everything — clustering is
     * a whole-table property). `dataChange=false` either way, so
     * incremental consumers skip it. On a bucketed table the bin-packed
-    * rows re-route through the bucket writer, preserving the layout. */
+    * rows re-route through the bucket writer, preserving the layout. Both
+    * shapes commit through [[replaceWith]] and record the table's current
+    * schema, nullability included. */
   def optimize(zorderBy: Seq[String] = Seq.empty,
       where: Option[org.apache.spark.sql.Column] = None): Option[Commit] = {
     if (zorderBy.nonEmpty) {
@@ -2701,82 +2693,37 @@ final class GraftTable private (
     * small live files and one DV, a full [[optimize]] would rewrite the
     * entire small-file tail for a purge that needs exactly one file.
     * `dataChange = false` — logical rows are unchanged, incremental
-    * consumers skip it. None when no DV is live. */
+    * consumers skip it; the commit goes through [[replaceWith]] and
+    * records the table's current schema. None when no DV is live. */
   def purgeDeletionVectors(): Option[Commit] = {
     val snap = snapshot()
-    val dvNow = snap.dvFor
-    val victims = snap.live.filter(dvNow.contains)
-    if (victims.isEmpty) return None
-    val stored = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson.get)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val totalBytes = victims.map(f => snap.stats.get(f).flatMap(_.bytes)
-      .getOrElse(fs.getFileStatus(new Path(path, f)).getLen)).sum
-    val target = math.max(1,
-      math.ceil(totalBytes.toDouble / effectiveSettings.compactTargetBytes).toInt)
-    val df = DeletionVectors.filterDeleted(
-      readDataFiles(victims, schemaOf(snap)), spark,
-      loadDvs(dvNow, victims), qualifiedRootUris)
-      .repartition(target)
-    val (add, stats) = stage(df)
-    Some(commitRewrite("purge", snap.version, add, victims,
-      mayOverlap = _ => false,
-      schemaJson = () => unionSchemaJson(stored),
-      Map("numOutputFiles" -> add.size.toString,
-        "numRemovedFiles" -> victims.size.toString,
-        "numPurgedDeletionVectors" -> victims.size.toString),
-      stats,
-      dataChange = false))
+    val victims = snap.live.filter(snap.dvFor.contains)
+    if (victims.isEmpty) None
+    else Some(rewriteMaintenance("purge", snap, victims,
+      _ => Map("numPurgedDeletionVectors" -> victims.size.toString)))
   }
 
-  /** The bin-packing core, scoped by pre-extracted predicate atoms (the
-    * SQL `OPTIMIZE ... WHERE` entry): only small files whose stats MAY
-    * match every atom are packed. The over-approximation is sound —
-    * compaction preserves rows exactly, so packing a file the predicate
-    * would not have selected costs a rewrite, never correctness. Delta's
-    * WHERE selects partitions exactly; file stats are our partition
-    * analogue. Empty `atoms` = whole table. */
+  /** The bin-packing file selection, scoped by pre-extracted predicate
+    * atoms (the SQL `OPTIMIZE ... WHERE` entry): only small files whose
+    * stats MAY match every atom are packed. The over-approximation is
+    * sound — compaction preserves rows exactly, so packing a file the
+    * predicate would not have selected costs a rewrite, never
+    * correctness. Delta's WHERE selects partitions exactly; file stats are
+    * our partition analogue. Empty `atoms` = whole table. */
   private[tables] def optimizeScoped(atoms: Seq[PredAtom]): Option[Commit] = {
     val snap = snapshot()
     if (snap.live.size <= 1 && snap.dvFor.isEmpty) return None
     val inScope: String => Boolean =
       if (atoms.isEmpty) _ => true else pruneLive(snap, atoms).toSet
-    val logged = snap.stats
-    def sizeOf(f: String): Long =
-      logged.get(f).flatMap(_.bytes)
-        .getOrElse(fs.getFileStatus(new Path(path, f)).getLen)
     // DV PURGE rides along (Delta's OPTIMIZE does the same): any in-scope
     // file carrying a deletion vector is a rewrite candidate regardless of
     // size — rewriting it materializes the surviving rows and drops the
     // bitmap, restoring the vectorized read path for that data
     val dvNow = snap.dvFor
     val small = snap.live.filter(f => inScope(f) &&
-      (dvNow.contains(f) || sizeOf(f) < effectiveSettings.compactTargetBytes))
+      (dvNow.contains(f) || fileBytes(snap, f) < effectiveSettings.compactTargetBytes))
     if (small.size <= 1 && !small.exists(dvNow.contains)) return None
-    val totalBytes = small.map(sizeOf).sum
-    val target = math.max(1, math.ceil(totalBytes.toDouble / effectiveSettings.compactTargetBytes).toInt)
-    // read the small files under the LOG schema: a pre-evolution file's
-    // missing columns land as NULL, and the packed output carries the
-    // full current schema. Mapping-active snapshots route through the
-    // physical-name read; the rewrite also sheds tombstone columns'
-    // bytes (old versions still read the ORIGINAL files — time travel
-    // is untouched by a dataChange=false rewrite).
-    val stored = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson.get)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val packed = readDataFiles(small, schemaOf(snap))
-    val df = DeletionVectors.filterDeleted(packed, spark, loadDvs(dvNow, small), qualifiedRootUris)
-      .repartition(target)
-    val (add, stats) = stage(df)
-    // the bin-packed files are the read set: an interleaved rewrite/DV
-    // bind on one conflicts instead of having its pre-rewrite rows
-    // resurrected by this commit
-    Some(commitRewrite("compact", snap.version, add, small,
-      mayOverlap = _ => false,
-      schemaJson = () => unionSchemaJson(stored),
-      Map("numOutputFiles" -> add.size.toString,
-        "numRemovedFiles" -> small.size.toString,
-        "numCompactedBytes" -> totalBytes.toString),
-      stats,
-      dataChange = false))
+    Some(rewriteMaintenance("compact", snap, small, compactedBytes))
   }
 
   /** External-reader manifest (the reference generates Delta's

@@ -278,7 +278,7 @@ class DeletionVectorSpec extends SparkSpecBase {
     t.append((1 to 30).map(i => (i, i * 10)).toDF("id", "amt").coalesce(1))
     spark.sql(s"DROP TABLE IF EXISTS dv_sql_t")
     spark.sql(s"CREATE TABLE dv_sql_t USING graft LOCATION '$path'")
-    // SQL DML routes through deleteImpl/updateImpl -> DV path is automatic
+    // SQL DML routes through deleteOrUpdate -> DV path is automatic
     // only when the session default settings enable it; call the API here
     t.delete(col("id") <= 5)
     assert(spark.sql("SELECT count(*) FROM dv_sql_t").head().getLong(0) === 25)

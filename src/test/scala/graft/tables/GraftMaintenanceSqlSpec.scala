@@ -93,6 +93,19 @@ class GraftMaintenanceSqlSpec extends AnyFunSuite {
     assert(t.read().count() === 800)
   }
 
+  test("OPTIMIZE ZORDER BY keeps a catalog table's NOT NULL column: DELETE and SELECT still resolve") {
+    import spark.implicits._
+    val p = freshPath()
+    val t = GraftTable(spark, p)(GraftSettings.default)
+    (1 to 3).foreach(i => t.append(Seq((i.toLong, s"v$i")).toDF("id", "v")))
+    spark.sql("DROP TABLE IF EXISTS maint_zorder_nn")
+    spark.sql(s"CREATE TABLE maint_zorder_nn USING graft LOCATION '$p'")
+    assert(!spark.table("maint_zorder_nn").schema("id").nullable)
+    spark.sql("OPTIMIZE maint_zorder_nn ZORDER BY (id)").collect()
+    spark.sql("DELETE FROM maint_zorder_nn WHERE id = 1")
+    assert(spark.sql("SELECT count(*) FROM maint_zorder_nn").head().getLong(0) === 2L)
+  }
+
   test("optimize bin-packs ONLY sub-target files; already-compact files are never rewritten") {
     import spark.implicits._
     val p = freshPath()

@@ -206,6 +206,9 @@ class GraftProtocolSpec extends SparkSpecBase {
     val root = tmp()
     val t = GraftTable(spark, s"$root/t")(GraftSettings.default)
     t.append((1 to 10).map(i => (i, s"v$i")).toDF("id", "v"))
+    // a deletion vector bound before the property: the purge below has one
+    GraftTable(spark, s"$root/t")(GraftSettings(deletionVectors = true))
+      .delete(col("id") === 5)
     t.setProperties(Map("append_only" -> "true"))
     t.append(Seq((11, "k")).toDF("id", "v")) // appends stay allowed
     def refusedAppendOnly(body: => Any): Unit = {
@@ -215,15 +218,22 @@ class GraftProtocolSpec extends SparkSpecBase {
     refusedAppendOnly(t.delete(col("id") === 3))
     refusedAppendOnly(t.update(col("id") === 3, Map("v" -> lit("x"))))
     refusedAppendOnly(t.overwrite(Seq((1, "z")).toDF("id", "v")))
+    refusedAppendOnly(t.upsert(Seq((3, "x", "u")).toDF("id", "v", "op"), Seq("id"), "op"))
     // a row-preserving rewrite (dataChange=false) is NOT a data change:
-    // compaction/OPTIMIZE keep working (Delta's appendOnly semantics)
-    t.optimize()
-    assert(t.read().count() === 11)
+    // purge, ZORDER, compaction and OPTIMIZE keep working (Delta's
+    // appendOnly semantics)
+    assert(t.purgeDeletionVectors().exists(!_.dataChange))
+    assert(t.optimize(zorderBy = Seq("id")).exists(!_.dataChange))
+    t.append(Seq((12, "l")).toDF("id", "v"))
+    assert(t.compactIfNeeded(maxFiles = 1).exists(!_.dataChange))
+    t.append(Seq((13, "m")).toDF("id", "v"))
+    assert(t.optimize().exists(!_.dataChange))
+    assert(t.read().count() === 12)
     // unsetting the property lifts the refusal (this binary-side policy;
     // the writer-feature union stays monotone like Delta's protocol)
     t.unsetProperties(Seq("append_only"))
     t.delete(col("id") === 3)
-    assert(t.read().count() === 10)
+    assert(t.read().count() === 11)
   }
 
   test("a future WRITER feature lets every read surface serve but refuses every commit, feature named") {

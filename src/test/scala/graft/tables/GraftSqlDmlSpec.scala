@@ -462,7 +462,7 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     // NaN and 1.0 match (update), Infinity misses (insert)
     assert(spark.table("nan_t").as[(Double, String)].collect().map(_._2).toSet ===
       Set("ONE", "b", "NAN", "INF"))
-    // the API upsert's keyRangeAtoms hit the same litCmp path
+    // the API upsert's keyRangeScope hits the same litCmp path
     val t2 = GraftTable(spark, s"$dir/t2")(GraftSettings.default)
     t2.append(Seq((1.0, "a"), (Double.NaN, "n")).toDF("k", "v"))
     t2.upsert(Seq((Double.NaN, "NAN2", "u"), (5.0, "FIVE", "c")).toDF("k", "v", "op"),

@@ -736,6 +736,41 @@ class GraftTableSpec extends SparkSpecBase {
     assert(replayed === now)
   }
 
+  test("change files read under the commit's schema serve the rows a footer-merged read gives") {
+    val t = cdfTable()
+    t.append(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))          // v1
+    t.upsert(Seq((2, "B", 20L, "u"), (4, "d", 40L, "c"), (3, "c", 0L, "d"))
+      .toDF("id", "v", "w", "op"), Seq("id"), "op")                      // v2: adds w
+    t.renameColumn("v", "label")                                          // v3
+    t.update(col("id") === 1, Map("label" -> lit("A")))                   // v4
+    t.delete(col("id") === 4)                                             // v5
+    val withChanges = t.commits().filter(_.changes.exists(_.nonEmpty))
+    assert(withChanges.map(_.version) === Seq(2L, 4L, 5L))
+    withChanges.foreach { c =>
+      val merged = spark.read.option("mergeSchema", "true")
+        .parquet(c.changes.get.map(f => s"${t.path}/$f"): _*)
+      val served = t.readChanges(c.version - 1, c.version).drop("_commit_version")
+      // the served frame may add columns no change file holds; they are NULL
+      val extra = served.columns.filterNot(merged.columns.contains)
+      extra.foreach(x => assert(served.filter(col(x).isNotNull).isEmpty, s"v${c.version} $x"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(merged.columns.map(col): _*).collect().map(_.toString).sorted.toSeq
+      assert(rows(served) === rows(merged), s"v${c.version}")
+    }
+  }
+
+  test("an all-NULL-key upsert rewrites no file of an unbucketed table") {
+    val t = tmpTable()
+    t.append(Seq((Option(1), "a"), (Option(2), "b")).toDF("id", "v"))
+    t.append(Seq((Option(3), "c")).toDF("id", "v"))
+    // NULL equals no stored key: the batch can only insert
+    val c = t.upsert(Seq((Option.empty[Int], "n", "c")).toDF("id", "v", "op"), Seq("id"), "op")
+    assert(c.metrics("numRewrittenFiles") === "0")
+    assert(c.remove.isEmpty)
+    assert(t.read().as[(Option[Int], String)].collect().toSet ===
+      Set((Some(1), "a"), (Some(2), "b"), (Some(3), "c"), (None, "n")))
+  }
+
   test("change data feed: version ranges, overwrite synthesis, non-CDF DML refuses") {
     val t = cdfTable()
     t.append(Seq((1, "a")).toDF("id", "v"))         // v1
