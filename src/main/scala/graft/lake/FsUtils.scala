@@ -1,7 +1,8 @@
 package graft.lake
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path, UnsupportedFileSystemException}
 import org.apache.spark.sql.SparkSession
+import java.util.UUID
 
 /** Filesystem utilities (reference `jibaro/utils.py:11-34` — `path_exists`,
   * `delete_path`). The reference reaches the Hadoop FS through py4j; we call
@@ -65,31 +66,37 @@ object FsUtils {
     }
   }
 
-  /** Replace a cursor file's Long with `v` through `.<name>.tmp` beside it
-    * and a single OVERWRITE rename — no delete-then-rename window where a
-    * crash loses the cursor and the next run replays its WHOLE history. A
-    * crash before the rename keeps the old value (at-least-once), never
-    * progress that was not made. */
-  def writeLong(spark: SparkSession, file: Path, v: Long): Unit = {
+  /** Replace a cursor file's Long with `v` ([[replaceFile]]): a crash
+    * keeps the old value (at-least-once), never progress that was not
+    * made, and never no cursor at all — which would replay the consumer's
+    * WHOLE history. */
+  def writeLong(spark: SparkSession, file: Path, v: Long): Unit =
+    replaceFile(spark, file, v.toString.getBytes("UTF-8"))
+
+  /** Replace `file`'s content with `bytes`: readers see the old content
+    * or the new, never neither. The bytes go to a unique
+    * `.<name>.<uuid>.tmp` beside the file and one rename moves them over
+    * it — a plain rename where the store's rename overwrites (POSIX), the
+    * store's OVERWRITE rename where it refuses an existing destination
+    * (HDFS). The old file is never deleted first: a failed replace removes
+    * its tmp file and throws naming `file`, which keeps its content. */
+  def replaceFile(spark: SparkSession, file: Path, bytes: Array[Byte]): Unit = {
     val f = fs(spark, file.toString)
     f.mkdirs(file.getParent)
-    val tmp = new Path(file.getParent, s".${file.getName}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8"))
+    val tmp = new Path(file.getParent, s".${file.getName}.${UUID.randomUUID()}.tmp")
+    val out = f.create(tmp, false)
+    try out.write(bytes)
     finally out.close()
-    try
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(f.getUri, spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, file, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        // connectors without an AbstractFileSystem binding (only
-        // file/hdfs/viewfs and the big-cloud schemes ship one) fall back
-        // to delete+rename: a small non-atomic window beats never
-        // advancing the cursor
-        f.delete(file, false)
-        if (!f.rename(tmp, file))
-          throw new IllegalStateException(s"failed to write cursor $file")
-    }
+    def overwriteRename(): Boolean =
+      try {
+        FileContext.getFileContext(f.getUri, spark.sparkContext.hadoopConfiguration)
+          .rename(tmp, file, Options.Rename.OVERWRITE)
+        true
+      } catch { case _: UnsupportedFileSystemException => false }
+    var replaced = false
+    try replaced = f.rename(tmp, file) || overwriteRename()
+    finally if (!replaced) f.delete(tmp, false)
+    if (!replaced) throw new IllegalStateException(
+      s"failed to replace $file: the filesystem refused to rename $tmp over it")
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A table in this log requires a reader capability this binary does not
   * have. Deliberately its own type: the checkpoint-selection fallback in
-  * [[GraftTable.snapshot]] swallows UNREADABLE checkpoints (corruption —
+  * [[GraftLog.snapshot]] swallows UNREADABLE checkpoints (corruption —
   * an optimization, never a correctness input) but must NOT swallow this —
   * an unsupported table is a refusal, not a degrade. */
 final class UnsupportedTableFeatureException(msg: String)
@@ -71,15 +71,16 @@ object GraftProtocol {
   // can READ such a table could still commit rows that violate it — rows
   // breaking a CHECK constraint, DML without its change-data files,
   // removals on a table consumers trust to be append-only. The gate is
-  // therefore on COMMITS: [[GraftTable.stampFeatures]], run on every
-  // attempt of the one commit funnel ([[GraftTable.commitRewrite]]),
+  // therefore on COMMITS: [[GraftLog.stampFeatures]], run on every
+  // attempt of the one commit funnel ([[GraftLog.commitRewrite]]),
   // refuses when the table's recorded union holds a writer feature
   // outside [[WriterFeatures]], with the feature named; every read surface serves unchanged. Like the reader set, the
   // union is monotone (Delta never auto-downgrades protocol) and absent
   // fields decode as baseline, so pre-gate tables write unchanged.
 
-  /** Table has persisted CHECK constraints: a writer that ignores
-    * `_graft_log/_constraints.json` could commit violating rows. */
+  /** Table declares CHECK constraints in its constraints sidecar
+    * (`_graft_log/_constraints.json`, owned by [[GraftLog]]): a writer
+    * that ignores the sidecar could commit violating rows. */
   final val CheckConstraints = "check_constraints"
   /** Table expects row-level change data on DML (change_data_feed property
     * or commits that already recorded change files): a writer that ignores
@@ -114,7 +115,7 @@ object GraftProtocol {
     * derived where the log itself carries the evidence (recorded change
     * files); state-derived for the sidecar-declared expectations the
     * caller passes in (constraints present, `change_data_feed` /
-    * `append_only` table properties) — [[GraftTable.stampFeatures]] is the
+    * `append_only` table properties) — [[GraftLog.stampFeatures]] is the
     * single call site, so no write path can skip the stamp. None when
     * baseline: the common commit pays zero extra log bytes. */
   def writerFeaturesOf(c: Commit, hasCheckConstraints: Boolean,
@@ -152,7 +153,7 @@ object GraftProtocol {
 
   /** Does this schema JSON carry column-mapping state? Shared by the
     * per-commit stamp and the snapshot's content-derived union (the
-    * pre-gate-history self-heal in [[GraftTable.snapshot]]). */
+    * pre-gate-history self-heal in [[GraftLog.snapshot]]). */
   private[tables] def schemaRequiresMapping(schemaJson: String): Boolean = {
     if (schemaJson == null || schemaJson.isEmpty) return false
     val cached = schemaProbeCache.get(schemaJson)

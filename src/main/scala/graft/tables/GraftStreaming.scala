@@ -118,7 +118,7 @@ private[tables] trait GraftSourceAdmission
     * atomic admission unit; Delta caps the same way), and dataChange=false
     * commits ride along for free. No data commits at all jumps straight
     * to `head` (nothing to rate-limit). O(range) log parses per call via
-    * [[GraftTable.commitsInRange]]; bytes are weighed only under a byte
+    * [[GraftLog.commitsInRange]]; bytes are weighed only under a byte
     * cap (no HEADs otherwise). */
   protected final def cappedTail(fromV: Long, head: Long,
       maxF: Option[Int], maxB: Option[Long]): GraftOffset = {

@@ -5,140 +5,32 @@ import graft.lake.FsUtils
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.json4s._
-import org.json4s.jackson.JsonMethods
-import org.json4s.jackson.Serialization
 import java.util.UUID
-
-/** One table commit: which files became live/dead at this version.
-  *
-  * `dataChange = false` marks rewrites (compaction) that MUST NOT re-trigger
-  * incremental consumers — the reference relies on Delta's identical flag
-  * (`jibaro/datalake/delta_handler.py:30`).
-  */
-final case class Commit(
-    version: Long,
-    action: String,
-    dataChange: Boolean,
-    timestampMs: Long,
-    add: Seq[String],
-    remove: Seq[String],
-    schemaJson: String,
-    metrics: Map[String, String],
-    stats: Option[Map[String, FileStats]] = None,
-    /** Row-level change files under `_graft_changes/` (Delta CDF-style),
-      * recorded by DML commits when `settings.changeDataFeed` is on.
-      * `None` = not recorded (pre-CDF commit or feature off); `Some(Nil)`
-      * = recorded and the batch produced no change rows. Absent in older
-      * logs — json4s decodes the missing field as None. */
-    changes: Option[Seq[String]] = None,
-    /** DELETION-VECTOR rebindings: data file -> sidecar under
-      * `_graft_dv/` ([[DeletionVectors]]). An entry REPLACES the file's
-      * previous binding (a second delete writes the merged sidecar); the
-      * [[DeletionVectors.Cleared]] sentinel value clears it (restore).
-      * Absent in pre-DV logs. */
-    dvs: Option[Map[String, String]] = None,
-    /** Reader features this commit's CONTENT depends on (Delta's
-      * readerFeatures — see [[GraftProtocol]]). Stamped from content at
-      * write time; a reader refuses any feature it does not know before
-      * serving a row. Absent (= baseline) in pre-gate logs AND on
-      * baseline commits, so the common commit pays zero extra bytes. */
-    features: Option[Seq[String]] = None,
-    /** WRITER features the table holds its writers to as of this commit
-      * (Delta's writerFeatures — see [[GraftProtocol]]): CHECK
-      * constraints present, change-data-feed expected, append-only
-      * declared. A writer refuses to COMMIT to a table requiring a
-      * writer feature it does not uphold; reads are never gated by
-      * these. Absent (= baseline) in pre-gate logs and on baseline
-      * commits. */
-    writerFeatures: Option[Seq[String]] = None)
-
-/** Per-column stats of one data file, in portable string form:
-  * numerics/strings/dates as their cast-to-string value, timestamps as
-  * epoch MICROS (decimal strings don't order lexicographically; micros
-  * do compare numerically). `None` min/max = all-null column. */
-final case class ColStats(min: Option[String], max: Option[String], nulls: Long)
-
-/** Row count + per-column stats of one data file — the data-skipping
-  * index. At 100 TB this is the difference between scanning a table and
-  * scanning the handful of files a selective predicate can touch; the
-  * log stays KB-sized because stats hold two scalars per column per FILE
-  * (files are ~128 MB). Delta/Iceberg keep the identical structure.
-  * `bytes` is the file's on-disk size, captured for free at staging time
-  * (Delta records the same `size` per add-file): byte-capped streaming
-  * admission reads it from the log instead of paying one metadata HEAD
-  * per file. None on pre-existing commits — consumers fall back. */
-final case class FileStats(rows: Long, cols: Map[String, ColStats],
-    bytes: Option[Long] = None)
-
-/** Hash-bucketed layout: rows land in `pmod(xxhash64(keys), numBuckets)`
-  * and file names carry their bucket (`b<K>-...`). With a spec set, CDC
-  * upserts rewrite ONLY the buckets containing updated keys — at 100 TB
-  * the difference between an O(batch) and an O(table) merge. */
-final case class BucketSpec(keys: Seq[String], numBuckets: Int) {
-  require(keys.nonEmpty && numBuckets > 0, "bucket spec needs keys and buckets")
-}
-
-/** The fully-replayed table state as of `version` — what a reader needs to
-  * serve CURRENT-state queries without touching any earlier commit file.
-  * Persisted every `settings.logCheckpointInterval` commits (Delta's
-  * checkpoint mechanism) as `<version>.checkpoint.parquet` (one row per
-  * live file, columnar/distributed read — see [[ParquetCheckpoint]]);
-  * `<version>.checkpoint.json` files that older writers laid beside them
-  * are still read. Opening a table then costs O(interval) log reads
-  * instead of O(versions), which is the difference between milliseconds
-  * and seconds of driver-side metadata latency once an ingest has
-  * committed thousands of times against an object store — and the
-  * parquet format keeps the COLD open linear-columnar instead of
-  * JSON-AST-shaped at ~1M live files. `stats` is trimmed to LIVE files so
-  * the checkpoint stays proportional to the table, not its history. Commit
-  * files are never deleted, so history reads (time travel below the
-  * checkpoint, CDF, vacuum accounting) replay the raw log exactly as
-  * before. */
-final case class LogCheckpoint(
-    version: Long,
-    live: Seq[String],
-    schemaJson: Option[String],
-    stats: Map[String, FileStats],
-    /** Live files' CURRENT deletion-vector bindings (file -> sidecar).
-      * Option so pre-DV checkpoint JSONs decode (missing field = None). */
-    dvs: Option[Map[String, String]] = None,
-    /** Running UNION of every reader feature the history up to `version`
-      * required ([[GraftProtocol]]) — monotone, like Delta's protocol
-      * action: a vacuumLog-trimmed table still gates foreign readers from
-      * its surviving checkpoint alone. Absent = baseline (pre-gate). */
-    features: Option[Seq[String]] = None,
-    /** Running UNION of every WRITER feature the history up to `version`
-      * bound the table to ([[GraftProtocol]]) — monotone, like the reader
-      * union: a vacuumLog-trimmed table still gates foreign writers from
-      * its surviving checkpoint alone. Absent = baseline (pre-gate). */
-    writerFeatures: Option[Seq[String]] = None) {
-  /** The DV bindings as a plain map (empty = no deletes outstanding). */
-  def dvFor: Map[String, String] = dvs.getOrElse(Map.empty)
-  /** Required reader features as a plain set (empty = baseline). */
-  def featureSet: Set[String] = features.map(_.toSet).getOrElse(Set.empty)
-  /** Required writer features as a plain set (empty = baseline). */
-  def writerFeatureSet: Set[String] = writerFeatures.map(_.toSet).getOrElse(Set.empty)
-}
 
 /** A versioned parquet table — the engine's stand-in for the Delta tables
   * the reference writes everything to (no delta jar in this environment).
   *
   * Layout:
   * {{{
-  *   <path>/_graft_log/00000000000000000001.json   // one JSON commit per version
-  *   <path>/part-<uuid>-*.parquet                  // immutable data files
+  *   <path>/_graft_log/...            // the log, owned by GraftLog
+  *   <path>/part-<uuid>-*.parquet     // immutable data files
+  *   <path>/_graft_changes/           // change-data files (CDF)
+  *   <path>/_graft_dv/                // deletion-vector sidecars
   * }}}
   *
-  * Concurrency: commits are made visible by an atomic rename of the
+  * This class is the DATA side (staging, reads, DML, maintenance,
+  * vacuum); everything under `_graft_log/` lives in the mixed-in
+  * [[GraftLog]], whose funnel ([[GraftLog.commitRewrite]]) every write
+  * here ends in.
+  *
+  * Concurrency: commits are made visible by an atomic publish of the
   * version file; readers replay the log (driver-side, tiny) and read
   * exactly the live file set — so reads never observe a partial write,
-  * and time travel is `readAt(version)`. Every commit goes through one
-  * funnel with Delta-style LOGICAL conflict detection ([[commitRewrite]]):
-  * appends and metadata commits commute and retry a lost version race
-  * verbatim; disjoint concurrent rewriters (different buckets / provably
-  * different key ranges) land without manual retry, overlapping ones
-  * fail loudly.
+  * and time travel is `readAt(version)`. The funnel's Delta-style
+  * LOGICAL conflict detection lets appends and metadata commits commute
+  * and retry a lost version race verbatim; disjoint concurrent rewriters
+  * (different buckets / provably different key ranges) land without
+  * manual retry, overlapping ones fail loudly.
   *
   * Scale: the log holds file NAMES only (KBs per commit); data files are
   * immutable parquet that Spark scans with full pushdown/pruning. Appends
@@ -148,92 +40,9 @@ final case class LogCheckpoint(
 final class GraftTable private (
     val spark: SparkSession,
     val path: String,
-    settings: GraftSettings) {
+    protected val settings: GraftSettings) extends GraftLog {
 
-  private implicit val fmts: Formats = DefaultFormats
-  private val logDir = s"$path/_graft_log"
-  private def fs = FsUtils.fs(spark, path)
-
-  // ------------------------------------------------------------ bucketing
-
-  private val metaFile = new Path(logDir, "_meta.json")
   private val BucketName = "^b(\\d+)-".r
-
-  // bucketSpec is consulted on EVERY query plan (pruneLive) and per
-  // interleaved commit in conflict loops — without a cache each call pays
-  // an exists + open + JSON parse RPC (10-50ms on object stores). The
-  // spec is immutable once observable: setBucketSpec refuses both a
-  // change (spec already set) and a first declaration on a table with
-  // commits, so a resolved Some — or a None on an existing table — can
-  // be cached for the handle's lifetime.
-  @volatile private var bucketSpecCache: Option[Option[BucketSpec]] = None
-
-  def bucketSpec: Option[BucketSpec] = bucketSpecCache.getOrElse {
-    // Caching a None is sound only if no creator can still declare a
-    // spec, so observe `exists` BEFORE the meta probe: setBucketSpec
-    // refuses once a table has commits, so commits-at-probe-time means
-    // no spec can ever appear later. The reverse order is a TOCTOU — a
-    // concurrent creator's _meta.json write plus first commit can land
-    // between the two checks, and the handle would pin a bucketed table
-    // as unbucketed for its lifetime.
-    val hadCommits = exists
-    val v =
-      if (!fs.exists(metaFile)) None
-      else {
-        val in = fs.open(metaFile)
-        try Some(JsonMethods.parse(in).extract[BucketSpec])
-        finally in.close()
-      }
-    if (v.isDefined || hadCommits) bucketSpecCache = Some(v)
-    v
-  }
-
-  /** Declare the bucketed layout. Must happen before (or agree with) the
-    * first write; re-declaring an identical spec is a no-op. */
-  def setBucketSpec(keys: Seq[String], numBuckets: Int): Unit = {
-    val spec = BucketSpec(keys, numBuckets)
-    bucketSpec match {
-      case Some(existing) if existing != spec =>
-        throw new IllegalStateException(s"table already bucketed as $existing")
-      case Some(_) => ()
-      case None =>
-        require(!exists, "cannot bucket a table that already has data commits")
-        fs.mkdirs(new Path(logDir))
-        val out = fs.create(metaFile, false)
-        try out.write(Serialization.write(spec).getBytes("UTF-8"))
-        finally out.close()
-        bucketSpecCache = Some(Some(spec))
-    }
-  }
-
-  // ---------------------------------------------------------- constraints
-
-  private val constraintsFile = new Path(logDir, "_constraints.json")
-
-  /** The persisted CHECK constraints: name → SQL predicate text. Cached
-    * per instance keyed by table VERSION (the [[tableProperties]]
-    * discipline): constraint DDL on an existing table always publishes a
-    * `constraint` commit, so "version unchanged" proves the sidecar is
-    * current. Every write path consults this (guards + the per-commit
-    * writer-feature stamp); without the cache each consult is an
-    * exists+open+parse RPC against the object store. Pre-creation tables
-    * (DDL is sidecar-only until data arrives) are never cached. */
-  def constraints: Map[String, String] = {
-    val v = if (exists) version else -1L
-    val cached = constraintsCache
-    if (cached != null && v >= 0 && cached._1 == v) return cached._2
-    val fresh =
-      if (!fs.exists(constraintsFile)) Map.empty[String, String]
-      else {
-        val in = fs.open(constraintsFile)
-        try JsonMethods.parse(in).extract[Map[String, String]]
-        finally in.close()
-      }
-    if (v >= 0) constraintsCache = (v, fresh)
-    fresh
-  }
-
-  @volatile private var constraintsCache: (Long, Map[String, String]) = null
 
   /** Add a persisted CHECK constraint (Delta's `ALTER TABLE ... ADD
     * CONSTRAINT name CHECK (pred)`): validates the EXISTING table in one
@@ -255,89 +64,9 @@ final class GraftTable private (
       throw new IllegalStateException(
         s"cannot add CHECK constraint $name ($predicateSql): " +
           s"existing rows in $path violate it")
-    writeConstraints(cur + (name -> predicateSql))
-    recordConstraintCommit("add", name, predicateSql)
+    updateSidecar(constraintsSidecar, cur + (name -> predicateSql), "constraint",
+      Map("op" -> "add", "name" -> name, "predicate" -> predicateSql))
   }
-
-  // ------------------------------------------------------ table properties
-
-  private val propertiesFile = new Path(logDir, "_properties.json")
-
-  /** Persisted per-table properties (Delta's TBLPROPERTIES model): known
-    * snake_case settings keys OVERRIDE the session [[GraftSettings]] for
-    * this table — so `deletion_vectors` / `change_data_feed` /
-    * `compact_target_bytes` travel WITH the table and every writer
-    * (API, SQL DML, the streaming sink) honors them without session
-    * coordination; unknown keys ride along as free-form metadata. */
-  def tableProperties: Map[String, String] = {
-    // cached per instance, keyed by table VERSION (the [[listLog]]
-    // discipline): every cross-handle properties change publishes a
-    // commit, so "version unchanged" proves the sidecar is current —
-    // and `version` itself revalidates with one existence probe. A DML
-    // consults effectiveSettings ~5x; without this each consult is an
-    // open+parse RPC against the object store. Pre-creation tables
-    // (no log yet, sidecar mutable without commits) are never cached.
-    val v = if (exists) version else -1L
-    val cached = propsCache
-    if (cached != null && v >= 0 && cached._1 == v) return cached._2
-    val fresh =
-      if (!fs.exists(propertiesFile)) Map.empty[String, String]
-      else {
-        val in = fs.open(propertiesFile)
-        try JsonMethods.parse(in).extract[Map[String, String]]
-        finally in.close()
-      }
-    if (v >= 0) propsCache = (v, fresh)
-    fresh
-  }
-
-  @volatile private var propsCache: (Long, Map[String, String]) = null
-
-  /** Set (merge) properties. Known settings keys are validated by
-    * parsing them immediately — a typo'd value fails HERE, not on some
-    * later write. Admin DDL: single-writer, like [[setBucketSpec]]. */
-  def setProperties(props: Map[String, String]): Unit = {
-    props.foreach { case (k, v) =>
-      // validation only — throws on a malformed value for a known key
-      GraftSettings.withSetting(settings, k, v)
-    }
-    writeProperties(tableProperties ++ props)
-    recordPropertiesCommit("set", props.keys.toSeq)
-  }
-
-  /** Remove properties (absent keys tolerated — Delta's UNSET shape). */
-  def unsetProperties(keys: Seq[String]): Unit = {
-    writeProperties(tableProperties -- keys)
-    recordPropertiesCommit("unset", keys)
-  }
-
-  private def writeProperties(props: Map[String, String]): Unit = {
-    propsCache = null // own writes visible before the commit publishes
-    if (props.isEmpty) { fs.delete(propertiesFile, false); return }
-    fs.mkdirs(new Path(logDir))
-    val tmp = new Path(logDir, s".properties.${UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(Serialization.write(props).getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(propertiesFile, false)
-    if (!fs.rename(tmp, propertiesFile)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(s"failed to publish properties at $path")
-    }
-  }
-
-  private def recordPropertiesCommit(op: String, keys: Seq[String]): Unit =
-    if (exists)
-      commitSchemaChange("properties",
-        Map("op" -> op, "keys" -> keys.mkString(",")))(identity)
-
-  /** The settings THIS table operates under: session settings overridden
-    * by the persisted properties. Consulted per write/maintenance call —
-    * one tiny sidecar read against a parquet write's cost. */
-  private[tables] def effectiveSettings: GraftSettings =
-    tableProperties.foldLeft(settings) { case (s, (k, v)) =>
-      GraftSettings.withSetting(s, k, v).getOrElse(s)
-    }
 
   // ------------------------------------------------------- column mapping
 
@@ -461,138 +190,6 @@ final class GraftTable private (
         .asInstanceOf[org.apache.spark.sql.types.StructType]).json
     }
 
-  /** A file-less, dataChange=false commit through the funnel: it reads no
-    * file, so it commutes with every interleaved writer, and `schemaJson`
-    * re-reads the current schema per attempt. */
-  private def commitMetadata(action: String, info: Map[String, String])(
-      schemaJson: () => String): Commit =
-    commitRewrite(action, version, Seq.empty, Seq.empty, mayOverlap = _ => false,
-      schemaJson, info, dataChange = false)
-
-  private def currentSchemaOrFail: String = snapshot().schemaJson.getOrElse(
-    throw new IllegalStateException(s"table does not exist: $path"))
-
-  /** Drop a persisted CHECK constraint. */
-  def dropConstraint(name: String, ifExists: Boolean = false): Unit = {
-    val cur = constraints
-    if (!cur.contains(name)) {
-      if (ifExists) return
-      throw new IllegalArgumentException(
-        s"no constraint named $name on $path (have: ${cur.keys.mkString(", ")})")
-    }
-    writeConstraints(cur - name)
-    recordConstraintCommit("drop", name, cur(name))
-  }
-
-  /** Governed protocol DOWNGRADE (Delta's `ALTER TABLE ... DROP FEATURE`):
-    * remove `name` from the table's required reader/writer feature union
-    * once nothing CURRENT depends on it — the exit ramp the gates need
-    * (e.g. REORG PURGE sheds every deletion vector, then `dropFeature
-    * ("dv")` lets feature-blind readers serve the table again; the
-    * manifest route documents exactly this sequence).
-    *
-    * Safety: the drop is a commit the snapshot fold SUBTRACTS at its
-    * version — later commits re-add the feature the moment content
-    * requires it again, and the content-derived self-heal re-adds it if
-    * the resulting state still depends on it, so a drop can never
-    * under-gate; refusals below make the no-op case loud. Time travel AT
-    * versions below the drop still carries the feature (those folds never
-    * reach the drop commit) — history keeps its true requirements. A
-    * PRE-DROP binary replaying the log keeps the feature in its union
-    * (it ignores the drop marker) and over-gates — the conservative-safe
-    * direction. The drop force-writes a checkpoint so cold opens start
-    * from the reduced union immediately. Admin DDL: single-writer, like
-    * [[setBucketSpec]]. */
-  def dropFeature(name: String): Commit = {
-    require(exists, s"table does not exist: $path")
-    val snap = snapshot()
-    val required = snap.featureSet ++ snap.writerFeatureSet
-    if (!required.contains(name))
-      throw new IllegalArgumentException(
-        s"table $path does not require feature '$name'" +
-          (if (required.isEmpty) " (no features required)"
-           else s" (required: ${required.toSeq.sorted.mkString(", ")})"))
-    // refuse while CURRENT content/state still depends on it, naming the
-    // remedy — a drop that the self-heal would immediately undo is a
-    // misunderstanding to surface, not a no-op to hide
-    val blocker: Option[String] = name match {
-      case GraftProtocol.Dv =>
-        Some(s"${snap.dvFor.size} live file(s) still carry deletion " +
-          "vectors — purge them first (REORG TABLE ... APPLY (PURGE))")
-          .filter(_ => snap.dvFor.nonEmpty)
-      case GraftProtocol.ColumnMappingFeature =>
-        // overwrite(read()) IS a working remedy: read() serves the
-        // logical view with mapping metadata STRIPPED (readDataFiles
-        // aliases with the cleaned field metadata), overwrite records the
-        // incoming schema verbatim and stages files under its names — so
-        // the rewritten table carries logical-named files and a clean
-        // schema. Old files' physical names stay correct for time travel
-        // (each version reads under ITS commit's schema).
-        Some("the schema still carries column-mapping state (renamed/" +
-          "dropped columns) — rewrite the table under its final names " +
-          "first (overwrite(read()))")
-          .filter(_ => snap.schemaJson.exists(GraftProtocol.schemaRequiresMapping))
-      case GraftProtocol.PartitionConvert =>
-        Some("live files still sit in a converted k=v partition tree — " +
-          "flatten first (OPTIMIZE or overwrite)")
-          .filter(_ => snap.live.exists(_.contains("/")))
-      case GraftProtocol.CheckConstraints =>
-        Some(s"CHECK constraint(s) [${constraints.keys.toSeq.sorted.mkString(", ")}] " +
-          "are still declared — drop them first")
-          .filter(_ => constraints.nonEmpty)
-      case GraftProtocol.ChangeDataFeedFeature =>
-        Some("table property change_data_feed=true is still set — unset it first")
-          .filter(_ => tableProperties.get("change_data_feed")
-            .exists(_.equalsIgnoreCase("true")))
-      case GraftProtocol.AppendOnlyFeature =>
-        Some("table property append_only=true is still set — unset it first")
-          .filter(_ => tableProperties.get("append_only")
-            .exists(_.equalsIgnoreCase("true")))
-      case other =>
-        // unreachable for reader features (reads refuse the table first)
-        // and refused at the commit gate for writer features — but name
-        // the remedy rather than relying on those fences
-        Some(s"feature '$other' is not known to this binary — upgrade the " +
-          "graft library to manage it")
-    }
-    blocker.foreach(b => throw new IllegalStateException(
-      s"cannot drop feature '$name' from $path: $b"))
-    val c = commitMetadata("drop_feature", Map("feature" -> name))(() => currentSchemaOrFail)
-    // checkpoint NOW (off-cadence): cold opens and vacuumLog-trimmed
-    // tables must start from the union WITHOUT the feature — waiting
-    // for the cadence would leave the drop invisible to any reader
-    // whose fold starts from the previous checkpoint's union
-    maybeWriteCheckpoint(c.version, force = true)
-    c
-  }
-
-  private def writeConstraints(cs: Map[String, String]): Unit = {
-    constraintsCache = null // own writes visible before the commit publishes
-    if (cs.isEmpty) { fs.delete(constraintsFile, false); return }
-    fs.mkdirs(new Path(logDir))
-    val tmp = new Path(logDir, s".constraints.${UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(Serialization.write(cs).getBytes("UTF-8"))
-    finally out.close()
-    // delete-then-rename (Hadoop rename refuses an existing destination on
-    // some filesystems) — fine under the single-admin-writer DDL contract
-    fs.delete(constraintsFile, false)
-    if (!fs.rename(tmp, constraintsFile)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(s"failed to publish constraints at $path")
-    }
-  }
-
-  /** Constraint DDL on an existing table lands as a metadata commit
-    * (dataChange=false, no files) — visible in history, invisible to
-    * incremental consumers. A pre-first-commit table has no log schema to
-    * stamp, so the DDL is sidecar-only until data arrives. */
-  private def recordConstraintCommit(op: String, name: String, pred: String): Unit =
-    if (exists)
-      commitMetadata("constraint", Map("op" -> op, "name" -> name, "predicate" -> pred)) {
-        () => snapshot().schemaJson.getOrElse(Serialization.write(Map.empty[String, String]))
-      }
-
   /** Wrap `df` so every persisted CHECK constraint is enforced per row
     * inside the write pass itself. */
   private def withConstraintGuards(df: DataFrame): DataFrame = {
@@ -612,435 +209,6 @@ final class GraftTable private (
 
   private def bucketExpr(spec: BucketSpec): org.apache.spark.sql.Column =
     pmod(xxhash64(spec.keys.map(col): _*), lit(spec.numBuckets)).cast("int")
-
-  // ------------------------------------------------------------------ log
-
-  /** One listing of the log dir: (commit files, checkpoint files), each
-    * sorted by version. A single listStatus RPC — the expensive part of
-    * log replay is the per-file OPEN+parse, which [[snapshot]] bounds.
-    *
-    * CACHED per table instance, revalidated on EVERY access with one
-    * existence probe of the next version's commit file: versions are dense
-    * ([[commitRewrite]] publishes `base + 1` only once `base` is the head,
-    * under the O_EXCL claim mutex, so no version is ever skipped), which
-    * makes "v+1 absent" a proof that the cached listing is still current. An external writer's commit is
-    * therefore visible immediately — there is NO stale-read window, unlike
-    * a TTL cache — while the steady state costs one HEAD-class RPC instead
-    * of a LIST plus k opens. On an object store, where every log RPC is
-    * 10-50ms, this is what keeps a multi-table ingest's per-batch fixed
-    * cost flat: an ingest touches each of its tables' logs many times
-    * (exists/version/read/append), and only genuine commits pay a re-list. */
-  private def listLog(): (Seq[Path], Seq[Path]) = {
-    val cached = listingCache
-    if (cached != null) {
-      val nextV = cached._1.lastOption.map(versionOf).getOrElse(0L) + 1L
-      if (!fs.exists(new Path(logDir, f"$nextV%020d.json"))) return cached
-    }
-    val dir = new Path(logDir)
-    val fresh =
-      if (!fs.exists(dir)) (Seq.empty[Path], Seq.empty[Path])
-      else {
-        val all = fs.listStatus(dir).toSeq.map(_.getPath)
-        // checkpoints sort (version, json, parquet) by NAME — so where an
-        // older writer left a JSON checkpoint beside the parquet one, the
-        // parquet file lists AFTER it and the newest-first reader in
-        // [[snapshot]] prefers it
-        (all.filter(_.getName.matches("\\d{20}\\.json")).sortBy(_.getName),
-          all.filter(_.getName.matches("\\d{20}\\.checkpoint\\.(json|parquet)")).sortBy(_.getName))
-      }
-    listingCache = fresh
-    fresh
-  }
-
-  @volatile private var listingCache: (Seq[Path], Seq[Path]) = null
-
-  /** Drop the cached listing — called after every local mutation of the
-    * log (commit publish, checkpoint write/trim), and available to force a
-    * re-list. Correctness never depends on calling it: the next-version
-    * probe in [[listLog]] detects foreign commits on its own. */
-  private def invalidateListing(): Unit = listingCache = null
-
-  private def versionOf(p: Path): Long = p.getName.take(20).toLong
-
-  /** Newest parsed checkpoint, keyed by file name (write-once files). */
-  @volatile private var ckptCache: (String, LogCheckpoint) = null
-
-  /** Parsed-commit cache: commit files are immutable once published (the
-    * claim protocol in [[writeCommit]] means a name is written exactly
-    * once, ever), so parses are cacheable indefinitely. Keyed by file
-    * name; cleared wholesale if it ever grows past a bound so a
-    * long-history table can't pin unbounded driver memory. */
-  private val commitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Commit]()
-
-  private def parseCommit(p: Path): Commit = {
-    val name = p.getName
-    val hit = commitCache.get(name)
-    if (hit != null) return hit
-    val in = try fs.open(p) catch {
-      case e: java.io.FileNotFoundException =>
-        // a foreign vacuumLog trimmed a commit this handle had listed —
-        // the next-version probe can only detect ADDED files, so the
-        // stale cache must be dropped here; fail with the trim contract's
-        // loud error (a retried call re-lists and succeeds or reports the
-        // trimmed horizon)
-        invalidateListing()
-        throw new IllegalStateException(
-          s"commit file $name of $path vanished (log trimmed by a " +
-            "concurrent vacuumLog) — retry the operation against the " +
-            "re-listed log", e)
-    }
-    val c = try JsonMethods.parse(in).extract[Commit]
-    finally in.close()
-    // the protocol gate: EVERY read surface (batch, SQL, native relation,
-    // streaming, CDF, time travel, history) parses commits here, so a
-    // future-feature commit refuses before any surface serves a row.
-    // Checked before caching — a refused commit is never half-admitted.
-    GraftProtocol.requireReadable(c.features.getOrElse(Nil), path,
-      s"commit v${c.version}")
-    if (commitCache.size > 4096) commitCache.clear()
-    commitCache.put(name, c)
-    c
-  }
-
-  /** Every commit, oldest first — read only by [[history]] without a limit
-    * (`DESCRIBE HISTORY`) and [[vacuum]]. Per-batch readers
-    * parse just their versions ([[commitsInRange]], [[commitsNewestFirst]]);
-    * current-state reads go through [[snapshot]]. */
-  def commits(): Seq[Commit] = listLog()._1.map(parseCommit)
-
-  /** Commits in `(fromExclusive, toInclusive]`, oldest first — file names
-    * are version-filtered BEFORE any parse, so a per-trigger consumer
-    * (the streaming sources' admission/tail reads) pays O(range) JSON
-    * parses per call, not O(history), even once the log outgrows the
-    * parse cache's bound. */
-  def commitsInRange(fromExclusive: Long, toInclusive: Long): Seq[Commit] =
-    listLog()._1.iterator.filter { p =>
-      val v = versionOf(p); v > fromExclusive && v <= toInclusive
-    }.map(parseCommit).toSeq
-
-  /** Lazily parsed commits, NEWEST first — for consumers that stop at the
-    * first hit (the streaming sink's replay probe): parsing stops the
-    * moment the caller stops pulling. */
-  def commitsNewestFirst: Iterator[Commit] =
-    listLog()._1.reverseIterator.map(parseCommit)
-
-  /** Protocol gate for readers that parse only part of the log: the current
-    * snapshot gates the newest checkpoint (whose feature union covers every
-    * version below it) and each tail commit, so this refuses exactly what a
-    * whole-log walk would, for a snapshot whose parses are cached. */
-  private def requireReadableLog(): Unit = snapshot()
-
-  /** Guard for consumers that replay commits in `(fromExclusive, ...]`:
-    * throws when the log no longer holds them (trimmed by [[vacuumLog]])
-    * — a silent partial replay would be wrong results, not staleness. */
-  private[tables] def requireLogSince(fromExclusive: Long, what: String): Unit =
-    listLog()._1.headOption.map(versionOf).foreach { oldest =>
-      // oldest == 1 means untrimmed: versions below 1 never existed, so a
-      // sub-1 start (e.g. startingVersion=0 = full history) is vacuous
-      if (oldest > 1 && fromExclusive + 1 < oldest)
-        throw new IllegalStateException(
-          s"$what needs commits from v${fromExclusive + 1}, but the log of " +
-            s"$path is trimmed below v$oldest (vacuumLog) — the requested " +
-            "history no longer exists")
-    }
-
-  /** Replayed state at `asOf`: the newest checkpoint at or below `asOf`
-    * plus only the commit files after it. With no usable checkpoint (none
-    * written yet, `asOf` below the oldest one, or an unreadable file) the
-    * raw log replays in full — correctness never depends on a checkpoint
-    * existing. */
-  private[tables] def snapshot(asOf: Long = Long.MaxValue,
-      healFromSidecars: Boolean = false): LogCheckpoint = {
-    val (commitFiles, ckptFiles) = listLog()
-    // newest version first; within a version the PARQUET checkpoint first
-    // (the columnar/distributed read — [[ParquetCheckpoint]]) with a JSON
-    // checkpoint an older writer laid as per-file fallback. Any unreadable
-    // candidate just tries the next — a checkpoint is an optimization,
-    // never a correctness input.
-    val base = ckptFiles.filter(versionOf(_) <= asOf).reverseIterator.flatMap { p =>
-      val cached = ckptCache
-      if (cached != null && cached._1 == p.getName) Some(cached._2)
-      else try {
-        val parsed =
-          if (p.getName.endsWith(".parquet"))
-            ParquetCheckpoint.read(spark, fs, spark.sessionState.newHadoopConf(),
-              p, effectiveSettings.logCheckpointDistributedReadBytes)
-          else {
-            val in = fs.open(p)
-            try JsonMethods.parse(in).extract[LogCheckpoint]
-            finally in.close()
-          }
-        // gate BEFORE caching/serving: a checkpoint is the only feature
-        // record that survives vacuumLog, so a trimmed future-feature
-        // table must refuse here, not fall back to an older checkpoint
-        GraftProtocol.requireReadable(parsed.featureSet, path,
-          s"checkpoint v${parsed.version}")
-        // every commit records its schema, so live files without one can
-        // only come from a hand-laid checkpoint: unreadable, like any other
-        require(parsed.live.isEmpty || parsed.schemaJson.isDefined,
-          s"checkpoint v${parsed.version} has live files but no schema")
-        ckptCache = (p.getName, parsed) // checkpoint files are write-once too
-        Some(parsed)
-      } catch {
-        // unreadable checkpoints degrade (optimization, never correctness);
-        // an UNSUPPORTED table is a refusal, not a degrade
-        case e: UnsupportedTableFeatureException => throw e
-        case scala.util.control.NonFatal(_) => None
-      }
-    }.nextOption().getOrElse(LogCheckpoint(0L, Seq.empty, None, Map.empty))
-    // trimmed-log soundness: versions are dense, so the replay from `base`
-    // to `asOf` is complete iff the first commit after base survives (or
-    // there is nothing to replay). A missing prefix would SILENTLY yield
-    // the wrong snapshot — fail loudly instead (vacuumLog's contract:
-    // history below the horizon errors, never lies).
-    val head = commitFiles.lastOption.map(versionOf).getOrElse(0L)
-    val oldest = commitFiles.headOption.map(versionOf).getOrElse(Long.MaxValue)
-    if (math.min(asOf, head) > base.version && base.version + 1 < oldest)
-      throw new IllegalStateException(
-        s"cannot reconstruct version ${math.min(asOf, head)} of $path: the log " +
-          s"is trimmed below v$oldest (vacuumLog) and no checkpoint at or below " +
-          "the requested version survives")
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    live ++= base.live
-    var schemaJson = base.schemaJson
-    var stats = base.stats
-    var dvs = base.dvFor
-    var feats = base.featureSet
-    var wfeats = base.writerFeatureSet
-    var v = base.version
-    commitFiles
-      .filter(p => { val pv = versionOf(p); pv > base.version && pv <= asOf })
-      .foreach { p =>
-        val c = parseCommit(p)
-        c.remove.foreach(live -= _)
-        live ++= c.add
-        schemaJson = Some(c.schemaJson)
-        stats = stats ++ c.stats.getOrElse(Map.empty)
-        // a removed file's DV dies with it; an entry rebinds; the Cleared
-        // sentinel unbinds (restore to a pre-delete version)
-        dvs = dvs -- c.remove
-        c.dvs.getOrElse(Map.empty).foreach { case (f, dv) =>
-          dvs = if (dv == DeletionVectors.Cleared) dvs - f else dvs + (f -> dv)
-        }
-        feats ++= c.features.getOrElse(Nil) // monotone union, like Delta
-        wfeats ++= c.writerFeatures.getOrElse(Nil)
-        // pre-gate self-heal (content side): a commit that RECORDED change
-        // files is durable evidence CDF consumers exist, even if the
-        // commit predates writer-feature stamping
-        if (c.changes.isDefined) wfeats += GraftProtocol.ChangeDataFeedFeature
-        // a governed protocol downgrade (Delta's DROP FEATURE,
-        // [[dropFeature]]): subtract the named feature from the union
-        // accumulated SO FAR — later commits re-add it if their content
-        // requires, and the content self-heal below re-adds it if the
-        // RESULTING state still depends on it, so a drop can never
-        // under-gate. Versions BELOW the drop keep gating (their fold
-        // never reaches this commit) — time travel semantics preserved.
-        if (c.action == "drop_feature") c.metrics.get("feature").foreach { f =>
-          feats -= f; wfeats -= f
-        }
-        v = c.version
-      }
-    // content-derived union ON TOP of the recorded sets: a PRE-GATE
-    // history (commits written before features existed) still yields a
-    // correctly-gated snapshot, so the next checkpoint write self-heals
-    // the table's gating — without this, trimming a pre-gate log would
-    // leave a checkpoint a feature-blind foreign reader happily misreads
-    if (dvs.nonEmpty) feats += GraftProtocol.Dv
-    if (live.exists(_.contains("/"))) feats += GraftProtocol.PartitionConvert
-    if (schemaJson.exists(GraftProtocol.schemaRequiresMapping))
-      feats += GraftProtocol.ColumnMappingFeature
-    // STATE-derived writer self-heal — the sidecar expectations the fold
-    // cannot see (both version-cached, so this costs one RPC per version
-    // change, not per snapshot): a PRE-GATE table with declared
-    // constraints/properties writer-gates immediately, not only after its
-    // next stamped commit, and a dropFeature racing a constraint/property
-    // declaration re-gains the feature here — mirroring the dv content
-    // heal above, so neither union can ever under-claim what the current
-    // table actually requires. CURRENT-version folds only: the sidecars
-    // describe the table NOW, so grafting them onto a time-travel fold
-    // would claim writer features the historical version never had (and a
-    // fresh asOf fold could disagree with the checkpoint written at that
-    // version) — history keeps its true, purely log-derived requirements.
-    // `healFromSidecars` forces the heal when the CALLER knows the fold
-    // targets the version it just committed ([[maybeWriteCheckpoint]]):
-    // without it, a concurrent writer publishing asOf+1 between the commit
-    // and this listing advances `head` past asOf and a pre-gate table's
-    // checkpoint would silently under-claim its declared writer features.
-    if (healFromSidecars || asOf >= head) {
-      if (constraints.nonEmpty) wfeats += GraftProtocol.CheckConstraints
-      val declaredProps = tableProperties
-      if (declaredProps.get("change_data_feed").exists(_.equalsIgnoreCase("true")))
-        wfeats += GraftProtocol.ChangeDataFeedFeature
-      if (declaredProps.get("append_only").exists(_.equalsIgnoreCase("true")))
-        wfeats += GraftProtocol.AppendOnlyFeature
-    }
-    LogCheckpoint(v, live.toSeq, schemaJson, stats,
-      if (dvs.isEmpty) None else Some(dvs),
-      if (feats.isEmpty) None else Some(feats.toSeq.sorted),
-      if (wfeats.isEmpty) None else Some(wfeats.toSeq.sorted))
-  }
-
-  /** Persist [[snapshot]] as `<version>.checkpoint.parquet` when the
-    * version hits the configured cadence (or unconditionally with
-    * `force = true` — [[dropFeature]] checkpoints its own commit so
-    * snapshots immediately start from a union WITHOUT the dropped
-    * feature). Runs AFTER the commit claim was released, so it never
-    * stretches the claim window. Best-effort: a checkpoint is an
-    * optimization, so any failure (a concurrent writer already published
-    * it, a transient fs error) is swallowed — readers fall back to the
-    * commits themselves. */
-  private def maybeWriteCheckpoint(version: Long, force: Boolean = false): Unit = {
-    val interval = effectiveSettings.logCheckpointInterval
-    if (!force && (interval <= 0 || version % interval != 0)) return
-    try {
-      // the commit that triggered this checkpoint IS the current version
-      // from this writer's viewpoint — request the sidecar heal explicitly
-      // so a concurrent v+1 publish can't race it off (see [[snapshot]])
-      val snap = snapshot(version, healFromSidecars = true)
-      val liveSet = snap.live.toSet
-      val trimmed = snap.copy(
-        stats = snap.stats.filter { case (f, _) => liveSet(f) },
-        dvs = Some(snap.dvFor.filter { case (f, _) => liveSet(f) })
-          .filter(_.nonEmpty))
-      ParquetCheckpoint.write(fs, spark.sessionState.newHadoopConf(), logDir,
-        f"$version%020d.checkpoint.parquet", trimmed)
-      invalidateListing() // the listing gained a checkpoint file
-      // superseded checkpoints are pure redundancy (every commit file is
-      // retained forever) — keep the newest two VERSIONS (a version may
-      // still hold a JSON checkpoint an older writer laid) so a reader
-      // holding a just-taken listing never loses the file it picked,
-      // drop the rest
-      val cks = listLog()._2
-      val keep = cks.map(versionOf).distinct.sorted.takeRight(2).toSet
-      cks.filterNot(p => keep(versionOf(p))).foreach(p => fs.delete(p, false))
-      invalidateListing() // ...and may have lost some
-    } catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  /** The log's current schema JSON (None when the table does not exist):
-    * the evolved-union contract log-schema readers consume. */
-  def currentSchemaJson: Option[String] = snapshot().schemaJson
-
-  /** Current version off the commit FILE NAMES — no JSON parse at all. */
-  def version: Long =
-    listLog()._1.lastOption.map(versionOf).getOrElse(0L)
-
-  def exists: Boolean = listLog()._1.nonEmpty
-
-  /** Live data files at `asOf` (defaults to current). */
-  def liveFiles(asOf: Long = Long.MaxValue): Seq[String] = snapshot(asOf).live
-
-  /** The newest version committed at or before `timestampMs` — the
-    * Delta `TIMESTAMP AS OF` convention, shared by the SQL time-travel
-    * rule and the `timestampAsOf` reader option. */
-  def versionAt(timestampMs: Long): Long = {
-    requireReadableLog()
-    commitsNewestFirst.find(_.timestampMs <= timestampMs).map(_.version)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no commit at or before timestamp $timestampMs in $path " +
-          s"(earliest: ${listLog()._1.headOption.map(parseCommit(_).timestampMs).getOrElse(-1L)})"))
-  }
-
-  /** Publish one commit file atomically with real conflict detection.
-    *
-    * Rename alone cannot detect a version race: POSIX rename OVERWRITES an
-    * existing destination, so two writers renaming onto the same version
-    * file would silently lose one commit. Protocol: (1) claim the version
-    * through the session's [[LogStore]] (default: an O_EXCL create,
-    * atomic on local fs and HDFS; S3-class stores plug a conditional-PUT
-    * or arbiter-backed store via `spark.graft.logStore.class` — the
-    * claim's atomicity is the ONLY storage-specific piece of the
-    * protocol); (2) under the claim, check the version file doesn't
-    * already exist (a finished writer releases its claim, but its commit
-    * file remains forever); (3) write-then-rename so readers never see
-    * partial content. Losers throw `concurrent commit`; [[commitRewrite]]
-    * catches it, checks the winner against its read set and retries.
-    *
-    * Crashed-winner recovery is LEASE-based, no FSCK required: a claim
-    * older than `spark.graft.logStore.claimTtlMs` (default 10 min; claims
-    * are held for milliseconds — the post-commit checkpoint write runs
-    * AFTER release, outside the claim window) is broken and re-claimed
-    * inline. The mirror-image hazard — a slow-but-alive winner whose
-    * lease someone broke — is closed by re-verifying [[LogStore
-    * .stillHeld]] immediately before the publish rename: a usurped
-    * writer aborts with `concurrent commit` instead of renaming over the
-    * usurper's published file. */
-  private def writeCommit(c: Commit): Unit = {
-    fs.mkdirs(new Path(logDir))
-    val name = f"${c.version}%020d.json"
-    val dst = new Path(logDir, name)
-    val store = LogStore.forSession(spark)
-    val dir = new Path(logDir)
-    def conflict() = {
-      // diagnostic payload: a retry-exhausted writer's error must say WHY
-      // the version stayed unavailable (published file vs a held/orphaned
-      // claim) — the difference between a livelock and a protocol bug.
-      // Probed THROUGH the store seam: with an arbiter store the claim
-      // lives in a database row, and a hardcoded marker-file probe would
-      // report "no claim" about the very claim that blocked the commit
-      val state = try {
-        val m = store.claimAgeMs(fs, dir, name) match {
-          case Some(age) => s"claim held, age ${age}ms"
-          case None      => "no visible claim"
-        }
-        s"(version file exists=${fs.exists(dst)}; $m)"
-      } catch { case scala.util.control.NonFatal(_) => "(state probe failed)" }
-      throw new IllegalStateException(
-        s"concurrent commit detected for version ${c.version} at $path $state")
-    }
-    if (!store.tryClaim(fs, dir, name)) {
-      val ttl = spark.conf.get(LogStore.ClaimTtlKey,
-        LogStore.DefaultClaimTtlMs.toString).toLong
-      // witness BEFORE age: the break is scoped to the exact claim whose
-      // expiry was observed, so a contender that broke+re-claimed between
-      // our two reads keeps its fresh claim (breakClaim compares identity)
-      val recovered = ttl > 0 && {
-        val witness = store.claimWitness(fs, dir, name)
-        store.claimAgeMs(fs, dir, name).exists(_ > ttl) && {
-          store.breakClaim(fs, dir, name, witness)
-          store.tryClaim(fs, dir, name)
-        }
-      }
-      if (!recovered) conflict()
-    }
-    try {
-      if (fs.exists(dst)) conflict()
-      val tmp = new Path(logDir, s".$name.${UUID.randomUUID()}.tmp")
-      val out = fs.create(tmp, false)
-      try out.write(Serialization.write(c).getBytes("UTF-8"))
-      finally out.close()
-      // pre-publish re-verify: if FSCK or a lease-break cleared our claim
-      // (and possibly handed the version to another writer), the rename
-      // below would OVERWRITE its commit — abort instead
-      if (!store.stillHeld(fs, dir, name)) {
-        fs.delete(tmp, false)
-        conflict()
-      }
-      // publish through the store: atomic no-overwrite (hard link on
-      // file:, HDFS-contract rename elsewhere) — even if a dual-holder
-      // window opened despite the witness-scoped break, the second
-      // publisher FAILS here instead of replacing the first's commit
-      if (!store.publish(fs, tmp, dst)) {
-        fs.delete(tmp, false)
-        conflict()
-      }
-    } finally {
-      // a release failure must NEVER mask the commit's outcome: with an
-      // arbiter store this is a network call, and a DB blip after a
-      // SUCCESSFUL publish would otherwise convert the success into an
-      // exception (a retrying caller would then double-append). The claim
-      // row/marker it leaves behind recovers via the TTL break.
-      try store.release(fs, dir, name)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          LogStore.warnReleaseFailed(dir, name, e)
-      }
-      // whether we published or lost the race, the log changed (or is
-      // about to): drop the cached listing so the next read re-lists
-      invalidateListing()
-    }
-  }
 
   // ----------------------------------------------------------------- read
 
@@ -1083,24 +251,14 @@ final class GraftTable private (
     GraftTable.withDirPartitionColumns(base, files, st)
   }
 
-  /** The recorded schema of `snap`. [[snapshot]] never serves live files
-    * without one, so only a table that does not exist yet lacks it. */
-  private def schemaOf(snap: LogCheckpoint): String =
-    snap.schemaJson.getOrElse(
-      throw new IllegalStateException(s"table does not exist: $path"))
-
-  /** The data files [[changesByVersion]] names for one batch of versions,
-    * read under the log schema at `version` (the batch's last version):
-    * logical column names, dir-derived partition columns, and no footer
-    * merge. The files are read as added: deletion vectors bound later
-    * are not applied. */
+  /** The table-relative data files [[changesByVersion]] names for one
+    * batch of versions, read under the log schema at `version` (the
+    * batch's last version): logical column names, dir-derived partition
+    * columns, and no footer merge. The files are read as added: deletion
+    * vectors bound later are not applied. */
   def readChangedFiles(files: Seq[String], version: Long): DataFrame =
-    readDataFiles(files.map(_.stripPrefix(s"$path/")), schemaOf(snapshot(version)))
+    readDataFiles(files, schemaOf(snapshot(version)))
 
-  /** Driver-side load of the DV bitmaps bound to `files` (only entries
-    * for scanned files load — O(scanned DVs), never O(table)). Used by
-    * the plan-level apply ([[DeletionVectors.filterDeleted]]); the native
-    * relation loads lazily on executors instead. */
   /** The table root as qualified URI strings — the prefix
     * `_metadata.file_path` carries, so [[DeletionVectors.filterDeleted]]
     * can relativize scanned paths back to LOG names. BOTH authority
@@ -1112,6 +270,10 @@ final class GraftTable private (
     Seq(qp.toString, qp.toUri.toString).distinct
   }
 
+  /** Driver-side load of the DV bitmaps bound to `files` (only entries
+    * for scanned files load — O(scanned DVs), never O(table)). Used by
+    * the plan-level apply ([[DeletionVectors.filterDeleted]]); the native
+    * relation loads lazily on executors instead. */
   private[tables] def loadDvs(bindings: Map[String, String],
       files: Seq[String]): Map[String, Array[Long]] =
     if (bindings.isEmpty) Map.empty
@@ -1171,11 +333,7 @@ final class GraftTable private (
     * encoded in each file name (a point lookup on the PK of a bucketed
     * CDC table touches exactly one bucket's files). */
   private[graft] def prunedFiles(predicate: org.apache.spark.sql.Column): Seq[String] =
-    prunedFilesOf(snapshot(), predicate)
-
-  private def prunedFilesOf(snap: LogCheckpoint,
-      predicate: org.apache.spark.sql.Column): Seq[String] =
-    pruneLive(snap,
+    pruneLive(snapshot(),
       org.apache.spark.sql.graftbridge.ColumnBridge.conjuncts(predicate))
 
   /** The skipping core over already-extracted conjunct atoms — shared by
@@ -1243,18 +401,20 @@ final class GraftTable private (
 
   /** Data files added by dataChange commits in versions (`fromExclusive`,
     * current] — the incremental-consumption contract (compactions are
-    * invisible, like Delta's dataChange=false). */
+    * invisible, like Delta's dataChange=false). Names are table-relative,
+    * like [[liveFiles]] and `Commit.add`. */
   def changesSince(fromExclusive: Long): Seq[String] =
     changesByVersion(fromExclusive).flatMap(_._2)
 
   /** Same changes grouped per commit version, for consumers that bound
-    * batch sizes but must checkpoint on version boundaries. */
+    * batch sizes but must checkpoint on version boundaries. Names are
+    * table-relative; [[readChangedFiles]] reads them. */
   def changesByVersion(fromExclusive: Long): Seq[(Long, Seq[String])] = {
     requireLogSince(fromExclusive, "incremental consumption")
     requireReadableLog()
     commitsInRange(fromExclusive, Long.MaxValue)
       .filter(_.dataChange)
-      .map(c => c.version -> c.add.map(f => s"$path/$f"))
+      .map(c => c.version -> c.add)
   }
 
   // ---------------------------------------------------------------- write
@@ -1361,11 +521,7 @@ final class GraftTable private (
   private[tables] def preWriteGate(action: String, removesRows: Boolean): Unit = {
     GraftProtocol.requireWritable(snapshot().writerFeatureSet, path,
       "the table's commit history/checkpoint (pre-staging probe)")
-    if (removesRows && effectiveSettings.appendOnly)
-      throw new IllegalStateException(
-        s"table $path is append-only (append_only=true): refusing " +
-          s"'$action' — it removes or rewrites rows (unset the " +
-          "property to run data-changing DML)")
+    requireMayRemoveRows(action, removesRows)
   }
 
   /** Stage `df` as parquet files inside the table dir; returns final file
@@ -1442,8 +598,7 @@ final class GraftTable private (
         withBlooms(toPhysical(df).write.mode("overwrite")).parquet(stagingDir)
     }
     val statsByStaged = collectStats(stagingDir, toPhysical(df))
-    val staged = FsUtils.dataFiles(spark, stagingDir)
-    val namesAndStats = staged.map { st =>
+    val moved = moveStaged(stagingDir) { st =>
       val p = st.getPath
       val bucketPrefix = spec.flatMap { _ =>
         "graft_bucket=(\\d+)".r.findFirstMatchIn(p.getParent.getName).map(m => s"b${m.group(1)}-")
@@ -1458,8 +613,10 @@ final class GraftTable private (
       assert(!name.contains("/"),
         s"staged add name '$name' must be flat (GraftProtocol.featuresOf " +
           "derives partition_convert structurally from '/')")
-      if (!fs.rename(p, new Path(path, name)))
-        throw new IllegalStateException(s"failed to move staged file $p into $path")
+      name
+    }
+    (moved.map(_._2), moved.flatMap { case (st, name) =>
+      val p = st.getPath
       // stats are keyed bucket-dir-qualified (leaf names repeat across
       // graft_bucket=N/ dirs — see collectStats)
       val stagedKey =
@@ -1467,155 +624,25 @@ final class GraftTable private (
           s"${p.getParent.getName}/${p.getName}"
         else p.getName
       // the staging listing already holds the length — record it for free
-      name -> statsByStaged.get(stagedKey).map(_.copy(bytes = Some(st.getLen)))
+      statsByStaged.get(stagedKey).map(s => name -> s.copy(bytes = Some(st.getLen)))
+    }.toMap)
+  }
+
+  /** Move every file written under `stagingDir` into the table under
+    * `nameOf(file)` (table-relative), then delete the staging dir — the
+    * publish step of [[stage]] and [[stageChangeRows]]. Returns each staged
+    * file's listing with its table name. */
+  private def moveStaged(stagingDir: String)(
+      nameOf: org.apache.hadoop.fs.FileStatus => String)
+      : Seq[(org.apache.hadoop.fs.FileStatus, String)] = {
+    val moved = FsUtils.dataFiles(spark, stagingDir).map { st =>
+      val name = nameOf(st)
+      if (!fs.rename(st.getPath, new Path(path, name)))
+        throw new IllegalStateException(s"failed to move staged file ${st.getPath} into $path")
+      st -> name
     }
     fs.delete(new Path(stagingDir), true)
-    (namesAndStats.map(_._1),
-      namesAndStats.collect { case (n, Some(st)) => n -> st }.toMap)
-  }
-
-  /** Derive and record the commit's required reader features from its
-    * content ([[GraftProtocol.featuresOf]]) and its writer features from
-    * table state + content ([[GraftProtocol.writerFeaturesOf]]) — stamped
-    * on every attempt of [[commitRewrite]], the one funnel every commit is
-    * published through, so no write path can forget either gate. The
-    * WRITE-side protocol gate also lives here: a table whose recorded
-    * union holds a writer feature this binary does not uphold refuses the
-    * commit (reads keep serving — [[parseCommit]]/[[snapshot]]
-    * check only the reader set), and a declared append-only table refuses
-    * any data-changing commit that removes files or binds deletion
-    * vectors (compaction/OPTIMIZE rewrites — dataChange=false, rows
-    * preserved — stay allowed, Delta's appendOnly semantics). */
-  private def stampFeatures(c: Commit): Commit = {
-    // gate BEFORE any claim is attempted: the union survives log trims via
-    // the checkpoint, so a hand-laid/future-writer table refuses here even
-    // when the commit that recorded the feature is long vacuumed
-    GraftProtocol.requireWritable(snapshot().writerFeatureSet, path,
-      "the table's commit history/checkpoint")
-    val props = tableProperties
-    def declared(k: String) = props.get(k).exists(_.equalsIgnoreCase("true"))
-    val appendOnlyDeclared = declared("append_only")
-    // effectiveSettings already overlays the table properties, so the
-    // declared case is subsumed: ONE source of truth for the gate (the
-    // separate `declared` probe above exists only for the STAMP, which
-    // must bind to table-durable state, not session settings)
-    if (effectiveSettings.appendOnly && c.dataChange &&
-        (c.remove.nonEmpty ||
-          c.dvs.exists(_.values.exists(_ != DeletionVectors.Cleared))))
-      throw new IllegalStateException(
-        s"table $path is append-only (append_only=true): refusing " +
-          s"'${c.action}' — it removes or rewrites rows (unset the " +
-          "property to run data-changing DML)")
-    c.copy(features = GraftProtocol.featuresOf(c),
-      writerFeatures = GraftProtocol.writerFeaturesOf(c,
-        hasCheckConstraints = constraints.nonEmpty,
-        cdfDeclared = declared("change_data_feed"),
-        appendOnlyDeclared = appendOnlyDeclared))
-  }
-
-  /** Test seam: invoked once just before a commit's first attempt (inside
-    * [[commitRewrite]], which every commit passes through), so specs can
-    * deterministically interleave a foreign commit into the
-    * snapshot->publish window. No-op in production. */
-  private[tables] var onBeforeRewriteCommit: () => Unit = () => ()
-
-  /** The one commit funnel: builds, stamps ([[stampFeatures]]), publishes
-    * ([[writeCommit]]), retries and checkpoints EVERY commit, with
-    * Delta-style LOGICAL conflict detection.
-    *
-    * A commit's file sets were computed against the snapshot at
-    * `baseVersion`, so it targets EXACTLY `baseVersion + 1` — never a
-    * re-read `version + 1`, which would silently publish over an
-    * interleaved writer (lost update: our `remove` list wouldn't cover
-    * its files, leaving both its rows and our merged output live). When
-    * another commit owns that version, the interleaved commits are
-    * examined instead of failing outright:
-    *
-    *  - one REMOVED a file this txn read -> real conflict, fail loudly
-    *    (our rewrite was computed from files that no longer exist);
-    *  - one ADDED files that `mayOverlap` says can hold rows in this
-    *    txn's scope (same buckets for a keyed upsert, stats-compatible
-    *    with the predicate for delete/update, every row for overwrite,
-    *    restore and convert) -> real conflict (our scan missed rows the
-    *    txn semantics must cover);
-    *  - otherwise the writes are DISJOINT (different buckets, different
-    *    key ranges) and the commit is still valid verbatim: adopt the
-    *    new base and retry. Two CDC writers upserting different buckets
-    *    of a 100 TB table both land without manual retry. Appends and
-    *    metadata commits read no file and pass `mayOverlap = _ => false`,
-    *    so they commute with every interleaved writer.
-    *
-    * `schemaJson` is re-evaluated per attempt — an interleaved append may
-    * have widened the log schema, and no commit may narrow it (metadata
-    * commits re-read and re-transform the current schema there). A lost
-    * claim (`concurrent commit` from [[writeCommit]]) retries up to 20
-    * times with a min(250 ms, 20 ms x attempt) backoff; the give-up error
-    * carries the last loser's message. */
-  private def commitRewrite(action: String, baseVersion: Long,
-      add: Seq[String], remove: Seq[String],
-      mayOverlap: Commit => Boolean,
-      schemaJson: () => String,
-      metrics: Map[String, String],
-      stats: Map[String, FileStats] = Map.empty,
-      changes: Option[Seq[String]] = None,
-      dvs: Map[String, String] = Map.empty,
-      dataChange: Boolean = true,
-      readAlso: Set[String] = Set.empty): Commit = {
-    // the read set is every file whose CONTENT this txn's outputs were
-    // computed from: the files it removes AND the files it re-binds a
-    // deletion vector onto (their surviving rows were scanned too) —
-    // plus `readAlso` for whole-state ops (restore reads every current
-    // AND target file, including ones its commit doesn't move)
-    val readSet = (remove ++ dvs.keys).toSet ++ readAlso
-    onBeforeRewriteCommit()
-    onBeforeRewriteCommit = () => ()
-    var base = baseVersion
-    var attempts = 0
-    var lost: IllegalStateException = null
-    while (attempts < 20) {
-      val now = version
-      if (now > base) {
-        val interleaved = commitsInRange(base, now)
-        interleaved.find(c =>
-          c.remove.exists(readSet) ||
-            // an interleaved DV rebind on a file we read changes the rows
-            // our scan saw — same severity as a rewrite of that file
-            c.dvs.getOrElse(Map.empty).keys.exists(readSet) ||
-            (c.add.nonEmpty && mayOverlap(c)))
-          .foreach { c =>
-            val why =
-              if (c.remove.exists(readSet)) "rewrote file(s) this transaction read"
-              else if (c.dvs.getOrElse(Map.empty).keys.exists(readSet))
-                "re-bound deletion vector(s) on file(s) this transaction read"
-              else "added file(s) that may hold rows in this transaction's scope"
-            throw new IllegalStateException(
-              s"concurrent ${c.action} commit v${c.version} conflicts with this " +
-                s"$action on $path: it $why — re-run against the new table state")
-          }
-        base = now // disjoint writers: the commit is still valid verbatim
-      } else {
-        try {
-          val c = stampFeatures(Commit(base + 1, action, dataChange,
-            System.currentTimeMillis(), add, remove, schemaJson(), metrics,
-            if (stats.isEmpty) None else Some(stats), changes,
-            if (dvs.isEmpty) None else Some(dvs)))
-          writeCommit(c)
-          maybeWriteCheckpoint(c.version)
-          return c
-        } catch {
-          case e: IllegalStateException if e.getMessage.contains("concurrent commit") =>
-            lost = e
-            attempts += 1 // loop re-reads the log and validates the winner
-            // linear backoff, capped: the winner needs time to publish its
-            // version file, and the ~3.5 s budget must survive a LOADED
-            // machine pausing the claim holder (N writers burning their
-            // budgets on one stalled winner was an observed flake at 1 s)
-            Thread.sleep(math.min(250L, 20L * attempts))
-        }
-      }
-    }
-    throw new IllegalStateException(s"$action on $path gave up after $attempts " +
-      s"contended commit attempts: ${lost.getMessage}", lost)
+    moved
   }
 
   // ------------------------------------------------------ change data feed
@@ -1635,14 +662,8 @@ final class GraftTable private (
     val stagingId = UUID.randomUUID().toString
     val stagingDir = s"$path/$changesDir/.stage-$stagingId"
     df.write.mode("overwrite").parquet(stagingDir)
-    val names = FsUtils.dataFiles(spark, stagingDir).map(_.getPath).map { p =>
-      val name = s"$changesDir/change-$stagingId-${p.getName.stripPrefix("part-")}"
-      if (!fs.rename(p, new Path(path, name)))
-        throw new IllegalStateException(s"failed to move change file $p into $path")
-      name
-    }
-    fs.delete(new Path(stagingDir), true)
-    names
+    moveStaged(stagingDir)(st =>
+      s"$changesDir/change-$stagingId-${st.getPath.getName.stripPrefix("part-")}").map(_._2)
   }
 
   private[tables] def tagged(df: DataFrame, changeType: String): DataFrame =
@@ -2188,18 +1209,12 @@ final class GraftTable private (
     * listing, not a footer). */
   def convert(collectStats: Boolean = true): Commit = {
     require(version == 0, s"$path is already a graft table (at v$version)")
-    val root = fs.makeQualified(new Path(path))
-    val listed = FsUtils.dataFiles(spark, path)
+    val listedRel = dataFilesOnDisk()
+    val listed = listedRel.map(_._1)
     require(listed.nonEmpty, s"nothing to convert: no data files under $path")
     require(listed.forall(_.getPath.getName.endsWith(".parquet")),
       s"cannot convert $path: non-parquet data files present")
-    val rootPrefix = root.toUri.getPath.stripSuffix("/") + "/"
-    def rel(st: org.apache.hadoop.fs.FileStatus): String = {
-      val p = fs.makeQualified(st.getPath).toUri.getPath
-      require(p.startsWith(rootPrefix), s"internal: $p not under $root")
-      p.stripPrefix(rootPrefix)
-    }
-    val rels = listed.map(rel)
+    val rels = listedRel.map(_._2)
     // nesting must be hive-style: every dir level `k=v`, and one
     // consistent key sequence across the whole tree (Spark's own
     // partition-discovery invariant)
@@ -2226,7 +1241,7 @@ final class GraftTable private (
       s"internal: partition column '$k' missing from inferred schema"))
     val partTypes: Map[String, org.apache.spark.sql.types.DataType] =
       partKeys.map(k => k -> df.schema(k).dataType).toMap
-    val sizes = listed.map(st => rel(st) -> st.getLen).toMap
+    val sizes = listedRel.map { case (st, r) => r -> st.getLen }.toMap
     // dir-derived partition values as per-file stats: min = max = value,
     // nulls = 0 (a dir value holds for EVERY row of the file). Stored in
     // the stats writer's string conventions so StatsPruning compares them
@@ -2252,7 +1267,7 @@ final class GraftTable private (
     val dataStats =
       if (collectStats && effectiveSettings.collectFileStats)
         footerStats(listed, df.schema.fields.filter(f =>
-          isStatType(f.dataType) && !partKeys.contains(f.name)).toSeq, rel)
+          isStatType(f.dataType) && !partKeys.contains(f.name)).toSeq, listedRel.toMap)
       else Map.empty[String, FileStats]
     val stats = rels.flatMap { r =>
       val ps = partStats(r)
@@ -2593,6 +1608,19 @@ final class GraftTable private (
       mayOverlap = _ => false, dataChange = false)
   }
 
+  /** Every data file on disk with its table-relative name, the form log
+    * names take: a partitioned-tree convert records `k=v/part-...`, so a
+    * listing matched against the log by base name would misread every
+    * adopted file (as missing, or as an orphan to delete). */
+  private def dataFilesOnDisk(): Seq[(org.apache.hadoop.fs.FileStatus, String)] = {
+    val root = fs.makeQualified(new Path(path)).toUri.getPath.stripSuffix("/") + "/"
+    FsUtils.dataFiles(spark, path).map { st =>
+      val p = fs.makeQualified(st.getPath).toUri.getPath
+      require(p.startsWith(root), s"internal: $p not under $root")
+      st -> p.stripPrefix(root)
+    }
+  }
+
   /** Delta's FSCK REPAIR TABLE: drop log references to live data files
     * that no longer exist on disk (manual deletion, storage loss, a
     * partially-vacuumed restore source) so scans stop failing on ghosts.
@@ -2610,41 +1638,11 @@ final class GraftTable private (
     * names; `dryRun=true` (the default) only reports them. */
   def repair(dryRun: Boolean = true): Seq[String] = {
     val snap = snapshot()
-    // relativize like vacuum: live names are table-relative paths (a
-    // partitioned-tree convert records `k=v/part-...`), so matching on
-    // base names would misread every adopted file as missing
-    val qualifiedRoot = fs.makeQualified(new Path(path)).toUri.getPath
-      .stripSuffix("/") + "/"
-    val onDisk = FsUtils.dataFiles(spark, path)
-      .map(st => fs.makeQualified(st.getPath).toUri.getPath
-        .stripPrefix(qualifiedRoot)).toSet
+    val onDisk = dataFilesOnDisk().map(_._2).toSet
     val missing = snap.live.filterNot(onDisk)
     // a CRASHED writer's leftovers in the log dir would otherwise live
-    // forever: its commit CLAIM blocks that version (the LogStore
-    // contract says claims must be operator-recoverable), and its
-    // write-temp files (.tmp — commit/checkpoint bodies that never got
-    // renamed) are invisible to every reader. Both are held for
-    // milliseconds in healthy writes, so age past 10 minutes is
-    // decisively stale — FSCK is the operator tool that clears them
-    // staleness threshold = the SAME lease TTL writeCommit's recovery
-    // honors (spark.graft.logStore.claimTtlMs): two sources of truth for
-    // one protocol constant would let repair clear a claim the configured
-    // lease still considers live (TTL <= 0 disables lease-breaking, so
-    // repair falls back to the default window rather than never clearing)
-    val ttlMs = {
-      val configured = spark.conf.get(LogStore.ClaimTtlKey,
-        LogStore.DefaultClaimTtlMs.toString).toLong
-      if (configured > 0) configured else LogStore.DefaultClaimTtlMs
-    }
-    val staleClaims =
-      if (!fs.exists(new Path(logDir))) Seq.empty[Path]
-      else fs.listStatus(new Path(logDir)).toSeq
-        .filter { st =>
-          val n = st.getPath.getName
-          (n.endsWith(".claim") || (n.startsWith(".") && n.endsWith(".tmp"))) &&
-            st.getModificationTime < System.currentTimeMillis() - ttlMs
-        }
-        .map(_.getPath)
+    // forever — FSCK is the operator tool that clears them
+    val staleClaims = staleLogLeftovers()
     val report = missing ++ staleClaims.map(p => s"_graft_log/${p.getName}")
     if (report.isEmpty || dryRun) return report
     staleClaims.foreach(p => fs.delete(p, false))
@@ -2743,7 +1741,6 @@ final class GraftTable private (
     * generation. */
   def writeManifest(purgeFirst: Boolean = false): Seq[String] = {
     val manifestDir = new Path(path, "_symlink_format_manifest")
-    fs.mkdirs(manifestDir)
     if (purgeFirst) purgeDeletionVectors()
     val snap = snapshot()
     // a manifest reader scans raw parquet and cannot apply bitmaps — a
@@ -2756,16 +1753,8 @@ final class GraftTable private (
           "call writeManifest(purgeFirst = true) (or run REORG TABLE ... " +
           "APPLY (PURGE) / optimize() first)")
     val live = snap.live.map(f => fs.makeQualified(new Path(path, f)).toString)
-    val tmp = new Path(manifestDir, s".manifest.${UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(live.map(_ + "\n").mkString.getBytes("UTF-8"))
-    finally out.close()
-    val dst = new Path(manifestDir, "manifest")
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(s"failed to publish manifest at $dst")
-    }
+    FsUtils.replaceFile(spark, new Path(manifestDir, "manifest"),
+      live.map(_ + "\n").mkString.getBytes("UTF-8"))
     live
   }
 
@@ -2782,7 +1771,7 @@ final class GraftTable private (
     val logged = listLog()._1
     require(logged.nonEmpty, s"table does not exist: $path")
     lazy val listed: Map[String, Long] =
-      FsUtils.dataFiles(spark, path).map(st => st.getPath.getName -> st.getLen).toMap
+      dataFilesOnDisk().map { case (st, rel) => rel -> st.getLen }.toMap
     val bytes = snap.live.map(f =>
       snap.stats.get(f).flatMap(_.bytes).orElse(listed.get(f)).getOrElse(0L)).sum
     val spec = bucketSpec
@@ -2873,15 +1862,7 @@ final class GraftTable private (
     // IN-FLIGHT writer's staged-but-uncommitted files (same contract as
     // Delta: don't vacuum with retention below your longest write).
     val referencedData = cs.flatMap(c => c.add ++ c.remove).toSet
-    // commit names are TABLE-RELATIVE paths (a partitioned-tree convert
-    // records `k=v/part-...`), so the listing must relativize the same
-    // way — matching on base name alone would misread every adopted
-    // partition file as an orphan and delete live data
-    val qualifiedRoot = fs.makeQualified(new Path(path)).toUri.getPath
-      .stripSuffix("/") + "/"
-    val dataOrphans = FsUtils.dataFiles(spark, path)
-      .map(st => (st, fs.makeQualified(st.getPath).toUri.getPath
-        .stripPrefix(qualifiedRoot)))
+    val dataOrphans = dataFilesOnDisk()
       .filter { case (st, rel) =>
         !referencedData(rel) && st.getModificationTime < cutoff
       }
@@ -2939,67 +1920,6 @@ final class GraftTable private (
     all
   }
 
-  /** Trim the COMMIT LOG: delete commit files strictly below the newest
-    * checkpoint minus `retainVersions` (the HORIZON), plus the change-data
-    * files those commits recorded — the graft twin of Delta's
-    * `logRetentionDuration`, counted in versions (deterministic, and what
-    * actually bounds the metadata: a year-long ingest's ~100k commit files
-    * make the single log `listStatus` itself the bottleneck).
-    *
-    * Contract:
-    *  - CURRENT reads and resumed streaming tails are untouched — replay
-    *    starts at the newest checkpoint, and everything at or above
-    *    `horizon` survives;
-    *  - PER-COMMIT consumers (CDF, streaming tails, `changesSince`) keep
-    *    every start point at or above `horizon - 1`; SNAPSHOT time travel
-    *    keeps every version at or above the oldest SURVIVING checkpoint
-    *    (reconstructing an uncheckpointed version needs the dense commit
-    *    prefix, which is exactly what was trimmed). Anything below fails
-    *    LOUDLY (the [[requireLogSince]] / [[snapshot]] guards) — trimmed
-    *    history errors, it never silently lies;
-    *  - REFUSES to trim while a doomed commit's removed data files still
-    *    exist on disk: those files are only discoverable through the log
-    *    ([[vacuum]]'s accounting), so trimming first would leak them
-    *    forever. Run `vacuum()` past its retention first, then this.
-    *
-    * No-op (returns empty) until a checkpoint exists — the checkpoint IS
-    * what replaces the trimmed prefix. Returns the deleted commit file
-    * names. */
-  def vacuumLog(retainVersions: Int): Seq[String] = {
-    require(retainVersions >= 0, "retainVersions must be >= 0")
-    val (commitFiles, ckptFiles) = listLog()
-    val ckptV = ckptFiles.lastOption.map(versionOf).getOrElse(return Seq.empty)
-    val horizon = ckptV - retainVersions
-    val doomed = commitFiles.filter(versionOf(_) < horizon)
-    if (doomed.isEmpty) return Seq.empty
-    val snapNow = snapshot()
-    val live = snapNow.live.toSet
-    val parsed = doomed.map(parseCommit)
-    val liveDvs = snapNow.dvFor.values.toSet
-    val stranded = (parsed.flatMap(_.remove).distinct.filterNot(live) ++
-      // superseded DV sidecars referenced only by pre-horizon commits are
-      // equally log-discoverable-only — trimming first would leak them
-      parsed.flatMap(_.dvs.getOrElse(Map.empty).values).distinct
-        .filter(_ != DeletionVectors.Cleared).filterNot(liveDvs))
-      .filter(f => fs.exists(new Path(path, f)))
-    if (stranded.nonEmpty)
-      throw new IllegalStateException(
-        s"cannot trim the log of $path: ${stranded.size} file(s) referenced only " +
-          s"by pre-horizon commits still exist (e.g. ${stranded.take(3).mkString(", ")}) " +
-          "and would be orphaned forever — run vacuum() past its retention first")
-    // CDF below the horizon dies with its commits: the names recorded in
-    // the doomed commits would be unreadable afterwards anyway, and the
-    // readChanges guard already fails the range loudly
-    parsed.flatMap(_.changes.getOrElse(Seq.empty)).distinct
-      .foreach(f => fs.delete(new Path(path, f), false))
-    // superseded checkpoints below the horizon can no longer serve a
-    // complete replay for any version the guards allow — drop them too
-    ckptFiles.filter(versionOf(_) < horizon).foreach(p => fs.delete(p, false))
-    val names = doomed.map(_.getName)
-    doomed.foreach(p => fs.delete(p, false))
-    invalidateListing()
-    names
-  }
 }
 
 object GraftTable {

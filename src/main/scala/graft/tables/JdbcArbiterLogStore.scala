@@ -20,7 +20,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * involved. The lease columns make crashed-writer recovery observable:
   * `claimed_at_ms` is the claim clock ([[claimAgeMs]]) and `token` the
   * claim identity ([[claimWitness]]/[[stillHeld]]), so the inline
-  * TTL-break/re-verify protocol in [[GraftTable.writeCommit]] works
+  * TTL-break/re-verify protocol in [[GraftLog.writeCommit]] works
   * unchanged — and [[breakClaim]]'s conditional DELETE (`WHERE token = ?`)
   * is witness-scoped in SQL itself, so racing breakers cannot delete each
   * other's fresh re-claims.

@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * DynamoDB conditional write, Delta's S3DynamoDBLogStore) keyed by
   * `(logDir, name)`. Everything else in the protocol (write-temp,
   * rename-to-publish, existence re-check under the claim, loser-retries)
-  * is storage-agnostic and stays in [[GraftTable.writeCommit]].
+  * is storage-agnostic and stays in [[GraftLog.writeCommit]].
   *
   * CONTRACT (what any implementation must guarantee):
   *  - `tryClaim(logDir, name)` returns true for AT MOST ONE concurrent
@@ -28,7 +28,7 @@ import org.apache.spark.sql.SparkSession
   *    a LEASE — [[claimAgeMs]] exposes how long the outstanding claim has
   *    been held, [[breakClaim]] clears one believed expired, and
   *    [[stillHeld]] lets the winner re-verify its own claim is still in
-  *    force immediately before publishing. [[GraftTable.writeCommit]]
+  *    force immediately before publishing. [[GraftLog.writeCommit]]
   *    composes these: a contender that finds the claim older than
   *    `spark.graft.logStore.claimTtlMs` breaks it and re-claims (no FSCK
   *    needed), and every winner re-verifies before its publish rename so

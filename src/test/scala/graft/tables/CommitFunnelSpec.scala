@@ -66,6 +66,7 @@ class CommitFunnelSpec extends SparkSpecBase {
     val adopted = fresh.changesByVersion(0).flatMap(_._2)
     assert(adopted.nonEmpty && adopted.distinct === adopted)
     assert(adopted.size === fresh.liveFiles().size)
+    assert(adopted.toSet === fresh.liveFiles().toSet)
     assert(fresh.read().count() === 3)
   }
 

@@ -138,6 +138,17 @@ class TablePropertiesSpec extends SparkSpecBase {
     val other = GraftTable(spark, p)(GraftSettings.default)
     other.setProperties(Map("owner" -> "other-team"))
     assert(t.tableProperties === Map("owner" -> "other-team"))
+    // the constraints sidecar rides the same version-keyed cache
+    t.addConstraint("pos", "id > 0")
+    assert(t.constraints === Map("pos" -> "id > 0"))
+    val constraintsFile =
+      new org.apache.hadoop.fs.Path(s"${t.path}/_graft_log/_constraints.json")
+    assert(fs.exists(constraintsFile))
+    fs.delete(constraintsFile, false)
+    assert(t.constraints === Map("pos" -> "id > 0"),
+      "version unchanged -> the cached constraints must serve without re-reading")
+    t.append(Seq((3, "c")).toDF("id", "v"))
+    assert(t.constraints === Map.empty)
   }
 
   test("compact_target_bytes property scopes OPTIMIZE's bin-packing") {
